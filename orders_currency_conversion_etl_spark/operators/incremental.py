@@ -14,10 +14,19 @@ without any UPDATE to the source. In streaming mode the same contract
 comes from checkpointed offsets (streaming/events_stream.py).
 
 At 100 TB: the anti-join shuffles both sides on the key — unavoidable
-for exact set difference — but AQE handles skew, and when the sink is
-small relative to source (the steady-state backlog case) Catalyst
-broadcasts it and the plan is again shuffle-free. If only recent data
-can be unprocessed, pass ``watermark`` to prune the sink scan first.
+for exact set difference. Catalyst plans a sort-merge join, but an
+anti-join needs existence, not order: once the shuffle has run, AQE
+re-plans it as a shuffled hash join (``LeftAnti, BuildRight``)
+whenever every post-shuffle partition is at most
+``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold`` (64 MB,
+session.py). Each task then builds a hash set over its slice of the
+sink keys and probes it with its slice of the source, so the sink's
+keys are never sorted; a sink partition larger than the threshold keeps
+the sort-merge plan, which can spill. AQE also splits skewed source
+partitions, and when the sink is small relative to source (the
+steady-state backlog case) Catalyst broadcasts it and the plan is
+shuffle-free. If only recent data can be unprocessed, pass
+``watermark`` to prune the sink scan first.
 """
 
 from __future__ import annotations
@@ -68,9 +77,15 @@ def unprocessed_at_scale(
     processed-id set to every executor. The SHUFFLE_HASH hint forces a
     shuffled hash anti-join instead: both sides partition on the key,
     each task builds a hash set over only its sink slice — no
-    broadcast, no sort (anti-join needs existence, not order, so
-    shuffle-hash beats sort-merge when the build side fits per-task
-    memory; AQE still falls back to SMJ on skewed/oversized builds).
+    broadcast, no sort. The hint is binding: AQE keeps the shuffled
+    hash join even when a sink partition exceeds
+    ``maxShuffledHashJoinLocalMapThreshold`` and never falls back to
+    sort-merge. On a skewed key it splits only the streamed source
+    side (``ShuffledHashJoin(skew=true)``); a left anti-join cannot
+    split its build side, so every sink partition must fit in task
+    memory. Size ``spark.sql.shuffle.partitions`` for that, or use
+    :func:`unprocessed`, where AQE chooses the join from the measured
+    partition sizes.
 
     Steady-state zero-shuffle layout: write BOTH source and sink
     bucketed by ``key`` into the warehouse (``.write.bucketBy(n, key)

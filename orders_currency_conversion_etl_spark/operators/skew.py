@@ -202,7 +202,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     across 48 (key, salt) partitions instead of 3). The oracle is the
     unsalted join — proving the rewrite is semantics-preserving."""
     orders = catalog.load_table(spark, sf_dir, "orders")
-    dim = spark.createDataFrame(list(STATUS_DIM), "o_orderstatus string, status_desc string")
+    dim = catalog.local_table(spark, STATUS_DIM, "o_orderstatus string, status_desc string")
     joined = salted_join(orders, dim, key="o_orderstatus", salt_source="o_orderkey")
     return joined.groupBy("o_orderstatus", "status_desc").agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -487,8 +487,8 @@ def join_asof_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     rh = catalog.session_memo(
         spark,
         ("__rates_history__", "default", "default"),
-        lambda: spark.createDataFrame(
-            rates_history_rows(), schema="currency string, rate double, rate_date timestamp"
+        lambda: catalog.local_table(
+            spark, rates_history_rows(), "currency string, rate double, rate_date timestamp"
         ),
     )
     # r18 opt: the rates history is 25 currencies x 8 dates — a
@@ -801,8 +801,8 @@ def join_asof_forward_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     rh = catalog.session_memo(
         spark,
         ("__rates_history__", "default", "default"),
-        lambda: spark.createDataFrame(
-            rates_history_rows(), schema="currency string, rate double, rate_date timestamp"
+        lambda: catalog.local_table(
+            spark, rates_history_rows(), "currency string, rate double, rate_date timestamp"
         ),
     )
     joined = asof_join_broadcast(

@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
 
@@ -49,6 +50,31 @@ def session_memo(spark: SparkSession, key: tuple[str, str, str], build) -> DataF
         df = build()
         _PLAN_MEMO[full] = df
     return df
+
+
+def local_table(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """A small static table built in the JVM as a ``LocalRelation``.
+
+    ``createDataFrame(list)`` would make a pickled Python RDD (``Scan
+    ExistingRDD``), so every scan or broadcast of it starts Python
+    workers to decode a few rows. An Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` instead (``LocalTableScan``, no Python worker).
+    The Arrow schema is derived from ``schema`` (a ``StructType`` or a
+    DDL string), so the result carries exactly that schema, nullability
+    included; doubles pass through bit for bit, a datetime in a date
+    column keeps its date, and naive datetimes are read as UTC, the
+    session zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

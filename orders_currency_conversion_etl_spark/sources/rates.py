@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from .catalog import local_table, session_memo
 
 # Deterministic EUR-base fixture (units of currency per 1 EUR), stands in
 # for the daily API payload. EUR is exactly 1.0 by construction, matching
@@ -77,13 +78,16 @@ def rates_df(
     rates: dict[str, float] | None = None,
     rate_date: dt.date | None = None,
 ) -> DataFrame:
-    """Materialize the EUR-base rates map as a broadcastable DataFrame."""
-    if rates is None and rate_date is None:
-        # The default (static) rates table: memoize the 25-row local
-        # relation per session — createDataFrame is pure driver work
-        # repeated on every flagship-family invocation (r18 opt).
-        from .catalog import session_memo
+    """Materialize the EUR-base rates map as a broadcastable DataFrame.
 
+    The table is a JVM ``LocalRelation`` (:func:`catalog.local_table`):
+    scanning or broadcasting it starts no Python worker, which every
+    conversion pays for otherwise, each streaming micro-batch included.
+    """
+    if rates is None and rate_date is None:
+        # The default (static) rates table: memoize the 20-row local
+        # relation per session, so the Arrow conversion and the
+        # analysis run once, not on every flagship-family invocation.
         return session_memo(
             spark,
             ("__rates_df__", "default", "default"),
@@ -96,7 +100,7 @@ def _rates_df_uncached(
     spark: SparkSession, rates: dict[str, float], rate_date: dt.date | None
 ) -> DataFrame:
     rows = [(cur, float(rate), rate_date) for cur, rate in sorted(rates.items())]
-    return spark.createDataFrame(rows, schema=schemas.EXCHANGE_RATES)
+    return local_table(spark, rows, schemas.EXCHANGE_RATES)
 
 
 def currency_from_orderkey(orderkey_col):

@@ -541,6 +541,35 @@ def test_incremental_at_scale_never_broadcasts_sink(spark):
     assert plan.count("ShuffledHashJoin") == 1  # bypass branch is join-free
 
 
+def test_unprocessed_anti_join_is_hashed_not_sorted(spark):
+    """With broadcast off, Catalyst plans the J3 anti-join as a
+    sort-merge join; once the shuffles have run, AQE re-plans it as a
+    shuffled hash join (session.py's
+    maxShuffledHashJoinLocalMapThreshold), so the sink keys are never
+    sorted. The rows are the plain set difference."""
+    from orders_currency_conversion_etl_spark.operators.incremental import unprocessed
+
+    orders = catalog.load_table(spark, SF, "orders").select(
+        F.col("o_orderkey").cast("string").alias("order_id"), "o_totalprice"
+    )
+    sink = orders.filter(F.col("o_orderkey") % 10 >= 3).select("order_id")
+    sink_ids = {r.order_id for r in sink.collect()}
+    expected = sorted(tuple(r) for r in orders.collect() if r.order_id not in sink_ids)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = unprocessed(orders, sink, key="order_id")
+        got = sorted(tuple(r) for r in out.collect())
+        plan = _plan(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ShuffledHashJoin" in final and "LeftAnti" in final, final
+    assert "SortMergeJoin" not in final, final
+    assert got == expected and expected and sink_ids
+
+
 def test_bucketed_anti_join_steady_state_has_no_shuffle(spark):
     """The J3 100 TB steady-state claim, demonstrated instead of argued
     (operators/incremental.py docstring: source and sink both bucketed
