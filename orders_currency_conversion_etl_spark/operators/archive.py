@@ -739,10 +739,8 @@ def archive_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multi-member gzip (RFC 1952) — the transport wrapping of WARC in the
 # wild: Common Crawl writes ONE gzip member PER WARC RECORD so readers
 # can seek to a member boundary (from a .cdx index) and inflate a
-# single record. Library surface this round (the r13 rotation window
-# is full at 50); registration with an exact oracle is queued for the
-# next free rotation slot — r15, since the r14 window is exactly
-# filled by 12 anchors + the 38-name r9 staleness cohort.
+# single record. ``archive_gzip_members`` checks the walk against an
+# exact oracle.
 # Honesty about scale: unlike ZIP (central directory) and TAR
 # (size-field seeks), gzip member boundaries are only discoverable by
 # INFLATING — the walk is O(payload), which is exactly why production
@@ -844,6 +842,68 @@ def build_gzip_members(blocks: "list[tuple[str | None, bytes]]") -> bytes:
             gf.write(data)
         out += buf.getvalue()
     return bytes(out)
+
+
+GZIP_MEMBERS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("members", T.IntegerType()),
+        T.StructField("total_bytes", T.LongType()),
+        T.StructField("named_members", T.IntegerType()),
+        T.StructField("first_name", T.StringType()),
+    ]
+)
+
+# One FNAME'd manifest member + one anonymous member per 64-byte chunk;
+# uncompressed totals recompute from strlen (compressed sizes are
+# deliberately NOT reported — deflate output is not SQL-derivable).
+_GZIP_MEMBERS_ORACLE = """
+SELECT doc_id,
+       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS members,
+       CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
+           AS total_bytes,
+       CAST(1 AS INT) AS named_members,
+       'manifest.txt' AS first_name
+FROM documents
+"""
+
+
+@query("archive_gzip_members", _GZIP_MEMBERS_ORACLE)
+def archive_gzip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gzip multi-member enumeration, oracled: per document, pack the
+    text into a deterministic record-per-member stream (one FNAME'd
+    manifest + anonymous 64-byte chunk members) and walk it back
+    through :func:`gzip_members` — header-field parsing, per-member
+    CRC32+ISIZE trailer verification and the member-boundary inflate
+    are all under the value hash. One mapInPandas stage, no shuffle at
+    any scale."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                raw = text.encode("utf-8")
+                blocks = [("manifest.txt", str(int(doc_id)).encode())] + [
+                    (None, raw[i * 64 : (i + 1) * 64])
+                    for i in range((len(raw) + 63) // 64)
+                ]
+                listed = gzip_members(build_gzip_members(blocks))
+                rows.append(
+                    (
+                        doc_id,
+                        len(listed),
+                        sum(m["uncompressed_size"] for m in listed),
+                        sum(1 for m in listed if m["name"] is not None),
+                        listed[0]["name"],
+                    )
+                )
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in GZIP_MEMBERS_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_roundtrip, schema=GZIP_MEMBERS_SCHEMA)
 
 
 def warc_gz_records(payload: bytes) -> list[dict]:
@@ -1076,6 +1136,151 @@ def fetch_warc_gz_records_df(segments: DataFrame, index: DataFrame) -> DataFrame
             )
 
     return sliced.mapInPandas(_fetch, schema=WARC_GZ_FETCH_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# The two side-car queries share one fixture: per document, a
+# record-per-member ``.warc.gz`` segment holding one warcinfo member
+# (block = the doc_id as text) and one response member per 64-byte
+# block of the utf-8 text, URI ``https://corpus.local/<doc_id>/<i>``.
+# --------------------------------------------------------------------------
+
+
+def _doc_warc_gz_segment(doc_id: int, text: str) -> bytes:
+    raw = text.encode("utf-8")
+    blocks = [(None, build_warc([("warcinfo", None, str(doc_id).encode())]))] + [
+        (
+            None,
+            build_warc(
+                [
+                    (
+                        "response",
+                        f"https://corpus.local/{doc_id}/{i}",
+                        raw[i * 64 : (i + 1) * 64],
+                    )
+                ]
+            ),
+        )
+        for i in range((len(raw) + 63) // 64)
+    ]
+    return build_gzip_members(blocks)
+
+
+WARC_GZ_IDX_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("records", T.IntegerType()),
+        T.StructField("members", T.IntegerType()),
+        T.StructField("responses", T.IntegerType()),
+        T.StructField("total_block_bytes", T.LongType()),
+        T.StructField("last_uri", T.StringType()),
+    ]
+)
+
+_WARC_GZ_IDX_ORACLE = """
+SELECT doc_id,
+       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS records,
+       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS members,
+       CAST((strlen(text) + 63) // 64 AS INT) AS responses,
+       CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
+           AS total_block_bytes,
+       CASE WHEN strlen(text) = 0 THEN NULL
+            ELSE 'https://corpus.local/' || CAST(doc_id AS VARCHAR) || '/'
+                 || CAST((strlen(text) - 1) // 64 AS VARCHAR)
+       END AS last_uri
+FROM documents
+"""
+
+
+@query("archive_warc_gz_index", _WARC_GZ_IDX_ORACLE)
+def archive_warc_gz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The side-car index build, oracled: per document, write the
+    fixture segment and enumerate it ONCE through
+    :func:`warc_gz_index` — gzip member walk, WARC record parse and the
+    member<->record pairing all under the value hash (compressed
+    offsets/sizes are reported to callers but not compared: deflate
+    byte counts are not SQL-derivable)."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                idx = warc_gz_index(_doc_warc_gz_segment(int(doc_id), text))
+                resp = [e for e in idx if e["warc_type"] == "response"]
+                rows.append(
+                    (
+                        doc_id,
+                        len(idx),
+                        1 + max(e["member"] for e in idx),
+                        len(resp),
+                        sum(e["content_length"] for e in idx),
+                        resp[-1]["target_uri"] if resp else None,
+                    )
+                )
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in WARC_GZ_IDX_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_index, schema=WARC_GZ_IDX_SCHEMA)
+
+
+# Member 0 = warcinfo (seq 0), member i+1 = response over text block i
+# (seq i+1, 64-byte blocks). The fetch stripe is seq % 3 == 0 among
+# responses, i.e. seqs {3, 6, ...} = blocks {2, 5, ...}: with
+# n = ceil(len/64) blocks, that is n // 3 fetches, all 64 bytes except
+# the final block (size ((len-1) % 64) + 1) when n % 3 == 0. Docs with
+# fewer than 3 blocks fetch nothing and drop out.
+_WARC_FETCH_ORACLE = """
+WITH d AS (
+    SELECT doc_id,
+           strlen(text) AS len,
+           (strlen(text) + 63) // 64 AS n
+    FROM documents
+)
+SELECT doc_id AS segment_id,
+       CAST(n // 3 AS BIGINT) AS n_fetched,
+       CAST(64 * (n // 3)
+            - CASE WHEN n % 3 = 0 THEN 63 - ((len - 1) % 64) ELSE 0 END
+            AS BIGINT) AS bytes_fetched,
+       'https://corpus.local/' || CAST(doc_id AS VARCHAR) || '/'
+           || CAST(3 * (n // 3) - 1 AS VARCHAR) AS last_uri
+FROM d
+WHERE n >= 3
+"""
+
+
+@query("archive_warc_gz_fetch", _WARC_FETCH_ORACLE)
+def archive_warc_gz_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Random access through the side-car AS A PLAN: build the index
+    (one full pass), prune to every third response, fetch ONLY those
+    members via the JVM-substr + member-inflate path, and re-measure
+    the returned block bytes Spark-side — a fetch that returned wrong
+    or truncated blocks mismatches ``bytes_fetched``."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+
+    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (doc_id, _doc_warc_gz_segment(int(doc_id), text))
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+            ]
+            yield pd.DataFrame(rows, columns=["segment_id", "payload"])
+
+    segs = docs.select("doc_id", "text").mapInPandas(
+        _build, schema="segment_id long, payload binary"
+    )
+    index = build_warc_gz_index_df(segs, "segment_id", "payload")
+    wanted = index.where(
+        (F.col("warc_type") == "response") & (F.col("seq") % 3 == 0)
+    )
+    fetched = fetch_warc_gz_records_df(segs, wanted)
+    return fetched.groupBy("segment_id").agg(
+        F.count(F.lit(1)).alias("n_fetched"),
+        F.sum(F.octet_length("block")).alias("bytes_fetched"),
+        F.max_by("target_uri", "seq").alias("last_uri"),
+    )
 
 
 def fetch_zip_member(member_bytes: bytes, expected_usize: int) -> bytes:

@@ -28,11 +28,10 @@ from ..sources.rates import CURRENCY_ALPHABET
 WEEK_SECS = 7 * 86400
 
 
-def _uuid_like(col) -> F.Column:
-    """Deterministic UUID-format string from a unique id: md5 hex laid
-    out 8-4-4-4-12. Replaces ``uuid.uuid4()`` (reference:
-    dags/order_generator_dag.py:66) for reproducible golden tests."""
-    h = F.md5(col.cast("string"))
+def _uuid_like(h: Column) -> Column:
+    """UUID-format string from an md5 hex column, laid out 8-4-4-4-12.
+    Replaces ``uuid.uuid4()`` (reference: dags/order_generator_dag.py:66)
+    for reproducible golden tests."""
     return F.concat_ws(
         "-",
         F.substring(h, 1, 8),
@@ -63,13 +62,16 @@ def generate_orders(
     base = spark.range(n)  # partitioned id space, no driver materialization
     h1 = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string")))
     h2 = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string"), F.lit("b")))
+    # the id gets its own md5 input, so it is unique per (seed, id) and
+    # uncorrelated with the h1/h2 slices behind email, date and amount
+    hu = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string"), F.lit("u")))
     letter_idx = (_hash_slice(h1, 1) % 26 + 1).cast("int")
     digits = _hash_slice(h1, 9) % 9000 + 1000
     age_secs = _hash_slice(h1, 17) % WEEK_SECS
     cents = _hash_slice(h1, 25) % 99000 + 1000
     cur_idx = (_hash_slice(h2, 1) % len(currencies) + 1).cast("int")
     return base.select(
-        _uuid_like(F.col("id")).alias("order_id"),
+        _uuid_like(hu).alias("order_id"),
         # email f"{letter}{digits}@example.com" (reference: order_generator_dag.py:67)
         F.concat(
             F.substring(F.lit("abcdefghijklmnopqrstuvwxyz"), letter_idx, 1),
@@ -103,7 +105,7 @@ WITH ids AS (
     SELECT CAST(range AS BIGINT) AS id FROM range({n})
 ), hashed AS (
     SELECT id,
-           md5(CAST(id AS VARCHAR)) AS hu,
+           md5('{seed}' || ':' || CAST(id AS VARCHAR) || ':' || 'u') AS hu,
            md5('{seed}' || ':' || CAST(id AS VARCHAR)) AS h1,
            md5('{seed}' || ':' || CAST(id AS VARCHAR) || ':' || 'b') AS h2
     FROM ids

@@ -597,10 +597,9 @@ GROUP BY 1
 """
 
 
+@query("lake_rowgroup_stats", _LAKE_ROWGROUP_ORACLE)
 def lake_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Footer-truth check, oracled from first principles (late r13;
-    registration queued for the r15 rotation slot — the r14 window is
-    exactly filled by the due r9 staleness cohort): write documents
+    """Footer-truth check, oracled from first principles: write documents
     doc_id-sorted into a single parquet file with a FIXED 512-row row-
     group size (pyarrow writer — Spark's own writer sizes groups by
     bytes, which is non-deterministic across runs), then read the

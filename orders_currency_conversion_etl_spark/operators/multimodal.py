@@ -2694,3 +2694,375 @@ def multimodal_tiff_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return base.mapInPandas(_roundtrip, schema=TIFF_DIMS_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# Palette-codec queries: GIF LZW and palette/interlace PNG. Both share
+# one fixture and one oracle: width is a multiple of 4 and the palette
+# has exactly 4 entries whose RGB bytes are the first 12 ascii-hex chars
+# of md5(text); pixel p maps to palette[p % 4], so the decoded stream is
+# the 12-char block repeated w*h/4 times — SQL-reconstructable, making
+# the md5 prove the whole decode byte-for-byte (dims/mode alone would
+# pass on a header-only walk). Both queries are pinned DIRECTLY to the
+# pure codecs, not the PIL-preferring dispatch: they verify the codecs.
+# --------------------------------------------------------------------------
+
+PIXELS_MD5_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("mode", T.StringType()),
+        T.StructField("pixels_md5", T.StringType()),
+    ]
+)
+
+_PALETTE_PIXELS_ORACLE = """
+SELECT doc_id,
+       CAST(4 * (1 + doc_id % 6) AS INT) AS width,
+       CAST(3 + doc_id % 11 AS INT) AS height,
+       'RGB' AS mode,
+       md5(repeat(substr(md5(text), 1, 12),
+                  (4 * (1 + doc_id % 6)) * (3 + doc_id % 11) // 4))
+           AS pixels_md5
+FROM documents
+"""
+
+
+def _palette_pixels_md5(spark: SparkSession, sf_dir: str, roundtrip) -> DataFrame:
+    """Per document, ``roundtrip(doc_id, w, h, idx, pal)`` encodes the
+    palette-index stream ``idx`` with the 4-entry palette ``pal`` and
+    decodes it back to ``(w, h, mode, rgb)``; the rgb bytes are
+    reported as an md5."""
+    import hashlib
+
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select(
+        "doc_id",
+        (F.lit(4) * (F.lit(1) + F.col("doc_id") % 6)).cast("int").alias("w"),
+        (F.lit(3) + F.col("doc_id") % 11).cast("int").alias("h"),
+        F.substring(F.md5(F.col("text")), 1, 12).alias("pal12"),
+    )
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, w, h, pal12 in zip(
+                pdf["doc_id"], pdf["w"], pdf["h"], pdf["pal12"]
+            ):
+                w, h = int(w), int(h)
+                idx = bytes(p % 4 for p in range(w * h))
+                gw, gh, mode, rgb = roundtrip(
+                    doc_id, w, h, idx, pal12.encode("ascii")
+                )
+                rows.append(
+                    (doc_id, gw, gh, mode, hashlib.md5(rgb).hexdigest())
+                )
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in PIXELS_MD5_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_batches, schema=PIXELS_MD5_SCHEMA)
+
+
+@query("multimodal_gif_decode", _PALETTE_PIXELS_ORACLE)
+def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GIF pixel decode with zero native deps: a real GIF89a per
+    document — 4-color global palette, real LZW compression, odd
+    doc_ids interlaced, every third stream carrying a NETSCAPE
+    extension — decoded through :mod:`operators.gif_codec`. One
+    mapInPandas stage, no shuffle at any scale."""
+    from .gif_codec import decode_gif, encode_gif
+
+    def _roundtrip(doc_id, w, h, idx, pal):
+        gif = encode_gif(
+            w, h, idx, pal,
+            interlace=bool(doc_id % 2),
+            loop_extension=(doc_id % 3 == 0),
+        )
+        return decode_gif(gif)
+
+    return _palette_pixels_md5(spark, sf_dir, _roundtrip)
+
+
+@query("multimodal_png_palette_decode", _PALETTE_PIXELS_ORACLE)
+def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Palette/interlace PNG decode with zero native deps: a REAL
+    colortype-3 bitdepth-2 PNG per document (Adam7 on odd doc_ids,
+    cycling scanline filters when doc_id % 5 != 0) decoded through
+    :func:`decode_png` — inflate, unfilter, sub-byte unpack,
+    deinterlace and palette map all under the md5. One mapInPandas
+    stage, no shuffle at any scale."""
+
+    def _roundtrip(doc_id, w, h, idx, pal):
+        png = encode_png(
+            w, h, idx,
+            cycle_filters=(doc_id % 5 != 0),
+            colortype=3,
+            bitdepth=2,
+            palette=pal,
+            interlace=bool(doc_id % 2),
+        )
+        return decode_png(png)
+
+    return _palette_pixels_md5(spark, sf_dir, _roundtrip)
+
+
+# --------------------------------------------------------------------------
+# Container dispatch queries: one query per sniffing dispatch
+# (:func:`video_dims`, :func:`audio_info`, :func:`image_dims`). Each
+# synthesizes a different container per ``doc_id`` stripe and parses
+# it back, so every branch of the dispatch is under one value hash.
+# One mapInPandas stage over ``documents``, O(header) per row, no
+# shuffle at any scale.
+# --------------------------------------------------------------------------
+
+VIDEO_DIMS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("container", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("duration_ms", T.LongType()),
+    ]
+)
+
+# Every container stripe encodes duration_ms = 1000 * k with
+# k = 1 + strlen % 120, so one expression covers all three branches;
+# the container label is the dispatch's own report (ftyp brand / "avi"
+# / EBML DocType).
+_VIDEO_DIMS_ORACLE = """
+SELECT doc_id,
+       CASE CAST(doc_id % 3 AS INT)
+            WHEN 0 THEN 'isom'
+            WHEN 1 THEN 'avi'
+            ELSE CASE WHEN strlen(text) % 2 = 0
+                      THEN 'webm' ELSE 'matroska' END
+       END AS container,
+       CAST(1 + strlen(text) % 640 AS INT) AS width,
+       CAST(1 + (strlen(text) // 7) % 480 AS INT) AS height,
+       CAST(1000 * (1 + strlen(text) % 120) AS BIGINT) AS duration_ms
+FROM documents
+"""
+
+
+@query("multimodal_video_dims", _VIDEO_DIMS_ORACLE)
+def multimodal_video_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unified video dims through :func:`video_dims`: MP4
+    (version-0/1 mvhd+tkhd on a length stripe, largesize moov on a
+    fifth stripe, leading zero-dims audio trak), AVI (RIFF hdrl walk
+    with a JUNK sub-chunk), MKV (webm/matroska DocType, leading audio
+    TrackEntry, streamed unknown-size Segment on a third stripe)."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                n = len(text)
+                w, h, k = 1 + n % 640, 1 + (n // 7) % 480, 1 + n % 120
+                if doc_id % 3 == 0:
+                    ts = 90_000 if n % 2 else 48_000
+                    payload = encode_mp4_header(
+                        "isom", w, h, k * ts, ts,
+                        version=n % 2, large_moov=(n % 5 == 0),
+                    )
+                elif doc_id % 3 == 1:
+                    payload = encode_avi_header(w, h, 50 * k, 20_000)
+                else:
+                    payload = encode_mkv_header(
+                        "webm" if n % 2 == 0 else "matroska",
+                        w, h, 1000.0 * k,
+                        unknown_size_segment=(n % 3 == 0),
+                    )
+                container, gw, gh, dur = video_dims(payload)
+                rows.append((doc_id, container, gw, gh, dur))
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in VIDEO_DIMS_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_dims, schema=VIDEO_DIMS_SCHEMA)
+
+
+AUDIO_INFO_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("codec", T.StringType()),
+        T.StructField("channels", T.IntegerType()),
+        T.StructField("sample_rate", T.IntegerType()),
+    ]
+)
+
+# sample_rate cycles the MPEG-1 Layer-III legal set so ONE stripe
+# formula covers every container; channels alternate mono/stereo.
+_AUDIO_INFO_ORACLE = """
+SELECT doc_id,
+       CASE CAST(doc_id % 4 AS INT)
+            WHEN 0 THEN CASE CAST(strlen(text) % 3 AS INT)
+                             WHEN 0 THEN 'pcm16'
+                             WHEN 1 THEN 'float32'
+                             ELSE 'mulaw' END
+            WHEN 1 THEN CASE WHEN strlen(text) % 2 = 0
+                             THEN 'vorbis' ELSE 'opus' END
+            WHEN 2 THEN 'flac'
+            ELSE 'mp3'
+       END AS codec,
+       CAST(1 + strlen(text) % 2 AS INT) AS channels,
+       CAST(CASE CAST(strlen(text) % 3 AS INT)
+                 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000
+            END AS INT) AS sample_rate
+FROM documents
+"""
+
+
+@query("multimodal_audio_info", _AUDIO_INFO_ORACLE)
+def multimodal_audio_info(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unified audio info through :func:`audio_info`: WAV fmt-chunk
+    walk (all three supported tags), OGG Vorbis/Opus identification
+    pages, FLAC STREAMINFO bit-unpacking, MP3 frame header behind an
+    ID3v2 syncsafe skip."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _info(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                n = len(text)
+                ch = 1 + n % 2
+                rate = (44100, 48000, 32000)[n % 3]
+                if doc_id % 4 == 0:
+                    fmt = ("pcm16", "float32", "mulaw")[n % 3]
+                    payload = encode_wav(rate, [0, 1] * ch, ch, fmt)
+                elif doc_id % 4 == 1:
+                    payload = encode_ogg_id_page(
+                        "vorbis" if n % 2 == 0 else "opus", ch, rate
+                    )
+                elif doc_id % 4 == 2:
+                    payload = encode_flac_header(ch, rate)
+                else:
+                    payload = encode_mp3_header(ch, rate, id3_size=(n % 7) * 3)
+                codec, gch, grate = audio_info(payload)
+                rows.append((doc_id, codec, gch, grate))
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in AUDIO_INFO_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_info, schema=AUDIO_INFO_SCHEMA)
+
+
+IMAGE_DIMS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("mode", T.StringType()),
+    ]
+)
+
+_IMAGE_DIMS_ORACLE = """
+SELECT doc_id,
+       CAST(CASE WHEN doc_id % 4 = 1
+                 THEN CASE WHEN strlen(text) % 9 = 0
+                           THEN 256 ELSE 1 + strlen(text) % 255 END
+                 ELSE 1 + strlen(text) % 300 END AS INT) AS width,
+       CAST(CASE WHEN doc_id % 4 = 1
+                 THEN CASE WHEN strlen(text) % 9 = 0
+                           THEN 256 ELSE 1 + (strlen(text) // 3) % 255 END
+                 ELSE 1 + (strlen(text) // 7) % 200 END AS INT) AS height,
+       CASE CAST(doc_id % 4 AS INT)
+            WHEN 0 THEN CASE CAST(strlen(text) % 3 AS INT)
+                             WHEN 0 THEN '1' WHEN 1 THEN 'L' ELSE 'RGB' END
+            WHEN 1 THEN 'RGBA'
+            WHEN 2 THEN CASE CAST(strlen(text) % 3 AS INT)
+                             WHEN 0 THEN 'RGB' WHEN 1 THEN 'RGBA' ELSE 'P' END
+            ELSE 'RGB'
+       END AS mode
+FROM documents
+"""
+
+
+def _ico_bytes(w: int, h: int) -> bytes:
+    """Two-entry ICONDIR: a 1x1 thumb + the (w, h) primary — the
+    largest-entry selection and the 0-means-256 quirk both live in
+    the entry bytes (256 encodes as 0)."""
+    import struct
+
+    def entry(ew: int, eh: int) -> bytes:
+        return struct.pack(
+            "<BBBBHHII", ew % 256, eh % 256, 0, 0, 1, 32, 16, 22
+        )
+
+    return struct.pack("<HHH", 0, 1, 2) + entry(1, 1) + entry(w, h)
+
+
+def _bmp_bytes(w: int, h: int, bpp: int, topdown: bool) -> bytes:
+    """BITMAPFILEHEADER + BITMAPINFOHEADER (40), no pixel data — the
+    dims walk never reads past the header."""
+    import struct
+
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, w, -h if topdown else h, 1, bpp, 0, 0, 0, 0, 0, 0
+    )
+    file_hdr = b"BM" + struct.pack("<IHHI", 14 + 40, 0, 0, 14 + 40)
+    return file_hdr + info
+
+
+def _pnm_bytes(kind: int, w: int, h: int) -> bytes:
+    """P4/P5 header with a comment line (pnm_dims' token-scan skip
+    branch) and a placeholder pixel byte; P6 stays comment-free —
+    ``image_dims`` routes ``P6\\n`` to the STRICT ppm parser, which
+    per its contract takes the plain ``P6/W H/MAX`` layout only."""
+    comment = "" if kind == 6 else "# fixture\n"
+    return (
+        f"P{kind}\n{comment}{w} {h}\n".encode()
+        + (b"" if kind == 4 else b"255\n")
+        + b"\x00"
+    )
+
+
+@query("multimodal_image_dims", _IMAGE_DIMS_ORACLE)
+def multimodal_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Header-only dims through :func:`image_dims` for four families:
+    netpbm (comment-tolerant token scan), ICO (largest directory entry
+    + 256 quirk on a ninth stripe), BMP (info header, top-down negative
+    height on an odd stripe), HEIF/AVIF (ispe walk with a thumbnail
+    entry to skip)."""
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", "text")
+
+    def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                doc_id = int(doc_id)
+                n = len(text)
+                if doc_id % 4 == 1:
+                    if n % 9 == 0:
+                        w = h = 256
+                    else:
+                        w, h = 1 + n % 255, 1 + (n // 3) % 255
+                    payload = _ico_bytes(w, h)
+                else:
+                    w, h = 1 + n % 300, 1 + (n // 7) % 200
+                    if doc_id % 4 == 0:
+                        payload = _pnm_bytes((4, 5, 6)[n % 3], w, h)
+                    elif doc_id % 4 == 2:
+                        payload = _bmp_bytes(
+                            w, h, (24, 32, 8)[n % 3], topdown=(n % 2 == 1)
+                        )
+                    else:
+                        payload = encode_heif_header(
+                            "heic" if n % 2 == 0 else "avif",
+                            [(1, 1), (w, h)],
+                        )
+                gw, gh, mode = image_dims(payload)
+                rows.append((doc_id, gw, gh, mode))
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in IMAGE_DIMS_SCHEMA.fields]
+            )
+
+    return base.mapInPandas(_dims, schema=IMAGE_DIMS_SCHEMA)

@@ -81,9 +81,8 @@ def cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r18 opt: cohort_week as a window-min over act instead of a
     # groupBy + join back — the join form planned act's whole subtree
-    # twice (two scans + two distinct exchanges of events, visible as
-    # two FileScans in plans/r18/cohort_retention_weekly_before.txt)
-    # because the two consumers need different partitionings. The
+    # twice (two scans + two distinct exchanges of events, two
+    # FileScans in the physical plan) because the two consumers need different partitionings. The
     # window form scans events ONCE; min over (partition by user_id)
     # on date values is exactly the join's MIN(wk) — row-identical
     # (pinned by the oracle, value-exact at sf0.01/sf0.1).

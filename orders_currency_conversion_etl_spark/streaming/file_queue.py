@@ -391,13 +391,16 @@ def queue_lag_report(
     file-pruned :func:`read_queue_batch` from each partition's
     committed offset (only the lagging suffix is ever scanned — at
     100 TB a near-caught-up group reads a handful of segments, not the
-    log). The per-partition offset triple is driver-side metadata
-    (createDataFrame of a dict built from two directory listings — the
-    correct altitude); the row count is a distributed scan."""
+    log). The per-partition offset triple is driver-side metadata from
+    two directory listings, built as a JVM ``LocalRelation``; the row
+    count is a distributed scan."""
     from pyspark.sql import functions as F
 
+    from ..sources import catalog
+
     lag = queue_lag(queue_dir, checkpoint_dir)
-    lag_df = spark.createDataFrame(
+    lag_df = catalog.local_table(
+        spark,
         [
             (int(p), int(v["end"]), int(v["committed"]), int(v["lag"]))
             for p, v in sorted(lag.items())

@@ -33,9 +33,8 @@ object-store boundary; reads themselves are pyarrow over local paths).
 
 Reference parity: none — the reference's "stream" is an hourly cron
 re-run (reference: dags/order_currency_conversion_dag.py:14); this is
-EXT surface. Registration of a driver-oracled query over this source
-is queued for the r15 rotation slot (the r14 window is exactly filled
-by the due r9 staleness cohort).
+EXT surface. ``queue_source_roundtrip`` checks the writer and reader
+end to end against an exact oracle.
 """
 
 from __future__ import annotations
@@ -45,6 +44,8 @@ import os
 import re
 from typing import Iterator
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -54,6 +55,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+
+from ..plans.registry import query
+from ..sources import catalog
 
 _SEG_RE = re.compile(r"^seq=(\d+)\.parquet$")
 _PART_RE = re.compile(r"^partition=(\d+)$")
@@ -725,3 +729,47 @@ def prune_publish_markers(
             os.remove(os.path.join(d, f))
             deleted.append(f)
     return sorted(deleted)
+
+
+_QUEUE_SOURCE_ORACLE = """
+SELECT CAST(o_orderkey % 2 AS INT) AS partition,
+       COUNT(*) AS n_orders,
+       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
+           AS total_price
+FROM orders
+GROUP BY 1
+"""
+
+
+@query("queue_source_roundtrip", _QUEUE_SOURCE_ORACLE)
+def queue_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders written INTO a queue through the native
+    ``df.write.format("orders_queue")`` writer (driver-commit offset
+    assignment) and read back through the native reader (engine-
+    visible offsets, arrow record batches), then aggregated per queue
+    partition — the whole Python DataSource surface under one exact
+    oracle. Eager staging in a scratch dir (the flagship_queue_drain
+    pattern); at scale the identical plan runs against a persistent
+    broker volume."""
+    from .file_queue import _scratch_dir
+
+    register_queue_source(spark)
+    q = _scratch_dir("queue_source_rt_")
+    orders = catalog.load_table(spark, sf_dir, "orders")
+    (
+        orders.withColumn(
+            "partition", (F.col("o_orderkey") % 2).cast("int")
+        )
+        .repartition(4)
+        .write.format("orders_queue")
+        .mode("append")
+        .option("path", q)
+        .save()
+    )
+    back = spark.read.format("orders_queue").option("path", q).load()
+    return back.groupBy("partition").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("decimal(18,2)")
+        .alias("total_price"),
+    )

@@ -855,11 +855,15 @@ def test_queue_lag_report_zero_lag_partition(spark):
         sq.awaitTermination()
         # partition 1 gets one more unconsumed segment
         queue_append(_segment_df(spark, 1, 1, n=3), q, 1)
+        report = fq.queue_lag_report(spark, q, ck, SCHEMA)
         rep = {
             r["partition"]: (r["end_offset"], r["committed_offset"], r["lag"], r["rows_behind"])
-            for r in fq.queue_lag_report(spark, q, ck, SCHEMA).collect()
+            for r in report.collect()
         }
         assert rep == {0: (1, 1, 0, 0), 1: (2, 1, 1, 3)}
+        # the offset table is a LocalRelation, not a pickled Python RDD
+        plan = report._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_maintenance_paths_work_through_hadoop_fs_scheme(spark):

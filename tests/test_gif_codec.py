@@ -1,16 +1,9 @@
-"""The r14-built GIF LZW codec (operators/gif_codec.py) and the r16
-registrations (staged_r16.py, ACTIVATED at r16 via
-``staged_r16.register_all()`` in ``__spark_entry__``): fuzz roundtrips
-over the container knobs, the decode-only deferred-clear branch,
-cross-checks against the header-only gif_dims walk, and the registered
-queries value-exact through the LIVE registry machinery — exactly what
-the driver runs.
-
-History: before r16 the registration tests here pinned the
-PRE-registration state (names absent from the registry, window
-precomputation); that era's pins are preserved in git history. The
-activation flipped them to the steady-state form, the
-test_staged_r15.py model."""
+"""The pure-Python GIF codec (operators/gif_codec.py): fuzz
+roundtrips over the container knobs, the LZW table-overflow and
+deferred-clear branches, code-width boundaries, loud decode errors,
+the decode dispatch, animation enumeration and local colour tables.
+The registered ``multimodal_gif_decode`` query is value-checked with
+the rest of the registry in test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -19,19 +12,15 @@ import struct
 
 import pytest
 
-from orders_currency_conversion_etl_spark import staged_r16
 from orders_currency_conversion_etl_spark.operators import multimodal as mm
 from orders_currency_conversion_etl_spark.operators.gif_codec import (
     _lzw_decode,
     _lzw_encode,
     decode_gif,
     encode_gif,
+    encode_gif_animation,
+    gif_frames,
 )
-from orders_currency_conversion_etl_spark.plans import registry
-
-from oracle_harness import compare_query
-
-SF = "/root/testdata/sf0.01"
 
 
 def _expected_rgb(palette: bytes, indices: bytes) -> bytes:
@@ -166,72 +155,10 @@ def test_gif_dispatch_reaches_pure_codec():
     assert (w, h) == (8, 5) and rgb == _expected_rgb(pal, idx)
 
 
-STAGED_NAMES = [n for n, _sql, _fn in staged_r16.STAGED]
-
-
-@pytest.fixture(scope="module")
-def entry_mod():
-    import __spark_entry__ as mod  # registers the full 206-name registry
-
-    return mod
-
-
-@pytest.mark.parametrize("name", STAGED_NAMES)
-def test_registered_query_value_exact(spark, entry_mod, name):
-    """Each r16-registered query remains value-exact against its
-    FINALIZED oracle through the live registry path (boundary casts on
-    both engines) — the same compare the driver's hash gate replays."""
-    assert name in registry.QUERIES  # registered by __spark_entry__
-    finalized = entry_mod.oracle_sql()[name]
-    compare_query(spark, SF, registry.QUERIES[name], finalized)
-
-
-def test_register_all_is_idempotent(entry_mod):
-    """register_all() re-applies dict assignments; a second call must
-    not grow the registry or change the registered objects."""
-    before = dict(registry.QUERIES)
-    staged_r16.register_all()
-    assert set(registry.QUERIES) == set(before)
-    for n in STAGED_NAMES:
-        assert n in registry.QUERIES and n in registry.ORACLES
-
-
-def test_r16_registration_landed(entry_mod):
-    """The two r16 names are registered and carried by the pinned
-    ROTATION_R16_NEW list (the r16 window itself retired at the r17
-    flip; it went 50/50 green in CORRECTNESS_r16.json)."""
-    q = entry_mod.queries()
-    for n in STAGED_NAMES:
-        assert n in q, f"{n} missing from the registry"
-    assert sorted(entry_mod.ROTATION_R16_NEW) == sorted(STAGED_NAMES)
-
-
-def test_r16_window_was_sound(entry_mod):
-    """The RETIRED r16 window (historical form, the test_staged_r15
-    model): 10 anchors + 2 registrations + the full 38-name r11
-    staleness cohort = 50 unique registered names, pairwise disjoint,
-    with the capacity inside the 5-round budget."""
-    mod = entry_mod
-    assert len(mod.ANCHORS) == 10
-    cohort = mod.ROTATION_R16_REVALIDATE
-    assert len(cohort) == 38 == len(set(cohort))
-    live = set(mod.queries())
-    assert set(cohort) <= live
-    r16_window = mod.ANCHORS + mod.ROTATION_R16_NEW + cohort
-    assert len(r16_window) == 50 == len(set(r16_window))
-    assert len(live) - len(mod.ANCHORS) <= (50 - len(mod.ANCHORS)) * 5
-
-
 def test_gif_animation_enumeration_roundtrip():
     """gif_frames walks every frame's GCE + descriptor and SEEKS over
     the LZW data (header tier, no decode); decode_gif still decodes
     the FIRST frame of an animation."""
-    from orders_currency_conversion_etl_spark.operators.gif_codec import (
-        decode_gif,
-        encode_gif_animation,
-        gif_frames,
-    )
-
     pal = b"abcdefghijkl"  # 4 colors
     f0 = (6, 4, bytes([p % 4 for p in range(24)]))
     f1 = (4, 4, bytes([3 - (p % 4) for p in range(16)]))
@@ -246,8 +173,6 @@ def test_gif_animation_enumeration_roundtrip():
     assert (w, h, mode) == (6, 4, "RGB")
     assert rgb == b"".join(pal[3 * i : 3 * i + 3] for i in f0[2])
     # single-frame streams enumerate as one frame with default GCE
-    from orders_currency_conversion_etl_spark.operators.gif_codec import encode_gif
-
     single = encode_gif(5, 3, bytes([0] * 15), pal, interlace=True)
     (only,) = gif_frames(single)
     assert (only["width"], only["height"], only["interlaced"]) == (5, 3, True)
@@ -261,12 +186,6 @@ def test_gif_local_color_table_overrides_global():
     """A frame carrying a LOCAL color table maps its pixels through it,
     not the global one — hand-built stream (the encoder only writes
     global tables, so this branch needs an independent fixture)."""
-    from orders_currency_conversion_etl_spark.operators.gif_codec import (
-        _lzw_encode,
-        decode_gif,
-        gif_frames,
-    )
-
     w, h = 4, 2
     idx = bytes([0, 1, 2, 3, 3, 2, 1, 0])
     global_pal = b"GGGgggXXXxxx"  # 4 entries — must NOT be used

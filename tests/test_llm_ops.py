@@ -1606,6 +1606,52 @@ def test_flac_mp3_and_audio_info_dispatch():
         mm.audio_info(b"\x00\x01 garbage")
 
 
+def test_video_dims_dispatch_branches_loud():
+    """The dispatch refuses non-video payloads loudly, and each branch
+    reports its own container label (the fixture contract the
+    multimodal_video_dims oracle leans on)."""
+    from orders_currency_conversion_etl_spark.operators import multimodal as mm
+
+    with pytest.raises(ValueError, match="unrecognized video container"):
+        mm.video_dims(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
+    mp4 = mm.encode_mp4_header("isom", 8, 6, 3000, 1000, version=0)
+    assert mm.video_dims(mp4) == ("isom", 8, 6, 3000)
+    avi = mm.encode_avi_header(8, 6, 150, 20_000)
+    assert mm.video_dims(avi) == ("avi", 8, 6, 3000)
+    mkv = mm.encode_mkv_header("webm", 8, 6, 3000.0)
+    assert mm.video_dims(mkv) == ("webm", 8, 6, 3000)
+
+
+def test_audio_info_dispatch_branches_loud():
+    """Each branch reports its own codec label, and non-audio bytes
+    are loud (the fixture contract the multimodal_audio_info oracle
+    leans on)."""
+    from orders_currency_conversion_etl_spark.operators import multimodal as mm
+
+    with pytest.raises(ValueError, match="unrecognized audio container"):
+        mm.audio_info(b"\x89PNG\r\n\x1a\n")
+    assert mm.audio_info(mm.encode_wav(44100, [0, 1], 1, "mulaw"))[0] == "mulaw"
+    assert mm.audio_info(mm.encode_ogg_id_page("opus", 2, 48000)) == ("opus", 2, 48000)
+    assert mm.audio_info(mm.encode_flac_header(2, 32000)) == ("flac", 2, 32000)
+    assert mm.audio_info(mm.encode_mp3_header(1, 44100, id3_size=9)) == ("mp3", 1, 44100)
+
+
+def test_image_dims_fixture_helpers_parse():
+    """multimodal_image_dims' hand-rolled ICO/BMP/PNM fixture bytes
+    parse through the REAL dispatch with the documented quirks:
+    256-as-zero ICO bytes, negative top-down BMP height, netpbm comment
+    skip, HEIF thumbnail skip."""
+    from orders_currency_conversion_etl_spark.operators import multimodal as mm
+
+    assert mm.image_dims(mm._ico_bytes(256, 256)) == (256, 256, "RGBA")
+    assert mm.image_dims(mm._ico_bytes(7, 9)) == (7, 9, "RGBA")
+    assert mm.image_dims(mm._bmp_bytes(5, 4, 8, topdown=True)) == (5, 4, "P")
+    assert mm.image_dims(mm._pnm_bytes(4, 11, 3)) == (11, 3, "1")
+    assert mm.image_dims(mm._pnm_bytes(5, 11, 3)) == (11, 3, "L")
+    assert mm.image_dims(mm._pnm_bytes(6, 11, 3)) == (11, 3, "RGB")
+    assert mm.image_dims(mm.encode_heif_header("avif", [(1, 1), (8, 6)])) == (8, 6, "RGB")
+
+
 def test_gif_and_bmp_dims_header_only():
     """r12: GIF logical-screen and BMP info-header dims through the
     image_dims dispatch — header bytes only, PIL-free."""

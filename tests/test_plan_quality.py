@@ -669,19 +669,20 @@ def test_container_header_queries_are_single_stage_no_shuffle(spark):
 
 
 def test_r15_registrations_have_scale_correct_plans(spark):
-    """The four r15-registered queries' plan shapes: the two archive
-    walks and the row-group manifest are single-stage mapInPandas
-    scans with ZERO Exchange (embarrassingly parallel at any SF);
-    queue_source_roundtrip's only Exchange is its final groupBy —
-    one shuffle keyed on the aggregation key, nothing accidental."""
-    from orders_currency_conversion_etl_spark import staged_r15
+    """Plan shapes of the gzip/WARC.gz archive walks, the row-group
+    manifest and the native queue source: the two archive walks and the
+    row-group manifest are single-stage mapInPandas scans with ZERO
+    Exchange (embarrassingly parallel at any SF); queue_source_roundtrip's
+    only Exchange is its final groupBy — one shuffle keyed on the
+    aggregation key, nothing accidental."""
+    from orders_currency_conversion_etl_spark.operators import archive, layout  # noqa: F401
+    from orders_currency_conversion_etl_spark.streaming import queue_source  # noqa: F401
 
-    fns = {n: f for n, _s, f in staged_r15.STAGED}
     for name in ("archive_gzip_members", "archive_warc_gz_index"):
-        plan = _plan(fns[name](spark, SF))
+        plan = _plan(QUERIES[name](spark, SF))
         assert "Exchange" not in plan, f"{name} shuffles:\n{plan}"
         assert "MapInPandas" in plan
-    plan = _plan(fns["lake_rowgroup_stats"](spark, SF))
+    plan = _plan(QUERIES["lake_rowgroup_stats"](spark, SF))
     assert "Exchange hashpartitioning" not in plan, plan
-    plan = _plan(fns["queue_source_roundtrip"](spark, SF))
+    plan = _plan(QUERIES["queue_source_roundtrip"](spark, SF))
     assert plan.count("Exchange hashpartitioning") <= 1, plan

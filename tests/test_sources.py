@@ -94,6 +94,31 @@ def test_generator_is_deterministic(spark):
     assert all("@example.com" in r.customer_email for r in a)
 
 
+def test_generator_ids_depend_on_seed(spark):
+    """Each generator run gets fresh order ids, like the reference's
+    uuid4 (reference: dags/order_generator_dag.py:66): two seeds give
+    disjoint ids, so the incremental anti-join does not drop a second
+    run as already processed; the same seed reproduces its ids; the
+    registered query still matches its DuckDB oracle."""
+    import __spark_entry__ as entry_mod
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_harness import compare_query
+
+    def ids(seed):
+        return {r.order_id for r in generate_orders(spark, n=500, seed=seed).collect()}
+
+    a, b = ids(1), ids(2)
+    assert len(a) == len(b) == 500
+    assert not (a & b)
+    assert ids(1) == a
+    compare_query(
+        spark,
+        SF_SMOKE,
+        entry_mod.queries()["generate_orders_seeded"],
+        entry_mod.oracle_sql()["generate_orders_seeded"],
+    )
+
+
 # --------------------------------------------------------------------------
 # Real-transport HTTP e2e over a loopback server (upgrades S2/S3/S7
 # from injected-transport unit tests to the actual urllib path)
