@@ -3,6 +3,8 @@
 
 Prints exactly ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+and writes the same line to .localdata/bench_last.json. ``value`` is the
+sum of the in-process best-of-3 timings.
 
 Each query executes end-to-end through the noop sink (full computation,
 no driver collect, no disk write)."""
@@ -59,6 +61,9 @@ HEADLINE = (
 #: sf0.1 -> sf1 scaling evidence instead of extrapolation.
 SF1_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".localdata", "sf1")
 
+#: The full JSON line of the last run (gitignored with .localdata/).
+LAST_RUN = os.path.join(os.path.dirname(SF1_DIR), "bench_last.json")
+
 
 def _run_headline(spark, sf_dir: str, runs: int) -> dict[str, float]:
     # Untimed warmup pass: run every headline query once so JVM JIT +
@@ -83,112 +88,6 @@ def _run_headline(spark, sf_dir: str, runs: int) -> dict[str, float]:
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
     return timings
-
-
-#: Auto-adjudication threshold (VERDICT r9 ask #2): a single-shot
-#: in-process timing above this multiple of its r1 baseline is not
-#: allowed to land in the committed record unchallenged — rerun it
-#: min-of-N in FRESH processes (the DRIFT protocol's inner loop:
-#: fresh JVM, fresh page-cache posture) and record the best evidence.
-#: r9's red came from exactly this: a post-reboot driver bench wrote
-#: multimodal_features at 2.32x while the code was unchanged.
-RERUN_RATIO = 1.5
-RERUN_PROCS = 3
-
-
-def _fresh_process_rerun(flagged: list[str], sf_dir: str) -> dict[str, float]:
-    """min-of-RERUN_PROCS fresh-process timings per flagged query.
-
-    Reuses scripts/ab_drift.py single-sided: each invocation is a new
-    Python+JVM with its own warmup pass and min-of-2 timed reps, so a
-    transient driver-JVM state (GC fragmentation, page-cache cold spots
-    after a reboot) can't masquerade as a code regression. Must be
-    called AFTER the bench session is stopped — two concurrent
-    local[32] JVMs would contend and poison both measurements.
-    """
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    env = dict(os.environ)
-    env["SPARK_GRAFT_AB_QUERIES"] = ",".join(flagged)
-    env["SPARK_GRAFT_AB_SF_DIR"] = sf_dir
-    best: dict[str, float] = {}
-    for _ in range(RERUN_PROCS):
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.join(here, "scripts", "ab_drift.py"), here],
-                capture_output=True,
-                text=True,
-                env=env,
-                timeout=600,
-            )
-        except subprocess.TimeoutExpired:
-            # One hung rep must not discard the fresh-process evidence
-            # already collected from earlier reps (r11, ADVICE fix).
-            print("rerun rep timed out after 600 s; continuing", file=sys.stderr)
-            continue
-        line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
-        try:
-            rep = json.loads(line)["queries"]
-        except (json.JSONDecodeError, KeyError):
-            print(f"rerun rep unparsable: {proc.stderr[-300:]}", file=sys.stderr)
-            continue
-        for name, sec in rep.items():
-            best[name] = min(best.get(name, float("inf")), sec)
-    return best
-
-
-def _auto_adjudicate(result: dict, sf_dir: str) -> None:
-    """Replace >RERUN_RATIO-vs-r1 in-process timings with fresh-process
-    evidence; annotate the record so the gate and the judge see both
-    numbers. Best-effort: no r1 baseline / rerun failure leaves the
-    in-process record intact (degraded bench beats no bench)."""
-    base_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r01.json")
-    if not os.path.exists(base_path):
-        return
-    with open(base_path) as f:
-        base_rec = json.load(f)["parsed"]
-    # The r1 baseline was recorded at sf0.1; a run at any other scale
-    # would flag essentially every query (10x data ~ 3-10x time) and
-    # burn up to RERUN_PROCS x 600 s of fresh-process reruns producing
-    # an adjudication block that compares different scales. (r11,
-    # ADVICE fix.)
-    if abs(result.get("sf", 0.1) - float(base_rec.get("sf", 0.1))) > 1e-9:
-        print(
-            f"auto-adjudication skipped: bench sf={result.get('sf')} != "
-            f"baseline sf={base_rec.get('sf')}",
-            file=sys.stderr,
-        )
-        return
-    base = base_rec["queries"]
-    timings = result["queries"]
-    flagged = sorted(
-        n for n in timings if n in base and base[n] > 0 and timings[n] / base[n] > RERUN_RATIO
-    )
-    if not flagged:
-        return
-    print(f"auto-adjudicating >{RERUN_RATIO}x-vs-r1 queries: {flagged}", file=sys.stderr)
-    fresh = _fresh_process_rerun(flagged, sf_dir)
-    adjudication = {}
-    for name in flagged:
-        rec = {
-            "in_process_sec": timings[name],
-            "r1_baseline_sec": base[name],
-            "fresh_process_min_sec": fresh.get(name),
-        }
-        if name in fresh:
-            timings[name] = round(min(timings[name], fresh[name]), 3)
-        rec["recorded_sec"] = timings[name]
-        adjudication[name] = rec
-    result["value"] = round(sum(timings.values()), 3)
-    result["auto_adjudication"] = {
-        "protocol": (
-            f"in-process best-of-3 exceeded {RERUN_RATIO}x the BENCH_r01 baseline; "
-            f"reran min-of-{RERUN_PROCS} FRESH processes (ab_drift.py inner loop: "
-            "new JVM, warmup + min-of-2 each) and recorded the overall min"
-        ),
-        "queries": adjudication,
-    }
 
 
 def main() -> None:
@@ -256,41 +155,19 @@ def main() -> None:
         except Exception as exc:
             print(f"sf1 pass failed (headline unaffected): {exc}", file=sys.stderr)
 
-    # Stop BEFORE any fresh-process rerun: a second local[32] JVM
-    # beside this one would contend for all 32 cores and poison both.
     spark.stop()
-    try:
-        _auto_adjudicate(result, sf_dir)
-    except Exception as exc:
-        print(f"auto-adjudication failed (in-process record kept): {exc}", file=sys.stderr)
 
     line = json.dumps(result)
     print(line)
     # The driver truncates captured stdout to its last ~2000 chars,
     # which amputates the headline "value" once sf1_* fields are
-    # present; persist the full JSON in-repo so each round's evidence
-    # survives intact (BENCH_LOCAL_r{N}.json, N = next after the
-    # highest committed BENCH_r*.json, overridable for reruns).
+    # present; keep the full line in a gitignored file.
     try:
-        _write_local_copy(line)
-    except Exception as exc:
+        os.makedirs(os.path.dirname(LAST_RUN), exist_ok=True)
+        with open(LAST_RUN, "w") as fh:
+            fh.write(line + "\n")
+    except OSError as exc:
         print(f"local bench copy failed: {exc}", file=sys.stderr)
-
-
-def _write_local_copy(line: str) -> None:
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if not rnd:
-        committed = [
-            int(m.group(1))
-            for f in os.listdir(here)
-            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-        ]
-        rnd = f"{max(committed, default=0) + 1:02d}"
-    with open(os.path.join(here, f"BENCH_LOCAL_r{rnd}.json"), "w") as fh:
-        fh.write(line + "\n")
 
 
 if __name__ == "__main__":

@@ -637,9 +637,10 @@ def tfidf_top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf"))
     # r18 opt: df derived from tf instead of a second COUNT(DISTINCT
     # source) pass over the exploded token stream — tf is keyed
-    # (source, term), so its row count per term IS countDistinct(source)
-    # (exact while `source` is never NULL, pinned by
-    # tests/test_opt_r19.py::test_documents_source_never_null).
+    # (source, term), so its count of non-NULL sources per term IS
+    # COUNT(DISTINCT source), which ignores NULL like the oracle does.
+    # A term seen only under a NULL source gets df = 0 and a NULL
+    # tfidf, as in DuckDB (try_divide: no ANSI divide-by-zero error).
     # Row-identical (documents with NULL/empty text still tokenize to
     # one '' token on both engines, so every source survives into tf).
     # What this buys (r19 correction of the r18 note): the df
@@ -652,12 +653,11 @@ def tfidf_top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # claim literal was A/B'd r19 and is locally SLOWER (1.08 → 1.27 s
     # paired at sf0.1: materializing the |sources x vocab| cache costs
     # more than the 5k-doc rescan) — at 100 TB, where the rescan is
-    # corpus-scale, persist/write-then-read tf is the right call, and
-    # the negative A/B is recorded in OPTIMIZATION_r19.md.
-    idf = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_sources = _docs(spark, sf_dir).select("source").distinct().count()
+    # corpus-scale, persist/write-then-read tf is the right call.
+    idf = tf.groupBy("term").agg(F.count("source").alias("df"))
+    n_sources = _docs(spark, sf_dir).select("source").dropna().distinct().count()
     scored = tf.join(idf, "term").withColumn(
-        "tfidf", F.col("tf") * F.log(F.lit(float(n_sources)) / F.col("df"))
+        "tfidf", F.col("tf") * F.log(F.try_divide(F.lit(float(n_sources)), F.col("df")))
     )
     from pyspark.sql import Window
 

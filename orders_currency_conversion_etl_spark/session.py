@@ -67,7 +67,7 @@ def get_spark(app_name: str = "orders-currency-conversion-etl-spark") -> SparkSe
         # worlds. Measured on the 16-level Hilbert fold (17 fused
         # projections): 4.8 s default vs 1.9 s with the fallback at
         # sf0.1 (2.5x), with every small-method stage unaffected
-        # (headline bench flat, see BENCH_LOCAL_r05 note).
+        # (headline bench flat).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         # Local-rig scan sizing: test parquet is one file per table, so
         # the default 128 MB split gives a 100 MB sf1 lineitem scan ONE

@@ -39,8 +39,6 @@ _PLAN_MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
 
 def session_memo(spark: SparkSession, key: tuple[str, str, str], build) -> DataFrame:
     """Memoize an analyzed (lazy, data-free) DataFrame per session."""
-    if os.environ.get("SPARK_GRAFT_NO_PLAN_MEMO") == "1":
-        return build()
     app = spark.sparkContext.applicationId
     full = (app, *key)
     df = _PLAN_MEMO.get(full)

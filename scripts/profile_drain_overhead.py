@@ -12,8 +12,7 @@ per-stream overhead. This instruments WHERE it goes:
   zero new segments — the pure per-stream machinery floor with no data
 
 Medians over N fresh-topology reps; one JSON line to stdout. Run on a
-QUIET machine (the A/B discipline); compare against the batch twin the
-same way bench_extras does.
+QUIET machine (the A/B discipline) and compare against the batch twin.
 """
 
 from __future__ import annotations

@@ -3,15 +3,13 @@ pagerank iteration plan shape.
 
 The memo (sources/catalog.py::session_memo) reuses the ANALYZED, lazy
 DataFrame — file listing + parquet footer schema read — never any
-computed data; these tests pin the reuse semantics, the keying, and
-the opt-out. The pagerank pin asserts the r18 exchange-elimination:
+computed data; these tests pin the reuse semantics and the keying.
+The pagerank pin asserts the r18 exchange-elimination:
 the per-iteration contribution aggregation must consume the persisted
 dst-partitioning instead of reshuffling.
 """
 
 from __future__ import annotations
-
-import os
 
 from orders_currency_conversion_etl_spark.sources import catalog
 
@@ -35,13 +33,6 @@ def test_load_table_parallel_memoized_separately(spark):
     par2 = catalog.load_table_parallel(spark, SF, "documents")
     assert par1 is par2
     assert par1 is not plain, "parallel variant keys its own memo entry"
-
-
-def test_memo_env_opt_out(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_PLAN_MEMO", "1")
-    a = catalog.load_table(spark, SF, "nation")
-    b = catalog.load_table(spark, SF, "nation")
-    assert a is not b, "opt-out must disable plan reuse"
 
 
 def test_memoized_plan_rereads_data_not_results(spark, tmp_path):
