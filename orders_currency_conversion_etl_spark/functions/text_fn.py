@@ -45,14 +45,6 @@ def token_shingles(toks_col_name: str, k: int = 3) -> Column:
     )
 
 
-def md5_prefix(col: Column, salt: str = "", width: int = 8) -> Column:
-    """Portable bounded hash: first ``width`` hex chars of md5. Both
-    engines produce identical lowercase hex; lexicographic min/max on
-    the prefix equals numeric min/max of the underlying integer."""
-    target = F.concat(F.lit(salt), col) if salt else col
-    return F.substring(F.md5(target), 1, width)
-
-
 def hex_to_long_sql(hex_expr: str, width: int = 8) -> str:
     """SQL (valid in BOTH Spark and DuckDB) turning a lowercase hex
     string of ``width`` chars into its integer value, digit by digit —

@@ -11,16 +11,19 @@ md5 derivation is partition-invariant AND portable to DuckDB, which
 upgrades the driver's check for ``generate_orders_seeded`` from
 rows-only to an exact value-hash oracle.
 
-Distributed by construction: ``spark.range(n)`` partitions the id space
-across executors; no driver-side loop, no data movement at any size.
+Distributed by construction, sized by rows: ``spark.range`` partitions
+the id space with one partition per ``ROWS_PER_PARTITION`` rows, capped
+at the session's default parallelism. A reference-size batch of 5,000
+orders is one partition, so an append writes one file, and a large n
+spreads over every core; no driver-side loop and no data movement at
+any size.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text_fn import hex_to_long_sql
 from ..sources.rates import CURRENCY_ALPHABET
@@ -28,23 +31,13 @@ from ..sources.rates import CURRENCY_ALPHABET
 WEEK_SECS = 7 * 86400
 
 
-def _uuid_like(h: Column) -> Column:
-    """UUID-format string from an md5 hex column, laid out 8-4-4-4-12.
-    Replaces ``uuid.uuid4()`` (reference: dags/order_generator_dag.py:66)
-    for reproducible golden tests."""
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.substring(h, 13, 4),
-        F.substring(h, 17, 4),
-        F.substring(h, 21, 12),
-    )
+#: Rows per ``spark.range`` partition (module doc).
+ROWS_PER_PARTITION = 1_000_000
 
 
-def _hash_slice(h: Column, start: int) -> Column:
-    """32-bit uniform integer from 8 hex chars of an md5 column."""
-    return F.conv(F.substring(h, start, 8), 16, 10).cast("bigint")
+def _hash_slice(h: str, start: int) -> str:
+    """SQL for a 32-bit uniform integer from 8 hex chars of an md5 column."""
+    return f"CAST(conv(substring({h}, {start}, 8), 16, 10) AS BIGINT)"
 
 
 def generate_orders(
@@ -58,35 +51,35 @@ def generate_orders(
 
     Column derivations (each an independent 32-bit md5 slice, mod'd to
     its domain) are mirrored 1:1 by :func:`generate_orders_oracle_sql`.
+    They are two ``selectExpr`` projections, the md5 columns and then the
+    derived ones: the JVM parses each SQL string in one call, while a
+    tree of Column objects costs a py4j round trip per node.
     """
-    base = spark.range(n)  # partitioned id space, no driver materialization
-    h1 = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string")))
-    h2 = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string"), F.lit("b")))
-    # the id gets its own md5 input, so it is unique per (seed, id) and
-    # uncorrelated with the h1/h2 slices behind email, date and amount
-    hu = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string"), F.lit("u")))
-    letter_idx = (_hash_slice(h1, 1) % 26 + 1).cast("int")
-    digits = _hash_slice(h1, 9) % 9000 + 1000
-    age_secs = _hash_slice(h1, 17) % WEEK_SECS
-    cents = _hash_slice(h1, 25) % 99000 + 1000
-    cur_idx = (_hash_slice(h2, 1) % len(currencies) + 1).cast("int")
-    return base.select(
-        _uuid_like(hu).alias("order_id"),
-        # email f"{letter}{digits}@example.com" (reference: order_generator_dag.py:67)
-        F.concat(
-            F.substring(F.lit("abcdefghijklmnopqrstuvwxyz"), letter_idx, 1),
-            digits.cast("string"),
-            F.lit("@example.com"),
-        ).alias("customer_email"),
+    parts = max(1, min(spark.sparkContext.defaultParallelism, -(-n // ROWS_PER_PARTITION)))
+    ts = f"TIMESTAMP '{base_time.strftime('%Y-%m-%d %H:%M:%S')}'"
+    cur_array = "array(" + ", ".join(f"'{c}'" for c in currencies) + ")"
+    return spark.range(0, n, 1, parts).selectExpr(
+        # the id gets its own md5 input, so it is unique per (seed, id) and
+        # uncorrelated with the h1/h2 slices behind email, date and amount
+        f"md5(concat_ws(':', '{seed}', CAST(id AS STRING), 'u')) AS hu",
+        f"md5(concat_ws(':', '{seed}', CAST(id AS STRING))) AS h1",
+        f"md5(concat_ws(':', '{seed}', CAST(id AS STRING), 'b')) AS h2",
+    ).selectExpr(
+        # UUID layout 8-4-4-4-12 replaces uuid.uuid4() (reference:
+        # dags/order_generator_dag.py:66) for reproducible golden tests
+        "concat_ws('-', substring(hu, 1, 8), substring(hu, 9, 4), substring(hu, 13, 4), "
+        "substring(hu, 17, 4), substring(hu, 21, 12)) AS order_id",
+        # email f"{letter}{digits}@example.com" (reference: :67)
+        "concat(substring('abcdefghijklmnopqrstuvwxyz', "
+        f"CAST({_hash_slice('h1', 1)} % 26 + 1 AS INT), 1), "
+        f"CAST({_hash_slice('h1', 9)} % 9000 + 1000 AS STRING), '@example.com') AS customer_email",
         # order_date within [base_time - 7d, base_time) (reference: :68)
-        (
-            F.lit(base_time).cast("timestamp") - F.make_interval(secs=age_secs)
-        ).alias("order_date"),
+        f"{ts} - make_interval(0, 0, 0, 0, 0, 0, {_hash_slice('h1', 17)} % {WEEK_SECS}) AS order_date",
         # uniform cents in [10.00, 1000.00) (reference: :69); exact division
-        (cents.cast("decimal(12,2)") / 100).cast("decimal(12,2)").alias("amount"),
-        F.element_at(F.array(*[F.lit(c) for c in currencies]), cur_idx).alias("currency"),
-        F.lit(base_time).cast("timestamp").alias("created_at"),
-        F.lit(None).cast("timestamp").alias("processed_at"),
+        f"CAST(CAST({_hash_slice('h1', 25)} % 99000 + 1000 AS DECIMAL(12,2)) / 100 AS DECIMAL(12,2)) AS amount",
+        f"element_at({cur_array}, CAST({_hash_slice('h2', 1)} % {len(currencies)} + 1 AS INT)) AS currency",
+        f"{ts} AS created_at",
+        "CAST(NULL AS TIMESTAMP) AS processed_at",
     )
 
 

@@ -21,8 +21,6 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import DataFrame
-
 #: Upper bound for exact all-pairs / linear-scan baselines. Above
 #: this, the quadratic candidate space (~5e9 pairs at the limit) stops
 #: being "verification baseline" and starts being a cluster-melter.
@@ -103,14 +101,3 @@ def assert_parquet_baseline_size(path: str, op: str, scale_path: str) -> None:
     if n > MAX_EXACT_BASELINE_ROWS:
         _fail(op, n, scale_path)
 
-
-def assert_baseline_size(df: DataFrame, op: str, scale_path: str) -> DataFrame:
-    """Guard an arbitrary DataFrame input (runs one count() job).
-
-    Prefer :func:`assert_parquet_baseline_size` when the input is a
-    parquet table — that variant is metadata-only and cached.
-    """
-    n = df.count()
-    if n > MAX_EXACT_BASELINE_ROWS:
-        _fail(op, n, scale_path)
-    return df

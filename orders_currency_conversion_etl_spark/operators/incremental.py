@@ -13,26 +13,49 @@ Re-runs see already-written ids and produce nothing: idempotency
 without any UPDATE to the source. In streaming mode the same contract
 comes from checkpointed offsets (streaming/events_stream.py).
 
-At 100 TB: the anti-join shuffles both sides on the key — unavoidable
-for exact set difference. Catalyst plans a sort-merge join, but an
-anti-join needs existence, not order: once the shuffle has run, AQE
-re-plans it as a shuffled hash join (``LeftAnti, BuildRight``)
-whenever every post-shuffle partition is at most
-``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold`` (64 MB,
-session.py). Each task then builds a hash set over its slice of the
-sink keys and probes it with its slice of the source, so the sink's
-keys are never sorted; a sink partition larger than the threshold keeps
-the sort-merge plan, which can spill. AQE also splits skewed source
-partitions, and when the sink is small relative to source (the
-steady-state backlog case) Catalyst broadcasts it and the plan is
-shuffle-free. If only recent data can be unprocessed, pass
-``watermark`` to prune the sink scan first.
+The anti-join's cost follows whichever side fits Spark's broadcast
+threshold (``spark.sql.autoBroadcastJoinThreshold``, tested against the
+optimizer's size estimate of each keyset, as Catalyst's ``JoinSelection``
+does). There are three regimes:
+
+- The sink keyset fits. Catalyst broadcasts it and the source streams
+  through a hash probe; nothing shuffles.
+- The source keyset fits and the sink's does not: the steady-state
+  batch, a few thousand new orders against every order ever converted.
+  A left anti-join can only build its hash table on its right side, the
+  sink, so Catalyst would shuffle the whole sink keyset every cycle. A
+  semi-join reduction does what the planner cannot: the sink is scanned
+  once, for its key column only, and probed against a broadcast hash set
+  of the source keys (``seen``, at most as many keys as the source);
+  the source is then anti-joined against a broadcast of ``seen``. Both
+  joins are broadcast hash joins, so nothing is hash-partitioned and the
+  cost is one sink key scan plus O(batch) memory.
+- Both keysets are large. Catalyst plans a sort-merge join; once the
+  shuffles have run, AQE re-plans it as a shuffled hash join
+  (``LeftAnti, BuildRight``) whenever every post-shuffle partition is at
+  most ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold``
+  (64 MB, session.py), so the sink's keys are hashed, never sorted. A
+  sink partition above the threshold keeps the sort-merge plan, which
+  can spill. The threshold at ``-1`` (broadcast off) always lands here.
+
+If only recent data can be unprocessed, pass ``watermark`` to prune the
+source first; that shrinks its keyset toward the reduction's regime.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``df`` is within the
+    session's broadcast threshold: ``JoinSelection``'s own test. Reads
+    plan statistics only; runs no job."""
+    jsession = df.sparkSession._jsparkSession
+    threshold = jsession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= threshold
 
 
 def unprocessed(
@@ -42,11 +65,20 @@ def unprocessed(
     batch_limit: int | None = None,
     watermark: Column | None = None,
 ) -> DataFrame:
-    """Rows of ``source`` whose key is absent from ``sink`` (op J3)."""
+    """Rows of ``source`` whose key is absent from ``sink`` (op J3).
+
+    A NULL key never matches, so a NULL-keyed source row is kept. When
+    the source keyset fits the broadcast threshold and the sink's does
+    not, the join is semi-join reduced (module doc)."""
     sink_keys = sink.select(key)
     if watermark is not None:
         source = source.filter(watermark)
-    out = source.join(sink_keys, on=key, how="left_anti")
+    src_keys = source.select(key)
+    if not _fits_broadcast(sink_keys) and _fits_broadcast(src_keys):
+        seen = sink_keys.join(F.broadcast(src_keys), on=key, how="left_semi")
+        out = source.join(F.broadcast(seen), on=key, how="left_anti")
+    else:
+        out = source.join(sink_keys, on=key, how="left_anti")
     if batch_limit is not None:
         out = out.limit(batch_limit)
     return out

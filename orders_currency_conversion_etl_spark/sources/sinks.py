@@ -11,13 +11,16 @@
   keeping both Postgres tables keyed by order_id
   (reference: init/postgres-1/init.sql:2, init/postgres-2/init.sql:2).
 - ``append_idempotent``: the anti-join append used by the incremental
-  pipeline — re-running never duplicates rows (SURVEY §7.4's
-  replacement for FOR UPDATE + write-back).
+  pipeline (``operators/incremental.unprocessed``) — re-running never
+  duplicates rows (SURVEY §7.4's replacement for FOR UPDATE +
+  write-back).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators.incremental import unprocessed
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
@@ -58,7 +61,7 @@ def append_idempotent(src: DataFrame, sink_df: DataFrame | None, key: str) -> Da
     same delta on retry."""
     if sink_df is None:
         return src
-    return src.join(sink_df.select(key), on=key, how="left_anti")
+    return unprocessed(src, sink_df, key=key)
 
 
 def write_sorted_layout(
