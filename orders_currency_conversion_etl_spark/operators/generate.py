@@ -22,6 +22,8 @@ any size.
 from __future__ import annotations
 
 import datetime as dt
+import operator
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,6 +35,9 @@ WEEK_SECS = 7 * 86400
 
 #: Rows per ``spark.range`` partition (module doc).
 ROWS_PER_PARTITION = 1_000_000
+
+#: What a currency code must look like before it is pasted into SQL.
+_CURRENCY_CODE = re.compile(r"[A-Z]{3}")
 
 
 def _hash_slice(h: str, start: int) -> str:
@@ -54,7 +59,20 @@ def generate_orders(
     They are two ``selectExpr`` projections, the md5 columns and then the
     derived ones: the JVM parses each SQL string in one call, while a
     tree of Column objects costs a py4j round trip per node.
+
+    The inputs are pasted into that SQL as text, so they are checked
+    first: ``seed`` must be an integer, ``base_time`` naive and in whole
+    seconds (the timestamp literal, like the oracle's, has neither a
+    zone nor a fraction), and every currency a three-letter upper-case
+    code (currencies can come from the rates API). Anything else raises
+    ``ValueError`` (``TypeError`` for a non-integer seed).
     """
+    seed = operator.index(seed)
+    if base_time.tzinfo is not None or base_time.microsecond:
+        raise ValueError(f"base_time must be naive and in whole seconds, got {base_time!r}")
+    bad = [c for c in currencies if not (isinstance(c, str) and _CURRENCY_CODE.fullmatch(c))]
+    if bad:
+        raise ValueError(f"currency codes must be three upper-case letters, got {bad!r}")
     parts = max(1, min(spark.sparkContext.defaultParallelism, -(-n // ROWS_PER_PARTITION)))
     ts = f"TIMESTAMP '{base_time.strftime('%Y-%m-%d %H:%M:%S')}'"
     cur_array = "array(" + ", ".join(f"'{c}'" for c in currencies) + ")"

@@ -168,3 +168,59 @@ def test_generator_partitions_follow_rows(spark):
     assert parts == min(cores, 3)
     if cores > 1:
         assert parts > 1
+
+
+def test_only_a_source_with_few_files_takes_the_reduction(spark, tmp_path):
+    """The choice reads the optimizer's size estimate, which counts a
+    file source's bytes on disk, not its rows. A watermark cuts rows,
+    not files, so a source whose files exceed the threshold keeps the
+    plain join however few rows the watermark leaves; a directory that
+    holds only the new files takes the reduction. Both give the same
+    rows."""
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    rows = spark.range(20_000).selectExpr("CAST(id AS STRING) AS k", "id AS v")
+    rows.filter("v < 15000").write.parquet(old)
+    rows.filter("v >= 15000").write.parquet(new)
+    everything = spark.read.parquet(old, new)
+    recent = spark.read.parquet(new)
+    sink = spark.range(0, 200_000, 3).selectExpr("CAST(id AS STRING) AS k")
+    fits = _estimate(recent.select("k"))
+    assert fits < _estimate(everything.select("k")) < _estimate(sink)
+
+    with _threshold(spark, fits):
+        watermarked = unprocessed(everything, sink, key="k", watermark=F.col("v") >= 15_000)
+        assert "LeftSemi" not in _plan(watermarked)
+        reduced = unprocessed(recent, sink, key="k")
+        assert "LeftSemi" in _plan(reduced)
+        want = sorted(str(i) for i in range(15_000, 20_000) if i % 3)
+        assert sorted(r.k for r in watermarked.collect()) == want
+        assert sorted(r.k for r in reduced.collect()) == want
+
+
+def test_jdbc_source_never_takes_the_reduction(spark):
+    """A JDBC relation reports no size, so its estimate is derived from
+    Spark's default size (``Long.MaxValue``) and no threshold admits it:
+    a JDBC source always gets the plain anti-join."""
+    from orders_currency_conversion_etl_spark.sources.jdbc import jdbc_incremental_reader
+
+    url = "jdbc:derby:memory:reducer_jdbc;create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        stmt = conn.createStatement()
+        stmt.execute("CREATE TABLE orders (order_id VARCHAR(16), processed_at TIMESTAMP)")
+        stmt.execute("INSERT INTO orders VALUES ('1', NULL), ('2', NULL), ('x', NULL)")
+    finally:
+        conn.close()
+    source = jdbc_incremental_reader(
+        spark,
+        url=url,
+        table="orders",
+        columns=("order_id", "processed_at"),
+        properties={"driver": "org.apache.derby.jdbc.EmbeddedDriver"},
+    ).load()
+    sink = spark.range(0, 100_000).selectExpr("CAST(id AS STRING) AS order_id")
+    assert _estimate(source.select("order_id")) > 2**62
+    with _threshold(spark, 2**62):
+        out = unprocessed(source, sink)
+        assert "LeftSemi" not in _plan(out)
+        assert [r[0] for r in out.collect()] == ["x"]  # Derby upper-cases names

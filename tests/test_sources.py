@@ -94,6 +94,29 @@ def test_generator_is_deterministic(spark):
     assert all("@example.com" in r.customer_email for r in a)
 
 
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"base_time": dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)},
+        {"base_time": dt.datetime(2026, 1, 1, 0, 0, 0, 500)},
+        {"currencies": ("EUR", "US'D")},
+        {"currencies": ("EUR", "usd")},
+    ],
+    ids=["tz_aware_time", "microseconds", "quote_in_code", "lower_case_code"],
+)
+def test_generator_rejects_inputs_its_sql_cannot_hold(spark, kwargs):
+    """The generator pastes base_time and the currency codes into SQL:
+    a zone, a fraction of a second or a code that is not three
+    upper-case letters is refused, not silently dropped or spliced."""
+    with pytest.raises(ValueError):
+        generate_orders(spark, n=10, **kwargs)
+
+
+def test_generator_rejects_non_integer_seed(spark):
+    with pytest.raises(TypeError):
+        generate_orders(spark, n=10, seed="1'), '")
+
+
 def test_generator_ids_depend_on_seed(spark):
     """Each generator run gets fresh order ids, like the reference's
     uuid4 (reference: dags/order_generator_dag.py:66): two seeds give
