@@ -45,6 +45,14 @@ def token_shingles(toks_col_name: str, k: int = 3) -> Column:
     )
 
 
+#: DuckDB twin of ``array_distinct(token_shingles("toks", k=3))``: the
+#: distinct 3-token shingles of a ``toks`` list (empty under 3 tokens).
+SHINGLES_SQL = (
+    "list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)), "
+    "i -> array_to_string(toks[i:i+2], ' ')))"
+)
+
+
 def hex_to_long_sql(hex_expr: str, width: int = 8) -> str:
     """SQL (valid in BOTH Spark and DuckDB) turning a lowercase hex
     string of ``width`` chars into its integer value, digit by digit —

@@ -6,39 +6,48 @@ use-case run end-to-end as ONE Catalyst plan:
       → exact dedup           (keep min doc_id per md5(text))
       → decontamination       (drop docs sharing a 3-gram with the
                                benchmark blocklist)
-      → near-dedup            (n-gram Jaccard >= 0.5; drop the higher
-                               doc_id of each duplicate pair)
+      → near-dedup            (Jaccard >= 0.5; drop the higher doc_id
+                               of each duplicate pair)
       → chunking              (50-token windows, stride 40)
 
-Every stage exists standalone in operators/text.py / operators/dedup.py
-with its own oracle; this module proves they COMPOSE — a user can run
-their whole curation DAG as one lazy plan and Catalyst sees through
-all of it (one scan of documents feeds every stage; the only shuffles
-are the two the algorithm requires: the content-hash group and the
-shingle self-join).
+The two registered queries share everything but the near-dedup stage.
+_clean builds the persisted front (quality → exact dedup →
+decontaminate), _curated adds the dup anti-join (_anti_join_survivors)
+and the chunker (text.chunk_windows); curation_pipeline plugs in the
+exact shingle join (dedup.shingle_join_pairs), curation_pipeline_lsh the
+MinHash-LSH pairs (dedup.lsh_pairs). The oracles mirror that:
+_curation_oracle wraps the same CTE chain around
+dedup.shingle_join_pairs_sql or dedup.lsh_pairs_sql.
 
 Scale shape at 100 TB: quality filter + decontamination are map-side
 (no shuffle, run inside the scan's codegen stage); exact dedup is one
 hash shuffle of (md5, id); the Jaccard self-join is the known hot spot
-and its LSH replacement (operators/dedup.py::dedup_minhash_lsh) slots
-into the same position; chunking is executor-side explode. The
-diamond-shaped survivor set is persisted once and read by both the
-pair-join and the final chunker.
+and the LSH pairs replace it in the same position; chunking is
+executor-side explode. The diamond-shaped survivor set is persisted
+once and read by both the pair stage and the final chunker.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text_fn import STOPWORDS, token_shingles
+from ..functions.text_fn import SHINGLES_SQL, token_shingles
 from ..plans.registry import query
 from ..sources import catalog
-from .dedup import _shared
-from .text import CHUNK_STRIDE, CHUNK_TOKENS, CONTAMINATION_BLOCKLIST, quality_score_col, with_tokens
+from .dedup import _shared, lsh_pairs, lsh_pairs_sql, shingle_join_pairs, shingle_join_pairs_sql
+from .text import (
+    CONTAMINATION_BLOCKLIST,
+    QUALITY_SCORE_SQL,
+    chunk_windows,
+    chunk_windows_sql,
+    quality_score_col,
+    with_tokens,
+)
 
 QUALITY_THRESHOLD = 0.54
-CURATION_JACCARD_T = 0.5
 
 #: Broadcast the duplicate-id list into the final anti-join while it
 #: stays under this cap, shuffle (SMJ) beyond it. Same pattern as
@@ -71,64 +80,44 @@ def _anti_join_survivors(clean: DataFrame, dups: DataFrame) -> DataFrame:
     return clean.join(dup_side, "doc_id", "left_anti")
 
 
-_SCORE_SQL = rf"""(
-    CAST(0.4 AS DOUBLE) * least(CAST(len(toks) AS DOUBLE) / CAST(200.0 AS DOUBLE), CAST(1.0 AS DOUBLE))
-  + CAST(0.3 AS DOUBLE) * (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks))
-  + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(len(list_filter(toks, t -> list_contains({list(STOPWORDS)!r}, t))) AS DOUBLE) / len(toks))
-)"""
-
-_SHINGLE_SQL = (
-    "list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)), "
-    "i -> array_to_string(toks[i:i+2], ' ')))"
-)
-
-_CURATION_ORACLE = rf"""
+_CLEAN_CTES = rf"""
 WITH tok AS (
     SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents
 ), scored AS (
-    SELECT doc_id, text, toks FROM tok WHERE {_SCORE_SQL} >= {QUALITY_THRESHOLD!r}
-), ex AS (
+    SELECT doc_id, text, toks FROM tok WHERE {QUALITY_SCORE_SQL} >= {QUALITY_THRESHOLD!r}
+), exact AS (
     SELECT doc_id, toks FROM scored
     WHERE doc_id IN (SELECT MIN(doc_id) FROM scored GROUP BY md5(text))
 ), shingled AS (
-    SELECT doc_id, toks, {_SHINGLE_SQL} AS shingles FROM ex
+    SELECT doc_id, toks, {SHINGLES_SQL} AS shingles FROM exact
 ), clean AS (
     SELECT doc_id, toks, shingles FROM shingled
     WHERE len(list_intersect(shingles, {list(CONTAMINATION_BLOCKLIST)!r})) = 0
-), exu AS (
-    SELECT doc_id, unnest(shingles) AS s FROM clean
-), sizes AS (
-    SELECT doc_id, len(shingles) AS n FROM clean
-), pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-    FROM exu a JOIN exu b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), dups AS (
-    SELECT DISTINCT doc_b AS doc_id
-    FROM pairs
-    JOIN sizes ca ON ca.doc_id = doc_a
-    JOIN sizes cb ON cb.doc_id = doc_b
-    WHERE CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common) >= {CURATION_JACCARD_T!r}
+)"""
+
+
+def _curation_oracle(pairs_ctes: str) -> str:
+    """The curation CTE chain: the ``clean`` front, then ``pairs_ctes``
+    (near-dup CTEs over ``clean`` ending in ``pairs``), then drop the
+    higher doc_id of each pair and chunk the survivors."""
+    return (
+        _CLEAN_CTES
+        + pairs_ctes
+        + """
+, dups AS (SELECT DISTINCT doc_b AS doc_id FROM pairs
 ), survivors AS (
     SELECT doc_id, toks FROM clean
     WHERE doc_id NOT IN (SELECT doc_id FROM dups)
 )
-SELECT doc_id,
-       CAST(ci AS INT) AS chunk_idx,
-       array_to_string(toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}], ' ') AS chunk_text,
-       CAST(len(toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}]) AS INT) AS chunk_len
-FROM survivors,
-     unnest(range(0, CAST(ceil(greatest(len(toks) - {CHUNK_TOKENS - CHUNK_STRIDE}, 1) / {CHUNK_STRIDE}.0) AS BIGINT))) AS u(ci)
 """
+        + chunk_windows_sql("survivors")
+    )
 
 
-@query("curation_pipeline", _CURATION_ORACLE)
-def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-filter → exact-dedup → decontaminate → near-dedup →
-    chunk, composed lazily so Catalyst optimizes across stage
-    boundaries (the quality filter and decontamination fuse into the
-    scan stage; column pruning drops `text` as soon as `toks` exists).
-    """
+def _clean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality filter → exact dedup → decontamination, persisted as
+    (doc_id, toks, shingles): the diamond that the near-dup stage and
+    the chunker both read."""
     d = with_tokens(catalog.load_table_parallel(spark, sf_dir, "documents"))
 
     # 1. quality filter (map-side, fused into the scan)
@@ -154,120 +143,30 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size(F.array_intersect("shingles", blocked)) == 0)
         .select("doc_id", "toks", "shingles")
     )
-    clean = _shared(clean)  # diamond: read by the pair-join AND the chunker
-
-    # 4. near-dedup: exact n-gram Jaccard, drop the higher id of a pair
-    ex = clean.select("doc_id", F.explode("shingles").alias("s"))
-    a, b = ex.alias("a"), ex.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = clean.select("doc_id", F.size("shingles").alias("n"))
-    dups = (
-        pairs.join(sizes.alias("ca"), F.col("doc_a") == F.col("ca.doc_id"))
-        .join(sizes.alias("cb"), F.col("doc_b") == F.col("cb.doc_id"))
-        .filter(
-            F.col("n_common").cast("double") / (F.col("ca.n") + F.col("cb.n") - F.col("n_common"))
-            >= CURATION_JACCARD_T
-        )
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    survivors = _anti_join_survivors(clean, dups)
-
-    # 5. chunk survivors into training windows
-    n_chunks = F.ceil(
-        F.greatest(F.size("toks") - F.lit(CHUNK_TOKENS - CHUNK_STRIDE), F.lit(1))
-        / F.lit(float(CHUNK_STRIDE))
-    ).cast("int")
-    chunks = survivors.select(
-        "doc_id", "toks", F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias("_i", "chunk_idx")
-    )
-    piece = F.slice("toks", F.col("chunk_idx") * CHUNK_STRIDE + 1, CHUNK_TOKENS)
-    return chunks.select(
-        "doc_id",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.concat_ws(" ", piece).alias("chunk_text"),
-        F.size(piece).alias("chunk_len"),
-    )
+    return _shared(clean)
 
 
-# --------------------------------------------------------------------------
-# The scale variant: near-dedup stage replaced by MinHash + LSH
-# --------------------------------------------------------------------------
+def _curated(
+    spark: SparkSession, sf_dir: str, near_dup_pairs: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The whole pipeline with ``near_dup_pairs`` as its near-dedup
+    stage: drop the higher doc_id of each pair, chunk the survivors."""
+    clean = _clean(spark, sf_dir)
+    dups = near_dup_pairs(clean).select(F.col("doc_b").alias("doc_id")).distinct()
+    return chunk_windows(_anti_join_survivors(clean, dups))
 
 
-def _lsh_curation_oracle() -> str:
-    """The curation CTE chain with the near-dedup stage swapped for the
-    MinHash/LSH band join (same parameters and SQL generators as
-    operators/dedup.py::dedup_minhash_lsh, applied to the post-
-    decontamination survivor set)."""
-    from .dedup import (
-        _BASE_HASH_SQL,
-        _minhash_sql,
-        JACCARD_T,
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_K,
-    )
-
-    mh_cols = ",\n       ".join(f"{_minhash_sql(i)} AS mh{i}" for i in range(MINHASH_K))
-    band_selects = []
-    for b in range(LSH_BANDS):
-        members = " || '|' || ".join(f"mh{b * LSH_ROWS + r}" for r in range(LSH_ROWS))
-        band_selects.append(f"SELECT doc_id, {b} AS band_idx, {members} AS band_val FROM sig")
-    bands_union = "\nUNION ALL\n".join(band_selects)
-    jac = (
-        "CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
-        " / (len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles)))"
-    )
-    return rf"""
-WITH tok AS (
-    SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents
-), scored AS (
-    SELECT doc_id, text, toks FROM tok WHERE {_SCORE_SQL} >= {QUALITY_THRESHOLD!r}
-), ex AS (
-    SELECT doc_id, toks FROM scored
-    WHERE doc_id IN (SELECT MIN(doc_id) FROM scored GROUP BY md5(text))
-), shingled AS (
-    SELECT doc_id, toks, {_SHINGLE_SQL} AS shingles FROM ex
-), clean AS (
-    SELECT doc_id, toks, shingles FROM shingled
-    WHERE len(list_intersect(shingles, {list(CONTAMINATION_BLOCKLIST)!r})) = 0
-), hs AS (
-    SELECT doc_id, list_transform(shingles, s -> {_BASE_HASH_SQL}) AS hashes FROM clean
-), sig AS (
-    SELECT doc_id,
-       {mh_cols}
-    FROM hs
-), bands AS (
-{bands_union}
-), cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-), dups AS (
-    SELECT DISTINCT doc_b AS doc_id
-    FROM cand
-    JOIN clean sa ON sa.doc_id = doc_a
-    JOIN clean sb ON sb.doc_id = doc_b
-    WHERE {jac} >= {JACCARD_T!r}
-), survivors AS (
-    SELECT doc_id, toks FROM clean
-    WHERE doc_id NOT IN (SELECT doc_id FROM dups)
-)
-SELECT doc_id,
-       CAST(ci AS INT) AS chunk_idx,
-       array_to_string(toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}], ' ') AS chunk_text,
-       CAST(len(toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}]) AS INT) AS chunk_len
-FROM survivors,
-     unnest(range(0, CAST(ceil(greatest(len(toks) - {CHUNK_TOKENS - CHUNK_STRIDE}, 1) / {CHUNK_STRIDE}.0) AS BIGINT))) AS u(ci)
-"""
+@query("curation_pipeline", _curation_oracle(shingle_join_pairs_sql("clean")))
+def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-filter → exact-dedup → decontaminate → near-dedup →
+    chunk, composed lazily so Catalyst optimizes across stage
+    boundaries (the quality filter and decontamination fuse into the
+    scan stage; column pruning drops `text` as soon as `toks` exists).
+    The near-dedup stage is the exact n-gram Jaccard shingle join."""
+    return _curated(spark, sf_dir, shingle_join_pairs)
 
 
-@query("curation_pipeline_lsh", _lsh_curation_oracle())
+@query("curation_pipeline_lsh", _curation_oracle(lsh_pairs_sql("clean")))
 def curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """curation_pipeline with the near-dedup stage swapped for
     MinHash + LSH banding: candidates are pairs sharing a full band,
@@ -277,89 +176,4 @@ def curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the difference between a quadratic-ish shingle join and a
     bounded one; at 100 TB it is the only viable shape, which is why
     THIS variant is the benched headline."""
-    from .dedup import (
-        JACCARD_T,
-        LSH_BANDS,
-        LSH_ROWS,
-        _hashes_col,
-        _minhash_cols,
-    )
-
-    d = with_tokens(catalog.load_table_parallel(spark, sf_dir, "documents"))
-    d = d.filter(quality_score_col() >= QUALITY_THRESHOLD)
-    # window form, not groupBy+semi-join: the semi-join creates a
-    # diamond that recomputes the (CPU-heavy) tokenize+score stage for
-    # both the agg and the probe side — measured 2.2x slower at sf0.1.
-    # One shuffle on the content hash either way; the window keeps it
-    # single-pass.
-    wmin = Window.partitionBy(F.md5("text"))
-    d = (
-        d.withColumn("_min_id", F.min("doc_id").over(wmin))
-        .filter(F.col("doc_id") == F.col("_min_id"))
-        .drop("_min_id")
-    )
-    blocked = F.array(*[F.lit(s) for s in CONTAMINATION_BLOCKLIST])
-    clean = (
-        d.withColumn("shingles", F.array_distinct(token_shingles("toks", k=3)))
-        .filter(F.size(F.array_intersect("shingles", blocked)) == 0)
-        .select("doc_id", "toks", "shingles")
-    )
-    clean = _shared(clean)
-
-    sig = clean.withColumn("hashes", _hashes_col()).select("doc_id", *_minhash_cols())
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.concat_ws("|", *[F.col(f"mh{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]).alias(
-                "band_val"
-            ),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    # r18 opt: persist the band table — it feeds both sides of the
-    # self-join and the signature pipeline above the shared scan was
-    # otherwise evaluated twice (see operators/dedup.py, same fix).
-    bands = _shared(
-        sig.select("doc_id", F.explode(F.array(*band_structs)).alias("band")).select(
-            "doc_id",
-            F.col("band.band_idx").alias("band_idx"),
-            F.col("band.band_val").alias("band_val"),
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa, sb = clean.alias("sa"), clean.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.shingles"), F.col("sb.shingles")))
-    union = F.size(F.col("sa.shingles")) + F.size(F.col("sb.shingles")) - inter
-    dups = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .filter(inter.cast("double") / union >= JACCARD_T)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    survivors = _anti_join_survivors(clean, dups)
-
-    n_chunks = F.ceil(
-        F.greatest(F.size("toks") - F.lit(CHUNK_TOKENS - CHUNK_STRIDE), F.lit(1))
-        / F.lit(float(CHUNK_STRIDE))
-    ).cast("int")
-    chunks = survivors.select(
-        "doc_id", "toks", F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias("_i", "chunk_idx")
-    )
-    piece = F.slice("toks", F.col("chunk_idx") * CHUNK_STRIDE + 1, CHUNK_TOKENS)
-    return chunks.select(
-        "doc_id",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.concat_ws(" ", piece).alias("chunk_text"),
-        F.size(piece).alias("chunk_len"),
-    )
+    return _curated(spark, sf_dir, lsh_pairs)

@@ -17,6 +17,17 @@ Five strategies, each the standard scale shape:
 - embedding cos  exact pairwise cosine ≥ τ; the LSH-bucketed form for
                  scale is in operators/similarity.py.
 
+The near-dup pair stages are public helpers over a (doc_id, shingles)
+frame, each with a DuckDB twin that the oracles are built from, so
+every query (and operators/curation.py) runs the same code:
+
+- shingle_join_pairs / shingle_join_pairs_sql: the exact shingle join;
+- minhash_bands / minhash_bands_sql: signature + LSH band rows;
+- lsh_candidates: the band self-join;
+- jaccard_verify / jaccard_verify_sql: exact-Jaccard check of
+  candidate pairs;
+- lsh_pairs / lsh_pairs_sql: bands (persisted) → candidates → verify.
+
 Determinism across engines: all hashing is md5-prefix based (identical
 hex both sides); all float folds are sequential left folds (verified
 bit-identical Spark vs DuckDB).
@@ -28,7 +39,12 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text_fn import hex_to_long_spark_sql, hex_to_long_sql, token_shingles
+from ..functions.text_fn import (
+    SHINGLES_SQL,
+    hex_to_long_spark_sql,
+    hex_to_long_sql,
+    token_shingles,
+)
 from ..plans.registry import query
 from ..sources import catalog
 
@@ -40,16 +56,12 @@ SIMHASH_BITS = 32
 SIMHASH_MAX_HAMMING = 6
 COSINE_DUP_T = 0.45
 
-_SHINGLE_SQL = (
-    "list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)), "
-    "i -> array_to_string(toks[i:i+2], ' ')))"
-)
 _TOK_CTE = r"""
 WITH tok AS (
     SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
 ), sh AS (
     SELECT doc_id, {shingles} AS shingles FROM tok
-)""".format(shingles=_SHINGLE_SQL)
+)""".format(shingles=SHINGLES_SQL)
 
 
 def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,33 +112,13 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # N-gram Jaccard (exact pairwise via shingle join)
 # --------------------------------------------------------------------------
 
-_JACCARD_ORACLE = (
-    _TOK_CTE
-    + f"""
-, ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-sc AS (SELECT doc_id, len(shingles) AS n FROM sh),
-common AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-    FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
-       CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common) AS jaccard
-FROM common
-JOIN sc ca ON ca.doc_id = doc_a
-JOIN sc cb ON cb.doc_id = doc_b
-WHERE CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common) >= {JACCARD_T!r}
-"""
-)
-
-
-@query("dedup_ngram_jaccard", _JACCARD_ORACLE)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup pairs: Jaccard over distinct 3-token shingles.
-
-    Shuffles once on the shingle (the join key); hot shingles are the
-    scale risk — dedup_minhash_lsh is the bounded-cost variant."""
-    sh = _shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles"))
+def shingle_join_pairs(sh: DataFrame) -> DataFrame:
+    """Exact near-dup pairs of a (doc_id, shingles) frame: explode the
+    shingles, equi-join on the shingle, count the shared shingles of
+    each (doc_a < doc_b) pair and keep Jaccard >= JACCARD_T as
+    (doc_a, doc_b, jaccard). Reads ``sh`` twice, so callers persist it.
+    Shuffles once on the shingle; hot shingles are the scale risk that
+    lsh_pairs bounds."""
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     sc = sh.select("doc_id", F.size("shingles").alias("n"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -145,6 +137,37 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= JACCARD_T)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
+
+
+def shingle_join_pairs_sql(src: str) -> str:
+    """DuckDB twin of :func:`shingle_join_pairs` over the relation
+    ``src`` of (doc_id, shingles): CTEs (leading comma) ending in
+    ``pairs(doc_a, doc_b, jaccard)``."""
+    jac = "CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common)"
+    return f"""
+, shingle_rows AS (SELECT doc_id, unnest(shingles) AS s FROM {src}),
+shingle_counts AS (SELECT doc_id, len(shingles) AS n FROM {src}),
+common AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+    FROM shingle_rows a JOIN shingle_rows b ON a.s = b.s AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+), pairs AS (
+    SELECT doc_a, doc_b, {jac} AS jaccard
+    FROM common
+    JOIN shingle_counts ca ON ca.doc_id = doc_a
+    JOIN shingle_counts cb ON cb.doc_id = doc_b
+    WHERE {jac} >= {JACCARD_T!r}
+)"""
+
+
+_JACCARD_ORACLE = _TOK_CTE + shingle_join_pairs_sql("sh") + "\nSELECT * FROM pairs\n"
+
+
+@query("dedup_ngram_jaccard", _JACCARD_ORACLE)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact near-dup pairs: Jaccard over distinct 3-token shingles
+    (shingle_join_pairs over the whole corpus)."""
+    return shingle_join_pairs(_shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles")))
 
 
 # --------------------------------------------------------------------------
@@ -178,75 +201,26 @@ _BASE_HASH_SQL = hex_to_long_sql("substr(md5(s), 1, 8)")
 _BASE_HASH_SPARK_SQL = hex_to_long_spark_sql("substr(md5(s), 1, 8)")
 
 
-def _hashes_col() -> F.Column:
-    return F.expr(f"transform(shingles, s -> {_BASE_HASH_SPARK_SQL})")
-
-
-def _minhash_cols(k: int = MINHASH_K) -> list[F.Column]:
-    return [
-        F.array_min(
-            F.expr(f"transform(hashes, h -> ({a} * h + {b}) % {MINHASH_PRIME})")
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(_minhash_params(k))
-    ]
-
-
-def _minhash_sql(i: int, k: int = MINHASH_K) -> str:
-    a, b = _minhash_params(k)[i]
-    return f"list_min(list_transform(hashes, h -> ({a} * h + {b}) % {MINHASH_PRIME}))"
-
-
-def _minhash_lsh_oracle(k: int = MINHASH_K, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> str:
-    mh_cols = ",\n       ".join(f"{_minhash_sql(i, k)} AS mh{i}" for i in range(k))
-    band_selects = []
-    for b in range(bands):
-        members = " || '|' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        band_selects.append(f"SELECT doc_id, {b} AS band_idx, {members} AS band_val FROM sig")
-    bands_union = "\nUNION ALL\n".join(band_selects)
-    return (
-        _TOK_CTE
-        + f"""
-, hs AS (
-    SELECT doc_id, list_transform(shingles, s -> {_BASE_HASH_SQL}) AS hashes FROM sh
-), sig AS (
-    SELECT doc_id,
-       {mh_cols}
-    FROM hs
-), bands AS (
-{bands_union}
-), cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b,
-       CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-            / (len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles))) AS jaccard
-FROM cand
-JOIN sh sa ON sa.doc_id = doc_a
-JOIN sh sb ON sb.doc_id = doc_b
-WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-      / (len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles))) >= {JACCARD_T!r}
-"""
-    )
-
-
-def _minhash_lsh_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = MINHASH_K,
-    n_bands: int = LSH_BANDS,
-    n_rows: int = LSH_ROWS,
+def minhash_bands(
+    sh: DataFrame, k: int = MINHASH_K, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS
 ) -> DataFrame:
-    """Shared MinHash-LSH pipeline with the banding as parameters:
-    signatures of k min-hashes, candidates from full-band equality
-    (n_bands bands x n_rows rows), exact-Jaccard verification. The
-    shipped (16, 4x4) and high-recall (24, 8x3) queries are both this
-    function — one implementation, two operating points on the same
-    measured S-curve (DEDUP_EVAL.json)."""
-    sh = _shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles"))
-    sig = sh.withColumn("hashes", _hashes_col()).select(
-        "doc_id", "shingles", *_minhash_cols(k)
+    """LSH band rows (doc_id, band_idx, band_val) of a (doc_id, shingles)
+    frame: one base hash per shingle, k affine min-hashes over it, and
+    n_bands bands of n_rows min-hashes joined with '|'. Two documents
+    are candidates when they share a (band_idx, band_val). Not
+    persisted: a caller that reads the bands twice persists them, one
+    that filters them (dedup_incremental_lsh) lets the filter push below
+    the explode."""
+    sig = sh.withColumn(
+        "hashes", F.expr(f"transform(shingles, s -> {_BASE_HASH_SPARK_SQL})")
+    ).select(
+        "doc_id",
+        *[
+            F.array_min(
+                F.expr(f"transform(hashes, h -> ({a} * h + {b}) % {MINHASH_PRIME})")
+            ).alias(f"mh{i}")
+            for i, (a, b) in enumerate(_minhash_params(k))
+        ],
     )
     band_structs = [
         F.struct(
@@ -257,23 +231,18 @@ def _minhash_lsh_pairs(
         )
         for b in range(n_bands)
     ]
-    # r18 opt: the band table feeds BOTH sides of the self-join below,
-    # and only the scan-level exchange is reused between them — the
-    # md5 + k-minhash signature pipeline above it was evaluated twice
-    # (once for the broadcast build, once for the probe). Persisting
-    # the (doc_id, band) rows halves the signature compute (measured
-    # 1.13-1.20 s -> 0.94 s at sf0.1, identical pairs); at 100 TB this
-    # is the same "materialize the signature table once" move as
-    # _shared's docstring.
-    bands = _shared(
-        sig.select("doc_id", F.explode(F.array(*band_structs)).alias("band")).select(
-            "doc_id",
-            F.col("band.band_idx").alias("band_idx"),
-            F.col("band.band_val").alias("band_val"),
-        )
+    return sig.select("doc_id", F.explode(F.array(*band_structs)).alias("band")).select(
+        "doc_id",
+        F.col("band.band_idx").alias("band_idx"),
+        F.col("band.band_val").alias("band_val"),
     )
+
+
+def lsh_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, that share a band:
+    the band self-join, before verification."""
     a, b = bands.alias("a"), bands.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -283,16 +252,107 @@ def _minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
+
+
+def jaccard_verify(
+    cand: DataFrame, sh: DataFrame, left: str = "doc_a", right: str = "doc_b"
+) -> DataFrame:
+    """Keep the candidate pairs (left, right) whose exact shingle-set
+    Jaccard, looked up in ``sh`` (doc_id, shingles), is >= JACCARD_T:
+    (left, right, jaccard). Every MinHash-LSH pair passes this check,
+    so precision is 1.0 by construction."""
     sa, sb = sh.alias("sa"), sh.alias("sb")
     inter = F.size(F.array_intersect(F.col("sa.shingles"), F.col("sb.shingles")))
     union = F.size(F.col("sa.shingles")) + F.size(F.col("sb.shingles")) - inter
     jac = inter.cast("double") / union
     return (
-        cand.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
+        cand.join(sa, F.col("sa.doc_id") == F.col(left))
+        .join(sb, F.col("sb.doc_id") == F.col(right))
         .filter(jac >= JACCARD_T)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .select(left, right, jac.alias("jaccard"))
     )
+
+
+def lsh_pairs(
+    sh: DataFrame, k: int = MINHASH_K, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS
+) -> DataFrame:
+    """MinHash-LSH near-dup pairs (doc_a, doc_b, jaccard) of a persisted
+    (doc_id, shingles) frame: bands, candidate self-join, verify. The
+    shipped (16, 4x4) and high-recall (24, 8x3) queries and the LSH
+    curation pipeline are all this function, at two operating points
+    of the same measured S-curve (DEDUP_EVAL.json).
+
+    The band table feeds both sides of the self-join, and only the
+    scan-level exchange is reused between them, so without the persist
+    the md5 + k-minhash signature pipeline runs twice (once for the
+    broadcast build, once for the probe). Persisting the band rows
+    halves the signature compute (measured 1.13-1.20 s -> 0.94 s for
+    dedup_minhash_lsh at sf0.1, identical pairs); at 100 TB this is the
+    same "materialize the signature table once" move as _shared."""
+    bands = _shared(minhash_bands(sh, k, n_bands, n_rows))
+    return jaccard_verify(lsh_candidates(bands), sh)
+
+
+def minhash_bands_sql(
+    src: str, k: int = MINHASH_K, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS
+) -> str:
+    """DuckDB twin of :func:`minhash_bands` over the relation ``src`` of
+    (doc_id, shingles): the ``hs``, ``sig`` and ``bands`` CTEs, with a
+    leading comma."""
+    mh_cols = ",\n       ".join(
+        f"list_min(list_transform(hashes, h -> ({a} * h + {b}) % {MINHASH_PRIME})) AS mh{i}"
+        for i, (a, b) in enumerate(_minhash_params(k))
+    )
+    bands_union = "\nUNION ALL\n".join(
+        f"SELECT doc_id, {b} AS band_idx, "
+        + " || '|' || ".join(f"mh{b * n_rows + r}" for r in range(n_rows))
+        + " AS band_val FROM sig"
+        for b in range(n_bands)
+    )
+    return f"""
+, hs AS (
+    SELECT doc_id, list_transform(shingles, s -> {_BASE_HASH_SQL}) AS hashes FROM {src}
+), sig AS (
+    SELECT doc_id,
+       {mh_cols}
+    FROM hs
+), bands AS (
+{bands_union}
+)"""
+
+
+def jaccard_verify_sql(src: str, left: str = "doc_a", right: str = "doc_b") -> str:
+    """DuckDB twin of :func:`jaccard_verify`: a SELECT of (left, right,
+    jaccard) over the ``cand`` CTE, shingles looked up in ``src``."""
+    inter = "len(list_intersect(sa.shingles, sb.shingles))"
+    jac = f"CAST({inter} AS DOUBLE) / (len(sa.shingles) + len(sb.shingles) - {inter})"
+    return f"""SELECT {left}, {right}, {jac} AS jaccard
+FROM cand
+JOIN {src} sa ON sa.doc_id = {left}
+JOIN {src} sb ON sb.doc_id = {right}
+WHERE {jac} >= {JACCARD_T!r}"""
+
+
+def lsh_pairs_sql(
+    src: str, k: int = MINHASH_K, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS
+) -> str:
+    """DuckDB twin of :func:`lsh_pairs`: CTEs (leading comma) over
+    ``src`` ending in ``pairs(doc_a, doc_b, jaccard)``."""
+    return (
+        minhash_bands_sql(src, k, n_bands, n_rows)
+        + f"""
+, cand AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM bands a JOIN bands b
+      ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+), pairs AS (
+{jaccard_verify_sql(src)}
+)"""
+    )
+
+
+def _minhash_lsh_oracle(k: int = MINHASH_K, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> str:
+    return _TOK_CTE + lsh_pairs_sql("sh", k, bands, rows) + "\nSELECT * FROM pairs\n"
 
 
 @query("dedup_minhash_lsh", _minhash_lsh_oracle())
@@ -311,7 +371,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     below is the measured high-recall operating point for pipelines
     that need the near-threshold dups too. The oracle replicates the
     same bands, making the check exact."""
-    return _minhash_lsh_pairs(spark, sf_dir, MINHASH_K, LSH_BANDS, LSH_ROWS)
+    return lsh_pairs(_shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles")))
 
 
 #: High-recall banding: 24 hashes as 8 bands x 3 rows. P(candidate) =
@@ -339,7 +399,8 @@ def dedup_minhash_lsh_hr(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume for recall, never reintroducing the n² scan. The affine
     hash family is a seeded superset of the shipped 16, so the two
     signatures share base hashes and the oracles cannot drift."""
-    return _minhash_lsh_pairs(spark, sf_dir, MINHASH_HR_K, LSH_HR_BANDS, LSH_HR_ROWS)
+    sh = _shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles"))
+    return lsh_pairs(sh, MINHASH_HR_K, LSH_HR_BANDS, LSH_HR_ROWS)
 
 
 # --------------------------------------------------------------------------
@@ -1127,43 +1188,22 @@ def split_leakage_safe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INCR_NEW_MOD = 10
 
 
-def _incremental_lsh_oracle() -> str:
-    mh_cols = ",\n       ".join(f"{_minhash_sql(i)} AS mh{i}" for i in range(MINHASH_K))
-    band_selects = []
-    for b in range(LSH_BANDS):
-        members = " || '|' || ".join(f"mh{b * LSH_ROWS + r}" for r in range(LSH_ROWS))
-        band_selects.append(f"SELECT doc_id, {b} AS band_idx, {members} AS band_val FROM sig")
-    bands_union = "\nUNION ALL\n".join(band_selects)
-    return (
-        _TOK_CTE
-        + f"""
-, hs AS (
-    SELECT doc_id, list_transform(shingles, s -> {_BASE_HASH_SQL}) AS hashes FROM sh
-), sig AS (
-    SELECT doc_id,
-       {mh_cols}
-    FROM hs
-), bands AS (
-{bands_union}
-), cand AS (
+_INCREMENTAL_LSH_ORACLE = (
+    _TOK_CTE
+    + minhash_bands_sql("sh")
+    + f"""
+, cand AS (
     SELECT DISTINCT n.doc_id AS doc_new, c.doc_id AS doc_corpus
     FROM bands n JOIN bands c
       ON n.band_idx = c.band_idx AND n.band_val = c.band_val
      AND n.doc_id % {_INCR_NEW_MOD} = 0 AND c.doc_id % {_INCR_NEW_MOD} <> 0
 )
-SELECT doc_new, doc_corpus,
-       CAST(len(list_intersect(sn.shingles, sc.shingles)) AS DOUBLE)
-            / (len(sn.shingles) + len(sc.shingles) - len(list_intersect(sn.shingles, sc.shingles))) AS jaccard
-FROM cand
-JOIN sh sn ON sn.doc_id = doc_new
-JOIN sh sc ON sc.doc_id = doc_corpus
-WHERE CAST(len(list_intersect(sn.shingles, sc.shingles)) AS DOUBLE)
-      / (len(sn.shingles) + len(sc.shingles) - len(list_intersect(sn.shingles, sc.shingles))) >= {JACCARD_T!r}
 """
-    )
+    + jaccard_verify_sql("sh", "doc_new", "doc_corpus")
+)
 
 
-@query("dedup_incremental_lsh", _incremental_lsh_oracle())
+@query("dedup_incremental_lsh", _INCREMENTAL_LSH_ORACLE)
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time near-dedup: which documents of an ARRIVING batch are
     near-duplicates of the EXISTING corpus — the incremental shape a
@@ -1183,25 +1223,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental_unprocessed, at near-dup rather than exact-key
     granularity."""
     sh = _shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles"))
-    sig = sh.withColumn("hashes", _hashes_col()).select(
-        "doc_id", "shingles", *_minhash_cols()
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.concat_ws("|", *[F.col(f"mh{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]).alias(
-                "band_val"
-            ),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select(
-        "doc_id",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_val").alias("band_val"),
-    )
+    bands = minhash_bands(sh)
     new_b = bands.filter(F.col("doc_id") % _INCR_NEW_MOD == 0).alias("n")
     corp_b = bands.filter(F.col("doc_id") % _INCR_NEW_MOD != 0).alias("c")
     cand = (
@@ -1213,13 +1235,4 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("n.doc_id").alias("doc_new"), F.col("c.doc_id").alias("doc_corpus"))
         .distinct()
     )
-    sn, sc = sh.alias("sn"), sh.alias("sc")
-    inter = F.size(F.array_intersect(F.col("sn.shingles"), F.col("sc.shingles")))
-    union = F.size(F.col("sn.shingles")) + F.size(F.col("sc.shingles")) - inter
-    jac = inter.cast("double") / union
-    return (
-        cand.join(sn, F.col("sn.doc_id") == F.col("doc_new"))
-        .join(sc, F.col("sc.doc_id") == F.col("doc_corpus"))
-        .filter(jac >= JACCARD_T)
-        .select("doc_new", "doc_corpus", jac.alias("jaccard"))
-    )
+    return jaccard_verify(cand, sh, "doc_new", "doc_corpus")

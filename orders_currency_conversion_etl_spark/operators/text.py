@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text_fn import LANG_MARKERS, STOPWORDS
+from ..functions.text_fn import LANG_MARKERS, SHINGLES_SQL, STOPWORDS
 from ..plans.registry import query
 from ..sources import catalog
 
@@ -64,17 +64,19 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: DuckDB twin of :func:`quality_score_col`.
+QUALITY_SCORE_SQL = rf"""(
+    CAST(0.4 AS DOUBLE) * least(CAST(len(toks) AS DOUBLE) / CAST(200.0 AS DOUBLE), CAST(1.0 AS DOUBLE))
+  + CAST(0.3 AS DOUBLE) * (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks))
+  + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(len(list_filter(toks, t -> list_contains({list(STOPWORDS)!r}, t))) AS DOUBLE) / len(toks))
+)"""
+
 _QUALITY_ORACLE = rf"""
 WITH tok AS (
     SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks, text
     FROM documents
 )
-SELECT doc_id,
-       CAST(
-         CAST(0.4 AS DOUBLE) * least(CAST(len(toks) AS DOUBLE) / CAST(200.0 AS DOUBLE), CAST(1.0 AS DOUBLE))
-       + CAST(0.3 AS DOUBLE) * (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks))
-       + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(len(list_filter(toks, t -> list_contains({list(STOPWORDS)!r}, t))) AS DOUBLE) / len(toks))
-       AS DOUBLE) AS quality_score
+SELECT doc_id, CAST({QUALITY_SCORE_SQL} AS DOUBLE) AS quality_score
 FROM tok
 """
 
@@ -250,26 +252,11 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 CHUNK_TOKENS = 50
 CHUNK_STRIDE = 40  # 10-token overlap between consecutive chunks
 
-_CHUNK_ORACLE = rf"""
-WITH tok AS (
-    SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-)
-SELECT doc_id,
-       CAST(ci AS INT) AS chunk_idx,
-       array_to_string(toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}], ' ') AS chunk_text,
-       CAST(len(toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}]) AS INT) AS chunk_len
-FROM tok,
-     unnest(range(0, CAST(ceil(greatest(len(toks) - {CHUNK_TOKENS - CHUNK_STRIDE}, 1) / {CHUNK_STRIDE}.0) AS BIGINT))) AS u(ci)
-"""
 
-
-@query("text_chunk_documents", _CHUNK_ORACLE)
-def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking: 50-token windows every 40 tokens (10
-    overlap) — the 1-row → N-chunks reshape every pretraining pipeline
-    runs before tokenization. Executor-side explode, no shuffle; chunk
-    count scales with corpus tokens, not document count."""
-    d = with_tokens(_docs(spark, sf_dir))
+def chunk_windows(d: DataFrame) -> DataFrame:
+    """Sliding-window chunks (doc_id, chunk_idx, chunk_text, chunk_len)
+    of a frame with ``doc_id`` and ``toks``: CHUNK_TOKENS-token windows
+    every CHUNK_STRIDE tokens, at least one chunk per document."""
     n_chunks = F.ceil(
         F.greatest(F.size("toks") - F.lit(CHUNK_TOKENS - CHUNK_STRIDE), F.lit(1))
         / F.lit(float(CHUNK_STRIDE))
@@ -286,6 +273,35 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(" ", piece).alias("chunk_text"),
         F.size(piece).alias("chunk_len"),
     )
+
+
+def chunk_windows_sql(src: str) -> str:
+    """DuckDB twin of :func:`chunk_windows`: a SELECT over the relation
+    ``src`` of (doc_id, toks)."""
+    piece = f"toks[ci*{CHUNK_STRIDE} + 1 : ci*{CHUNK_STRIDE} + {CHUNK_TOKENS}]"
+    return f"""SELECT doc_id,
+       CAST(ci AS INT) AS chunk_idx,
+       array_to_string({piece}, ' ') AS chunk_text,
+       CAST(len({piece}) AS INT) AS chunk_len
+FROM {src},
+     unnest(range(0, CAST(ceil(greatest(len(toks) - {CHUNK_TOKENS - CHUNK_STRIDE}, 1) / {CHUNK_STRIDE}.0) AS BIGINT))) AS u(ci)
+"""
+
+
+_CHUNK_ORACLE = r"""
+WITH tok AS (
+    SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
+)
+""" + chunk_windows_sql("tok")
+
+
+@query("text_chunk_documents", _CHUNK_ORACLE)
+def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window chunking: 50-token windows every 40 tokens (10
+    overlap) — the 1-row → N-chunks reshape every pretraining pipeline
+    runs before tokenization. Executor-side explode, no shuffle; chunk
+    count scales with corpus tokens, not document count."""
+    return chunk_windows(with_tokens(_docs(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -306,11 +322,7 @@ _DECONTAM_ORACLE = rf"""
 WITH tok AS (
     SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
 ), sh AS (
-    SELECT doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 1)),
-               i -> array_to_string(toks[i:i+2], ' '))) AS shingles
-    FROM tok
+    SELECT doc_id, {SHINGLES_SQL} AS shingles FROM tok
 )
 SELECT doc_id,
        CAST(len(list_intersect(shingles, {list(CONTAMINATION_BLOCKLIST)!r})) AS INT) AS n_blocked,

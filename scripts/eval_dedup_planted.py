@@ -49,41 +49,15 @@ BANDS = (0.03, 0.05, 0.08, 0.15)
 
 def _lsh_candidate_count(spark, sf_dir, k=None, n_bands=None, n_rows=None) -> int:
     """Measured LSH candidate pairs BEFORE verification (the cost the
-    banding exists to bound) — the registered query's own band join,
-    reusing dedup.py's pieces."""
-    from pyspark.sql import functions as F
-
+    banding exists to bound): the registered queries' own band rows and
+    band self-join, from dedup.py's shared helpers."""
     from orders_currency_conversion_etl_spark.operators import dedup as dd
 
-    k = k or dd.MINHASH_K
-    n_bands = n_bands or dd.LSH_BANDS
-    n_rows = n_rows or dd.LSH_ROWS
     sh = dd._docs_shingled(spark, sf_dir).select("doc_id", "shingles")
-    sig = sh.withColumn("hashes", dd._hashes_col()).select("doc_id", *dd._minhash_cols(k))
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.concat_ws(
-                "|", *[F.col(f"mh{b * n_rows + r}") for r in range(n_rows)]
-            ).alias("band_val"),
-        )
-        for b in range(n_bands)
-    ]
-    bands = sig.select("doc_id", F.explode(F.array(*band_structs)).alias("band")).select(
-        "doc_id", F.col("band.band_idx").alias("bi"), F.col("band.band_val").alias("bv")
+    bands = dd.minhash_bands(
+        sh, k or dd.MINHASH_K, n_bands or dd.LSH_BANDS, n_rows or dd.LSH_ROWS
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bi") == F.col("b.bi"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id"), F.col("b.doc_id"))
-        .distinct()
-        .count()
-    )
+    return dd.lsh_candidates(bands).count()
 
 
 def main() -> int:
