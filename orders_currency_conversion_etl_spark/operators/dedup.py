@@ -210,8 +210,13 @@ def minhash_bands(
     are candidates when they share a (band_idx, band_val). Not
     persisted: a caller that reads the bands twice persists them, one
     that filters them (dedup_incremental_lsh) lets the filter push below
-    the explode."""
-    sig = sh.withColumn(
+    the explode.
+
+    Documents with no shingles (fewer than 3 tokens) get no band rows.
+    Their min-hashes would be NULL, concat_ws would skip the NULLs, and
+    every such document would share the band value "" and then divide
+    0 by 0 in verification."""
+    sig = sh.filter(F.size("shingles") > 0).withColumn(
         "hashes", F.expr(f"transform(shingles, s -> {_BASE_HASH_SPARK_SQL})")
     ).select(
         "doc_id",
@@ -298,7 +303,9 @@ def minhash_bands_sql(
 ) -> str:
     """DuckDB twin of :func:`minhash_bands` over the relation ``src`` of
     (doc_id, shingles): the ``hs``, ``sig`` and ``bands`` CTEs, with a
-    leading comma."""
+    leading comma. It needs no empty-shingle filter: ``list_min([])`` is
+    NULL and ``||`` propagates it, so a shingle-less document gets NULL
+    bands that join nothing."""
     mh_cols = ",\n       ".join(
         f"list_min(list_transform(hashes, h -> ({a} * h + {b}) % {MINHASH_PRIME})) AS mh{i}"
         for i, (a, b) in enumerate(_minhash_params(k))
