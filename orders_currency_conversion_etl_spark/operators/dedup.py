@@ -65,12 +65,14 @@ WITH tok AS (
 
 
 def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + distinct 3-token shingles per doc (scan spread
-    across all cores — shingling is CPU-bound, see load_table_parallel)."""
+    """(doc_id, shingles): the distinct 3-token shingles of each
+    document (scan spread across all cores — shingling is CPU-bound,
+    see load_table_parallel)."""
     docs = catalog.load_table_parallel(spark, sf_dir, "documents")
     return (
         docs.withColumn("toks", F.split(F.trim(F.col("text")), r"\s+"))
         .withColumn("shingles", F.array_distinct(token_shingles("toks", k=3)))
+        .select("doc_id", "shingles")
     )
 
 
@@ -167,7 +169,7 @@ _JACCARD_ORACLE = _TOK_CTE + shingle_join_pairs_sql("sh") + "\nSELECT * FROM pai
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs: Jaccard over distinct 3-token shingles
     (shingle_join_pairs over the whole corpus)."""
-    return shingle_join_pairs(_shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles")))
+    return shingle_join_pairs(_shared(_docs_shingled(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -378,7 +380,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     below is the measured high-recall operating point for pipelines
     that need the near-threshold dups too. The oracle replicates the
     same bands, making the check exact."""
-    return lsh_pairs(_shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles")))
+    return lsh_pairs(_shared(_docs_shingled(spark, sf_dir)))
 
 
 #: High-recall banding: 24 hashes as 8 bands x 3 rows. P(candidate) =
@@ -406,7 +408,7 @@ def dedup_minhash_lsh_hr(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume for recall, never reintroducing the n² scan. The affine
     hash family is a seeded superset of the shipped 16, so the two
     signatures share base hashes and the oracles cannot drift."""
-    sh = _shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles"))
+    sh = _shared(_docs_shingled(spark, sf_dir))
     return lsh_pairs(sh, MINHASH_HR_K, LSH_HR_BANDS, LSH_HR_ROWS)
 
 
@@ -1229,7 +1231,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops the flagged docs from the ingest — same contract as
     incremental_unprocessed, at near-dup rather than exact-key
     granularity."""
-    sh = _shared(_docs_shingled(spark, sf_dir).select("doc_id", "shingles"))
+    sh = _shared(_docs_shingled(spark, sf_dir))
     bands = minhash_bands(sh)
     new_b = bands.filter(F.col("doc_id") % _INCR_NEW_MOD == 0).alias("n")
     corp_b = bands.filter(F.col("doc_id") % _INCR_NEW_MOD != 0).alias("c")

@@ -53,9 +53,11 @@ def _lsh_candidate_count(spark, sf_dir, k=None, n_bands=None, n_rows=None) -> in
     band self-join, from dedup.py's shared helpers."""
     from orders_currency_conversion_etl_spark.operators import dedup as dd
 
-    sh = dd._docs_shingled(spark, sf_dir).select("doc_id", "shingles")
     bands = dd.minhash_bands(
-        sh, k or dd.MINHASH_K, n_bands or dd.LSH_BANDS, n_rows or dd.LSH_ROWS
+        dd._docs_shingled(spark, sf_dir),
+        k or dd.MINHASH_K,
+        n_bands or dd.LSH_BANDS,
+        n_rows or dd.LSH_ROWS,
     )
     return dd.lsh_candidates(bands).count()
 
