@@ -45,6 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources import catalog
 from .dedup import dot_cols
 from .similarity import EMB_DIM, l2sq_cols
 
@@ -178,7 +179,7 @@ def make_planted_corpus(
 
 def load_corpus(spark: SparkSession, path: str) -> DataFrame:
     """(vec_id, embedding, nrm) from a planted-corpus parquet."""
-    e = spark.read.parquet(path).select("vec_id", "embedding")
+    e = catalog.read_parquet(spark, path).select("vec_id", "embedding")
     return e.withColumn(
         "nrm", F.sqrt(dot_cols(F.col("embedding"), F.col("embedding")))
     )

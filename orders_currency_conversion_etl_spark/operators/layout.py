@@ -240,7 +240,7 @@ def build_file_manifest(spark: SparkSession, path: str, cols: list[str]) -> Data
     for c in cols:
         aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
     return (
-        spark.read.parquet(path)
+        catalog.read_parquet(spark, path)
         .groupBy(F.input_file_name().alias("file"))
         .agg(*aggs)
     )
@@ -272,8 +272,8 @@ def read_pruned(
         first = manifest.select("file").first()
         if first is None:
             raise ValueError("empty manifest")
-        return spark.read.parquet(first["file"]).filter(F.lit(False))
-    return spark.read.parquet(*keep).filter(F.col(col).between(lo, hi))
+        return catalog.read_parquet(spark, first["file"]).filter(F.lit(False))
+    return catalog.read_parquet(spark, *keep).filter(F.col(col).between(lo, hi))
 
 
 # --------------------------------------------------------------------------

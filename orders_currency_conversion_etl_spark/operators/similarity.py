@@ -412,7 +412,7 @@ def knn_ivf_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = build_ivf_index(spark, sf_dir)
-    cell = spark.read.parquet(os.path.join(path, "cells")).select(
+    cell = catalog.read_parquet(spark, os.path.join(path, "cells")).select(
         "vec_id", "embedding", "nrm", "cid"
     )
     return _ivf_search(cell)
@@ -513,7 +513,7 @@ def knn_lsh_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = build_lsh_index(spark, sf_dir)
-    d = spark.read.parquet(os.path.join(path, "buckets")).select(
+    d = catalog.read_parquet(spark, os.path.join(path, "buckets")).select(
         "vec_id", "embedding", "nrm", "bucket"
     )
     q = d.filter(F.col("vec_id").isin(*QUERY_IDS)).select(

@@ -708,7 +708,7 @@ def read_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = build_quantile_state(spark, sf_dir)
-    return spark.read.parquet(os.path.join(path, "hist"))
+    return catalog.read_parquet(spark, os.path.join(path, "hist"))
 
 
 def _qs_rolling_from_state(state: DataFrame) -> DataFrame:

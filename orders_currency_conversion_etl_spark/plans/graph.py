@@ -296,7 +296,7 @@ def build_graph_edges(spark: SparkSession, sf_dir: str, path: str | None = None)
         # Derive adj from the just-written parquet, not oriented's
         # lineage — otherwise the orientation joins execute a second
         # time for this write (r7 ADVICE).
-        oriented_persisted = spark.read.parquet(os.path.join(tmp, "oriented"))
+        oriented_persisted = catalog.read_parquet(spark, os.path.join(tmp, "oriented"))
         adj = oriented_persisted.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
         adj.write.mode("overwrite").parquet(os.path.join(tmp, "adj"))
 
@@ -327,8 +327,8 @@ def pagerank_parts_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.unpersist()
         except Exception:
             pass  # session stopped or already evicted; nothing to free
-    contrib_src = spark.read.parquet(os.path.join(path, "contrib")).persist()
-    deg = spark.read.parquet(os.path.join(path, "deg"))
+    contrib_src = catalog.read_parquet(spark, os.path.join(path, "contrib")).persist()
+    deg = catalog.read_parquet(spark, os.path.join(path, "deg"))
     n = deg.count()  # |nodes|: the only driver scalar, off the tiny node table
     _PAGERANK_PERSISTED[key] = (contrib_src,)
     ranks = deg.select(F.col("src").alias("node"), (F.lit(1.0) / n).alias("rank"))
@@ -493,6 +493,6 @@ def triangles_parts_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonical collapse, no degree joins, no adjacency groupBy, no
     # checkpoint. That is what makes the warm headline itself linear
     # in |edges| (SCALE_TRI record), not linear-after-decomposition.
-    oriented = spark.read.parquet(os.path.join(path, "oriented"))
-    adj = spark.read.parquet(os.path.join(path, "adj"))
+    oriented = catalog.read_parquet(spark, os.path.join(path, "oriented"))
+    adj = catalog.read_parquet(spark, os.path.join(path, "adj"))
     return _triangles_from_oriented(oriented, adj)

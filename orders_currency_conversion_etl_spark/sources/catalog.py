@@ -4,14 +4,23 @@ One function the whole engine goes through to read a table, so that
 scan-level decisions (schema enforcement, column pruning via downstream
 ``select``, partition sizing) live in one place.
 
-At 100 TB the same call works unchanged: ``spark.read.parquet`` splits
-files into tasks of ``spark.sql.files.maxPartitionBytes`` (128 MB
-default) and Catalyst pushes filters/projections into the scan — we
-never materialize whole tables on the driver.
+Every parquet read in the package opens through :func:`read_parquet`:
+the schema comes from one data file's footer, read on the driver with
+Spark's own footer-to-schema converter, and is handed to
+``spark.read.schema(...)``. ``spark.read.parquet`` without a schema would
+instead run a one-task Spark job only to read that same footer. At
+100 TB the same call works unchanged: the scan splits files into tasks
+of ``spark.sql.files.maxPartitionBytes`` (128 MB default) and Catalyst
+pushes filters/projections into it — we never materialize whole tables
+on the driver.
 """
 
 from __future__ import annotations
 
+import functools
+import heapq
+import itertools
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,12 +34,14 @@ TABLE_NAMES = tuple(schemas.TABLES)
 
 #: (applicationId, abspath(sf_dir), name, variant) -> analyzed DataFrame.
 #: A DataFrame is an immutable lazy plan — memoizing it reuses the
-#: file listing + parquet-footer schema read (a ~75-115 ms DRIVER-side
-#: cost per spark.read.parquet, measured r18; the headline bench pays
-#: it ~29x per pass), never any computed data: every action still
-#: scans parquet. The 100 TB analog is a real catalog's cached table
-#: metadata instead of re-listing the table's files per query
-#: (guide §6 file-listing / §7.3 driver-side planning). Keyed by
+#: file listing + driver-side footer read, never any computed data:
+#: every action still scans parquet. Opening the three query_mix tables
+#: in a fresh session takes 0.114 s median (quartiles 0.101-0.120; was
+#: 0.366 s, 0.336-0.414, when each open inferred its schema with a
+#: Spark job); 20 sessions each, sf0.01, local[2] on a 4-CPU VM. The
+#: 100 TB analog is a real catalog's cached table metadata instead of
+#: re-listing the table's files per query (guide §6 file-listing / §7.3
+#: driver-side planning). Keyed by
 #: applicationId so a new session (partition-invariance audits, fresh
 #: driver processes) never sees another session's plans; entries from
 #: a previous application are dropped on first access from a new one.
@@ -75,6 +86,115 @@ def local_table(spark: SparkSession, rows, schema: str | T.StructType) -> DataFr
     return spark.createDataFrame(table, schema=schema)
 
 
+_SPARK_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a file or directory of this name
+    (``HadoopFSUtils.shouldFilterOutPathName``, negated). Parquet summary
+    files (``_metadata``, ``_common_metadata``), which Spark does list,
+    count as hidden here: they are not data."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _jclass(jvm, name: str):
+    """A JVM class handle; a dotted ``jvm.a.b.C`` lookup costs several
+    py4j round trips, so each class is looked up once per gateway."""
+    return functools.reduce(getattr, name.split("."), jvm)
+
+
+def _first_data_file(jvm, conf, paths: tuple[str, ...]):
+    """The ``FileStatus`` of the file Spark's schema inference would open
+    for ``paths``, or None when there is none.
+
+    Spark globs each path (``globStatus`` of a path with no glob
+    character is the path's own status) and takes the files its file
+    index lists: a root file, the files directly in a root directory
+    and, once partition discovery finds a ``k=v`` directory, the files
+    below it. It sorts them by path string and reads the first data
+    file's footer (a summary file first, if there is one; neither Spark
+    nor pyarrow writes them by default, and they are skipped here). The
+    walk below finds that file without listing the whole tree: a
+    directory's heap key is its path plus ``/``, a prefix of every path
+    under it, so files leave the heap in Spark's order."""
+    heap: list = []
+    tiebreak = itertools.count()  # a path named twice is listed twice
+
+    def push(fs, status, is_dir: bool, partitioned: bool, root: bool = False) -> None:
+        # partitioned: a k=v directory lies between this one and its root
+        key = status.getPath().toString() + ("/" if is_dir else "")
+        heapq.heappush(heap, (key, next(tiebreak), fs, status, is_dir, partitioned, root))
+
+    for p in paths:
+        jpath = _jclass(jvm, "org.apache.hadoop.fs.Path")(p)
+        fs = jpath.getFileSystem(conf)
+        for status in fs.globStatus(jpath) or []:
+            is_dir = status.isDirectory()
+            # a root directory is listed whatever its name
+            if is_dir or _listed(status.getPath().getName()):
+                push(fs, status, is_dir, partitioned=False, root=True)
+    while heap:
+        _, _, fs, status, is_dir, partitioned, root = heapq.heappop(heap)
+        if not is_dir:
+            return status
+        for child in fs.listStatus(status.getPath()):
+            name = child.getPath().getName()
+            if not _listed(name):
+                continue
+            if child.isDirectory():
+                push(fs, child, True, partitioned or "=" in name)
+            elif partitioned or root:
+                push(fs, child, False, partitioned)
+    return None
+
+
+def parquet_footer(spark: SparkSession, *paths: str):
+    """The footer (a JVM ``org.apache.parquet.hadoop.Footer``) of the data
+    file Spark's schema inference would read for ``paths``, read on the
+    driver through the Hadoop FileSystem (any scheme) with row groups
+    skipped, as Spark's own footer reader does; None when the paths hold
+    no data file."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    status = _first_data_file(jvm, conf, paths)
+    if status is None:
+        return None
+    metadata = _jclass(jvm, _SPARK_PARQUET + "ParquetFooterReader").readFooter(
+        _jclass(jvm, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, conf),
+        _jclass(jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+    )
+    return _jclass(jvm, "org.apache.parquet.hadoop.Footer")(status.getPath(), metadata)
+
+
+def read_parquet(spark: SparkSession, *paths: str, footer=None, **options) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without its schema-inference job.
+
+    The data schema comes from :func:`parquet_footer` (or ``footer``)
+    through Spark's own ``ParquetFileFormat.readSchemaFromFooter`` and
+    ``ParquetToSparkSchemaConverter``, so the session's rules for
+    ``timestamp_ntz``, INT96, binary-as-string, nanos and Spark's
+    row-metadata key apply exactly as in inference. Partition columns
+    (``partition=``, ``batch=``, ...) are still discovered from the
+    paths; ``options`` go to the reader. With no data file the call is
+    the plain ``spark.read.parquet``, which raises Spark's own error."""
+    reader = spark.read.options(**options)
+    if footer is None:
+        footer = parquet_footer(spark, *paths)
+    if footer is None:
+        return reader.parquet(*paths)
+    jvm = spark._jvm
+    converter = _jclass(jvm, _SPARK_PARQUET + "ParquetToSparkSchemaConverter")(
+        spark._jsparkSession.sessionState().conf()
+    )
+    schema = _jclass(jvm, _SPARK_PARQUET + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+    return reader.schema(T.StructType.fromJson(json.loads(schema.json()))).parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table; schema is validated, never inferred."""
     return session_memo(
@@ -88,36 +208,44 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     if name not in schemas.TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    footer = parquet_footer(spark, path)
+    if name == "events" and footer is not None and _has_nanos_timestamp(footer):
+        # Spark 4 refuses TIMESTAMP(NANOS) outright ([PARQUET_TYPE_ILLEGAL])
+        # unless nanos are read as int64; the conf is session-wide, so it
+        # is set only for a file that needs it.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read_parquet(spark, path, footer=footer)
     if name == "events":
         # events.ts has shipped as two parquet encodings across driver
         # testdata generations; normalize BOTH to the same TimestampType
         # every downstream query sees:
-        #  - TIMESTAMP(NANOS): Spark 4 refuses it outright
-        #    ([PARQUET_TYPE_ILLEGAL]) — read nanos as int64 and truncate
-        #    to microseconds, exactly what DuckDB's µs TIMESTAMP does.
+        #  - TIMESTAMP(NANOS), read as int64 above: truncate to
+        #    microseconds, exactly what DuckDB's µs TIMESTAMP does.
         #  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 reads it
         #    as TIMESTAMP_NTZ (inferTimestampNTZ), which breaks
         #    TZ-typed functions like unix_micros — cast to TIMESTAMP,
         #    preserving the wall clock bit-for-bit (the same naive value
         #    DuckDB reads). The NTZ→TZ cast is only wall-clock-exact
         #    because the session zone is UTC, which session.get_spark /
-        #    tune_existing pin unconditionally — NOT here, so loading
-        #    events never mutates session-wide semantics mid-stream.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        #    tune_existing pin unconditionally.
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    df = spark.read.parquet(path)
     # Parquet is self-describing; assert the columns we promise downstream.
     expected = [f.name for f in schemas.TABLES[name].fields]
     missing = [c for c in expected if c not in df.columns]
     if missing:
         raise ValueError(f"table {name!r} at {path} missing columns {missing}")
     return df
+
+
+def _has_nanos_timestamp(footer) -> bool:
+    """Whether any column in the footer is TIMESTAMP(NANOS); one py4j
+    call on the printed parquet schema instead of a walk per column."""
+    schema = footer.getParquetMetadata().getFileMetaData().getSchema().toString()
+    return "(TIMESTAMP(NANOS," in schema
 
 
 def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

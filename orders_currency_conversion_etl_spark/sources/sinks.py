@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.incremental import unprocessed
+from . import catalog
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
@@ -105,7 +106,7 @@ def compact_small_files(
     ``coalesce`` (narrow, no shuffle — it only merges read splits).
     Returns the chosen output file count.
     """
-    df = spark.read.parquet(path)
+    df = catalog.read_parquet(spark, path)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
     total_bytes = fs.getContentSummary(jvm_path).getLength()

@@ -126,4 +126,4 @@ def run_dedup_stream_once(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out)
+    return catalog.read_parquet(spark, out)

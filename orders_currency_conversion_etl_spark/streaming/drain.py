@@ -38,6 +38,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..sources import catalog
 from .file_queue import (
     checkpoint_committed_offsets,
     queue_offsets,
@@ -116,7 +117,7 @@ class QueueDrainSession:
 
     def result_df(self) -> DataFrame:
         """Everything drained so far (lazy read of the batch=N sink)."""
-        return self._spark.read.parquet(os.path.join(self._out, "batch=*"))
+        return catalog.read_parquet(self._spark, os.path.join(self._out, "batch=*"))
 
     def stop(self) -> None:
         self._query.stop()

@@ -133,7 +133,7 @@ def run_stream_once(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFram
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(os.path.join(work_dir, "out", "orders_eur", "batch=*"))
+    return catalog.read_parquet(spark, os.path.join(work_dir, "out", "orders_eur", "batch=*"))
 
 
 # --------------------------------------------------------------------------

@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..plans.registry import CONVERSION_TIME, _FLAGSHIP_ORACLE, query
+from ..sources import catalog
 from . import fsio
 
 _SEQ_RE = re.compile(r"seq=(\d{8})\.parquet$")
@@ -244,7 +245,12 @@ def checkpoint_committed_offsets(checkpoint_dir: str, source_index: int = 0) -> 
     whose sinks committed; ``sources/<i>/`` is the file-source log (v1,
     one JSON entry per consumed file, including ``.compact``
     consolidations). Entries from batches past the last commit are
-    in-flight, not committed, and are excluded."""
+    in-flight, not committed, and are excluded.
+
+    A ``N.compact`` file holds every entry of batches 0..N, so the read
+    starts at the newest compaction at or below the last commit: at
+    most ``spark.sql.streaming.fileSource.log.compactInterval`` files
+    however long the consumer has run."""
     import json
 
     commits_dir = os.path.join(checkpoint_dir, "commits")
@@ -254,12 +260,17 @@ def checkpoint_committed_offsets(checkpoint_dir: str, source_index: int = 0) -> 
     hi = max(committed)
     src_dir = os.path.join(checkpoint_dir, "sources", str(source_index))
     part_re = re.compile(r"partition=(\d+)/seq=(\d+)\.parquet$")
-    out: dict[int, int] = {}
+    logs: dict[int, str] = {}
     for f in fsio.list_dir(src_dir):
         base = f[: -len(".compact")] if f.endswith(".compact") else f
-        if not base.isdigit() or int(base) > hi:
+        if base.isdigit() and int(base) <= hi:
+            logs[int(base)] = f
+    start = max((b for b, f in logs.items() if f.endswith(".compact")), default=0)
+    out: dict[int, int] = {}
+    for b in sorted(logs):
+        if b < start:
             continue
-        for line in fsio.read_text(os.path.join(src_dir, f)).splitlines():
+        for line in fsio.read_text(os.path.join(src_dir, logs[b])).splitlines():
             line = line.strip()
             if not line.startswith("{"):
                 continue  # version header
@@ -396,8 +407,6 @@ def queue_lag_report(
     count is a distributed scan."""
     from pyspark.sql import functions as F
 
-    from ..sources import catalog
-
     lag = queue_lag(queue_dir, checkpoint_dir)
     lag_df = catalog.local_table(
         spark,
@@ -482,8 +491,7 @@ def queue_compact(
         return {}
 
     log = (
-        spark.read.option("basePath", queue_dir)
-        .parquet(*[p for _, _, p in paths])
+        catalog.read_parquet(spark, *[p for _, _, p in paths], basePath=queue_dir)
         .withColumn(
             "__seq",
             F.regexp_extract(F.col("_metadata.file_path"), r"seq=(\d+)\.parquet", 1)
@@ -699,7 +707,6 @@ def flagship_queue_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..sources import catalog
     from .orders_stream import convert_stream
 
     work = _scratch_dir("spark_graft_queue_drain_")
@@ -711,7 +718,7 @@ def flagship_queue_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         half = ((F.col("o_orderkey") - F.col("o_orderkey") % 2) / 2 % 2).cast("int")
         for seq in (0, 1):
             queue_append(sub.filter(half == seq), q_dir, part)
-    schema = spark.read.parquet(os.path.join(q_dir, "partition=0")).schema
+    schema = catalog.read_parquet(spark, os.path.join(q_dir, "partition=0")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -734,7 +741,7 @@ def flagship_queue_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint are dead weight from here
     shutil.rmtree(q_dir, ignore_errors=True)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(os.path.join(out, "batch=*"))
+    return catalog.read_parquet(spark, os.path.join(out, "batch=*"))
 
 
 def _publish_orders_queue(spark: SparkSession, sf_dir: str, q_dir: str, cols: "list[str] | None" = None) -> None:
@@ -743,7 +750,6 @@ def _publish_orders_queue(spark: SparkSession, sf_dir: str, q_dir: str, cols: "l
     the layout flagship_queue_drain pins."""
     from pyspark.sql import functions as F
 
-    from ..sources import catalog
 
     orders = catalog.load_table(spark, sf_dir, "orders")
     if cols:
@@ -789,7 +795,7 @@ def queue_backfill_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, q_dir, cols=["o_orderkey", "o_custkey", "o_totalprice"]
     )
     schema = T.StructType(
-        spark.read.parquet(queue_partition_dir(q_dir, 0)).schema.fields
+        catalog.read_parquet(spark, queue_partition_dir(q_dir, 0)).schema.fields
         + [T.StructField("partition", T.IntegerType())]
     )
     return read_queue_batch(spark, q_dir, schema, from_offsets={0: 1})
@@ -827,7 +833,7 @@ def queue_roundtrip_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_q = os.path.join(work, "out_queue")
     _publish_orders_queue(spark, sf_dir, in_q)
 
-    in_schema = spark.read.parquet(queue_partition_dir(in_q, 0)).schema
+    in_schema = catalog.read_parquet(spark, queue_partition_dir(in_q, 0)).schema
     converted = convert_stream(
         read_queue_stream(spark, in_q, in_schema, max_segments_per_trigger=2),
         spark,
@@ -882,7 +888,6 @@ def queue_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..sources import catalog
 
     work = _scratch_dir("spark_graft_queue_dedup_")
     q_dir = os.path.join(work, "queue")
@@ -894,7 +899,7 @@ def queue_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         for seq in (0, 1):
             queue_append(sub.filter(half == seq), q_dir, part)
 
-    schema = spark.read.parquet(queue_partition_dir(q_dir, 0)).schema
+    schema = catalog.read_parquet(spark, queue_partition_dir(q_dir, 0)).schema
     deduped = (
         read_queue_stream(spark, q_dir, schema, max_segments_per_trigger=2)
         .select(F.md5("text").alias("content_md5"))
@@ -915,7 +920,7 @@ def queue_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result reads only out/batch=*
     shutil.rmtree(q_dir, ignore_errors=True)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(os.path.join(out, "batch=*"))
+    return catalog.read_parquet(spark, os.path.join(out, "batch=*"))
 
 
 # Compaction winners recomputed in SQL: within (partition = k % 2,
@@ -953,7 +958,6 @@ def queue_compacted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazily read result (the flagship_queue_drain pattern)."""
     from pyspark.sql import functions as F
 
-    from ..sources import catalog
 
     work = _scratch_dir("spark_graft_queue_compact_")
     q_dir = os.path.join(work, "queue")
@@ -969,7 +973,7 @@ def queue_compacted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             queue_append(sub.filter(half == seq), q_dir, part)
 
     schema = T.StructType(
-        spark.read.parquet(queue_partition_dir(q_dir, 0)).schema.fields
+        catalog.read_parquet(spark, queue_partition_dir(q_dir, 0)).schema.fields
         + [T.StructField("partition", T.IntegerType())]
     )
     queue_compact(spark, q_dir, ["ckey"])
@@ -1005,7 +1009,6 @@ def queue_lag_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..sources import catalog
 
     work = _scratch_dir("spark_graft_queue_lag_")
     q_dir = os.path.join(work, "queue")
@@ -1021,7 +1024,7 @@ def queue_lag_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             q_dir,
             part,
         )
-    schema = spark.read.parquet(queue_partition_dir(q_dir, 0)).schema
+    schema = catalog.read_parquet(spark, queue_partition_dir(q_dir, 0)).schema
     q = (
         read_queue_stream(spark, q_dir, schema, max_segments_per_trigger=2)
         .writeStream.outputMode("append")

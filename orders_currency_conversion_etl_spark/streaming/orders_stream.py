@@ -43,7 +43,7 @@ def stage_orders_as_stream_source(spark: SparkSession, sf_dir: str, stage_dir: s
 
 def read_orders_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
     # file streams need an explicit schema; take it from the staged files
-    schema = spark.read.parquet(stage_dir).schema
+    schema = catalog.read_parquet(spark, stage_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -98,4 +98,4 @@ def run_conversion_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(os.path.join(out, "orders_eur", "batch=*"))
+    return catalog.read_parquet(spark, os.path.join(out, "orders_eur", "batch=*"))

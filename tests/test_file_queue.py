@@ -1112,3 +1112,70 @@ def test_fsio_list_dir_stray_file_parity_on_fs_branch(spark):
         assert fsio.list_dir("file://" + stray) == []
         assert fsio.list_dir(stray) == []  # local branch parity
         assert fsio.list_dir("file://" + os.path.join(d, "absent")) == []
+
+
+def _full_log_offsets(ckpt: str) -> dict[int, int]:
+    """Committed offsets from EVERY file of the source log, the reference
+    the bounded read must equal."""
+    import json
+
+    hi = max(int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit())
+    src = os.path.join(ckpt, "sources", "0")
+    out: dict[int, int] = {}
+    for f in os.listdir(src):
+        base = f.removesuffix(".compact")
+        if not base.isdigit() or int(base) > hi:
+            continue
+        with open(os.path.join(src, f)) as fh:
+            entries = [json.loads(line) for line in fh if line.startswith("{")]
+        for entry in entries:
+            m = re.search(r"partition=(\d+)/seq=(\d+)\.parquet$", entry["path"])
+            if entry["batchId"] <= hi:
+                p, s = int(m.group(1)), int(m.group(2))
+                out[p] = max(out.get(p, 0), s + 1)
+    return out
+
+
+def test_committed_offsets_read_from_newest_compaction(spark, monkeypatch):
+    """checkpoint_committed_offsets starts at the newest N.compact at or
+    below the last commit: the same offsets as a scan of the whole log,
+    from at most compactInterval files."""
+    from orders_currency_conversion_etl_spark.streaming import file_queue as fq
+    from orders_currency_conversion_etl_spark.streaming import fsio
+
+    key, interval = "spark.sql.streaming.fileSource.log.compactInterval", 3
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(interval))
+    try:
+        with tempfile.TemporaryDirectory() as work:
+            q_dir, ckpt = os.path.join(work, "queue"), os.path.join(work, "ckpt")
+            for part in (0, 1):
+                for seq in range(4):
+                    queue_append(_segment_df(spark, part, seq, n=2), q_dir, part)
+            q = (
+                read_queue_stream(spark, q_dir, SCHEMA)
+                .writeStream.foreachBatch(lambda df, bid: None)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            log = os.listdir(os.path.join(ckpt, "sources", "0"))
+            assert {"2.compact", "5.compact"} <= set(log), sorted(log)
+
+            reads = []
+            read_text = fsio.read_text
+            monkeypatch.setattr(fsio, "read_text", lambda p: reads.append(p) or read_text(p))
+            # batches 0..7 committed; then the last commit before (5) and
+            # between (4) compactions, as a consumer that crashed there
+            for last, expected_files in ((7, 3), (5, 1), (4, 3)):
+                for f in os.listdir(os.path.join(ckpt, "commits")):
+                    if f.isdigit() and int(f) > last:
+                        os.remove(os.path.join(ckpt, "commits", f))
+                reads.clear()
+                got = fq.checkpoint_committed_offsets(ckpt)
+                assert got == _full_log_offsets(ckpt)
+                assert sum(got.values()) == last + 1
+                assert len(reads) == expected_files <= interval
+    finally:
+        spark.conf.set(key, saved)

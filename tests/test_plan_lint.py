@@ -285,3 +285,68 @@ def test_partition_invariance_audit_clean_and_current():
         "scripts/audit_partition_invariance.py "
         f"(audited {audit.get('n_queries')}, registry has {len(entry.queries())})"
     )
+
+
+def _schemaless_parquet_reads(source: str) -> list[tuple[int, str]]:
+    """(line, enclosing function) of each ``<x>.read[...].parquet(...)``
+    call whose reader chain sets no ``.schema(...)``."""
+    import ast
+
+    found = []
+
+    def visit(node, func: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            chain, cur = [], node.func.value
+            while isinstance(cur, (ast.Call, ast.Attribute)):
+                if isinstance(cur, ast.Call):
+                    cur = cur.func
+                else:
+                    chain.append(cur.attr)
+                    cur = cur.value
+            if "read" in chain and "schema" not in chain:
+                found.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(source), "<module>")
+    return found
+
+
+def test_parquet_reads_go_through_the_catalog_helper():
+    """``spark.read.parquet(path)`` with no schema runs a Spark job only
+    to read one footer; every package read opens through
+    ``sources.catalog.read_parquet``, which reads that footer on the
+    driver and passes the schema to ``spark.read.schema(...)``."""
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "orders_currency_conversion_etl_spark")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    offenders += [
+                        f"{os.path.relpath(path, pkg)}:{line} in {func}"
+                        for line, func in _schemaless_parquet_reads(f.read())
+                    ]
+    assert not offenders, f"schema-inferring parquet reads: {offenders}"
+
+
+def test_schemaless_read_detector_fires():
+    hits = _schemaless_parquet_reads(
+        "def f(spark, p, s):\n"
+        "    spark.read.parquet(p)\n"
+        "    spark.read.option('basePath', p).parquet(p)\n"
+        "    spark.read.schema(s).parquet(p)\n"
+        "    self._spark.read.parquet(p)\n"
+        "    spark.readStream.parquet(p)\n"
+        "    df.write.parquet(p)\n"
+    )
+    assert hits == [(2, "f"), (3, "f"), (5, "f")]
