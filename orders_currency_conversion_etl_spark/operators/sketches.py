@@ -257,10 +257,8 @@ def mg_reduce(counts: dict, capacity: int) -> dict:
     mass, preserving w >= count - n_p/(capacity+1) exactly (r6 review:
     vals[len-capacity] is one position too high — only capacity keys
     at >= cut, bound degrades to n_p/capacity, and a flat batch of
-    capacity+1 equal counts would wipe the whole summary). Shared by
-    the heavy-hitters operator below and
-    :func:`operators.countmin.detect_hot_keys_sketched` (r16 review:
-    one copy of the subtle order statistic, not two)."""
+    capacity+1 equal counts would wipe the whole summary). Used by the
+    heavy-hitters operator below."""
     if len(counts) <= capacity:
         return counts
     vals = sorted(counts.values())

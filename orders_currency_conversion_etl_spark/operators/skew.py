@@ -1,23 +1,30 @@
-"""Skew-mitigation: salted joins.
+"""Joins on a skewed key, left to Spark.
 
-When one join key carries a disproportionate share of rows (hot
-currency, hot customer), the hash-partitioned join sends that key's
-whole population to a single reducer — the classic straggler. Salting
-splits the hot key S ways:
+A hash-partitioned join sends every row of one key to one reducer, so a
+hot key makes a straggler. Both queries here are plain joins and Spark
+chooses how to run them:
 
-- fact side: ``salt = some_unique_col % S`` (deterministic here; any
-  uniform per-row value works);
-- dim side: replicated S times via explode;
-- join on ``(key, salt)`` — every reducer gets 1/S of the hot key.
+- ``join_salted_skew`` joins orders to a 3-row status dimension, which
+  Spark broadcasts: the fact side is never shuffled on the hot key.
+- ``join_skewed_fact_salted`` joins lineitem to orders. While the pruned
+  orders side fits the broadcast threshold (sf0.1 does) it broadcasts;
+  past it the join shuffles under AQE's skew join (session.py). After
+  the shuffle, AQE splits a partition that is larger than both
+  ``spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes``
+  (256 MB by default) and ``skewedPartitionFactor`` (5) times the
+  median partition, and reads the other side's matching partition once
+  per split. A hot partition under 256 MB is not split.
 
-AQE's skew-join handles this automatically for sort-merge joins at
-runtime (enabled in session.py); the explicit form below is for
-aggregations-after-join and for engines/plans AQE doesn't cover, and
-is semantics-preserving: salted_join(a, b) == join(a, b) exactly.
-
-The registered query aggregates revenue by order status — 3 distinct
-keys over the whole orders table is maximal skew — through a salted
-join against a status-description dim.
+Hand salting (hot-key detection, then a salted two-sided join) was
+measured against it on a 6M-row lineitem with 30% of its rows on one key
+(scripts/bench_skew.py, whose salted mode went with the code; local[4]
+on a 4-CPU VM, 10 runs, median and quartiles of best-of-3 seconds): AQE skew join with an 8 MB threshold
+5.44 (4.97-5.80), with the default 256 MB threshold 5.82 (5.00-6.07),
+no skew handling 5.61 (5.33-6.02), and salting 4.80 (4.62-5.88) plus
+10.58 (10.00-10.87) of exact hot-key detection as the session's first
+job. Warm, exact detection took 2.2 s and the sketched detection the
+query used 6.9 s, paid on every build. So salting was removed: AQE
+lands inside salting's quartiles with no detection pass.
 """
 
 from __future__ import annotations
@@ -28,32 +35,8 @@ from pyspark.sql import functions as F
 from ..plans.registry import query
 from ..sources import catalog
 
-N_SALTS = 16
-
 #: tiny dimension: status code -> description (inlined both engines)
 STATUS_DIM = (("F", "fulfilled"), ("O", "open"), ("P", "pending"))
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_source: str,
-    n_salts: int = N_SALTS,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join ``fact ⋈ dim`` on ``key``, hot keys split ``n_salts``
-    ways. ``salt_source`` is any fact column with uniform-ish values
-    (a unique id works best). dim grows n_salts x — only viable for
-    small dims, which is exactly when key skew on the fact side is the
-    bottleneck."""
-    salted_fact = fact.withColumn(
-        "_salt", (F.col(salt_source) % n_salts).cast("int")
-    )
-    salted_dim = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return salted_fact.join(salted_dim, on=[key, "_salt"], how=how).drop("_salt")
 
 
 def _dim_sql_values() -> str:
@@ -61,7 +44,7 @@ def _dim_sql_values() -> str:
     return f"(VALUES {rows}) AS dim(o_orderstatus, status_desc)"
 
 
-_SALTED_ORACLE = f"""
+_STATUS_ORACLE = f"""
 SELECT o.o_orderstatus,
        dim.status_desc,
        COUNT(*) AS n_orders,
@@ -70,78 +53,7 @@ FROM orders o JOIN {_dim_sql_values()} ON o.o_orderstatus = dim.o_orderstatus
 GROUP BY o.o_orderstatus, dim.status_desc
 """
 
-
-def detect_hot_keys(
-    df: DataFrame, key: str, frac_threshold: float = 0.05, max_keys: int = 32
-) -> list:
-    """Keys carrying more than ``frac_threshold`` of the rows — the
-    candidates worth salting. ONE scan of the fact table (the grouped
-    counts are persisted, so the total and the top-k both read the
-    |keys|-sized aggregate, not the base table); both collects are
-    bounded and tiny. At 100 TB this is the standard pre-pass (or
-    comes free from table statistics), amortized across every query
-    over the table — far below the straggler it prevents. When the
-    DISTINCT key count is itself fact-sized (billions of keys), the
-    groupBy pre-aggregate stops being cheap — use the bounded-memory
-    single-pass :func:`operators.countmin.detect_hot_keys_sketched`
-    instead (r16; same no-false-negative contract at the threshold)."""
-    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("_n")).persist()
-    try:
-        total = counts.agg(F.sum("_n").alias("t")).collect()[0]["t"] or 0
-        top = counts.orderBy(F.col("_n").desc()).limit(max_keys).collect()
-        return [r[key] for r in top if r["_n"] > frac_threshold * total]
-    finally:
-        counts.unpersist()
-
-
-def salted_fact_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    hot_keys: list,
-    salt_source: str | list[str],
-    n_salts: int = N_SALTS,
-) -> DataFrame:
-    """Fact-to-fact equi-join where ``left`` is skewed on ``key``:
-    hot-key rows on the left get a deterministic salt in [0, n_salts)
-    while the right side replicates ONLY its hot-key rows n_salts ways
-    (everything else keeps salt 0) — the hot reducer splits S ways and
-    the non-hot volume is untouched, unlike dim-replication which
-    multiplies the whole build side. Semantics-preserving:
-    salted_fact_join(a, b) == a.join(b, key) exactly.
-
-    This is the engine-level form of what AQE's skewJoin does at
-    runtime for sort-merge joins; it also covers the shapes AQE
-    doesn't (pre-partitioned inputs, aggregation-after-join keyed on
-    the salted columns)."""
-    if not hot_keys:
-        return left.join(right, on=key)
-    hot = F.col(key).isin(*hot_keys)
-    # Hash the salt source(s) instead of a raw modulo, and accept a
-    # column LIST: one low-cardinality source (TPC-H l_linenumber is
-    # 1-7) would populate only a few of the n_salts buckets and the
-    # hot reducer would survive ~unsplit — combined columns restore
-    # uniform bucket fill.
-    sources = [salt_source] if isinstance(salt_source, str) else list(salt_source)
-    salt_expr = F.pmod(
-        F.xxhash64(*[F.col(c) for c in sources]), F.lit(n_salts)
-    ).cast("int")
-    salted_left = left.withColumn(
-        "_salt",
-        F.when(hot, salt_expr).otherwise(F.lit(0)),
-    )
-    salted_right = right.withColumn(
-        "_salt",
-        F.explode(
-            F.when(
-                hot, F.array(*[F.lit(i) for i in range(n_salts)])
-            ).otherwise(F.array(F.lit(0)))
-        ),
-    )
-    return salted_left.join(salted_right, on=[key, "_salt"]).drop("_salt")
-
-
-_FACT_SALTED_ORACLE = """
+_FACT_JOIN_ORACLE = """
 SELECT o.o_orderpriority,
        COUNT(*) AS n_lines,
        CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
@@ -152,40 +64,17 @@ GROUP BY o.o_orderpriority
 """
 
 
-@query("join_skewed_fact_salted", _FACT_SALTED_ORACLE)
+@query("join_skewed_fact_salted", _FACT_JOIN_ORACLE)
 def join_skewed_fact_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue by priority through the two-sided salted fact-to-fact
-    join, hot keys auto-detected (>5% of lineitem rows on one
-    orderkey). Since r16 detection runs through the count-min +
-    Misra-Gries single-pass sketch (operators/countmin.py:
-    detect_hot_keys_sketched — VERDICT r15 ask #3): at 100 TB the
-    exact detector's groupBy pre-aggregation is itself a shuffle of
-    |distinct keys| rows, while the sketch folds a bounded-memory grid
-    + candidate summary in ONE scan with no per-key aggregation; its
-    one-sided overestimate can only promote extra keys, which salting
-    tolerates by construction (no-false-negative pin in
-    tests/test_countmin.py). On uniform testdata the hot set is empty
-    either way and the plan degenerates to the plain join — the oracle
-    (the unsalted join) proves the rewrite is semantics-preserving;
-    the skewed bench (scripts/bench_skew.py, SCALE.md §Skew) supplies
-    the timing evidence under an actually-hot key."""
-    from .countmin import detect_hot_keys_sketched
-
+    """Revenue by priority over the lineitem-orders fact-to-fact join.
+    A hot orderkey is split by AQE's skew join (module doc)."""
     li = catalog.load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount", "l_linenumber"
+        "l_orderkey", "l_extendedprice", "l_discount"
     )
     orders = catalog.load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
-    hot = detect_hot_keys_sketched(li, "l_orderkey")
-    joined = salted_fact_join(
-        li,
-        orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-        key="l_orderkey",
-        hot_keys=hot,
-        salt_source=["l_linenumber", "l_extendedprice", "l_discount"],
-    )
-    return joined.groupBy("o_orderpriority").agg(
+    return li.join(orders, "l_orderkey").groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(
             F.col("l_extendedprice").cast("decimal(18,2)")
@@ -196,15 +85,14 @@ def join_skewed_fact_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("join_salted_skew", _SALTED_ORACLE)
+@query("join_salted_skew", _STATUS_ORACLE)
 def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue by status through a 16-way salted join (3 hot keys split
-    across 48 (key, salt) partitions instead of 3). The oracle is the
-    unsalted join — proving the rewrite is semantics-preserving."""
+    """Revenue by order status: 3 keys over the whole orders table, the
+    most skewed key there is. The status dimension broadcasts, so the
+    join never shuffles on the key."""
     orders = catalog.load_table(spark, sf_dir, "orders")
     dim = catalog.local_table(spark, STATUS_DIM, "o_orderstatus string, status_desc string")
-    joined = salted_join(orders, dim, key="o_orderstatus", salt_source="o_orderkey")
-    return joined.groupBy("o_orderstatus", "status_desc").agg(
+    return orders.join(dim, "o_orderstatus").groupBy("o_orderstatus", "status_desc").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("decimal(38,2)").alias("revenue"),
     )

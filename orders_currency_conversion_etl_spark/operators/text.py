@@ -241,7 +241,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         n_bpe.alias("n_bpe_tokens"),
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_ws_tokens"),
-        (F.length("text").cast("double") / n_bpe).alias("chars_per_bpe_token"),
+        F.try_divide(F.length("text").cast("double"), n_bpe).alias("chars_per_bpe_token"),
     )
 
 

@@ -11,8 +11,9 @@ Scale notes (100 TB):
 - every window here partitions by a high-cardinality key (user_id /
   o_custkey): one hash shuffle on the key, then per-partition sorts —
   no global sort, no driver state. Skewed users are bounded by the
-  per-user event cap of any real logging pipeline; if not, the salting
-  pattern from operators/skew.py applies.
+  per-user event cap of any real logging pipeline. A window cannot be
+  split by AQE's skew join (operators/skew.py), so an unbounded hot
+  user needs that cap.
 - SCD2 runs TWO window functions over the SAME partitioning
   (change-detection, then interval-close). Catalyst reuses the child
   distribution: one shuffle total — asserted in test_plan_quality.

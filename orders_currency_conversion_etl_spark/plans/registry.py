@@ -289,29 +289,20 @@ def incremental_unprocessed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("incremental_unprocessed_at_scale", _INCREMENTAL_ORACLE)
 def incremental_unprocessed_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op J3 at 100 TB (VERDICT r8 ask #4): identical semantics and
-    oracle as `incremental_unprocessed`, but the sink keyset is treated
-    as fact-sized — shuffled hash anti-join on the key, plan-asserted
-    in tests/test_plan_quality.py to contain NO broadcast of the sink
-    (the fixture-scale plan broadcasts it, which is wrong when the
-    processed-id set is as big as the source). See
-    operators/incremental.py:unprocessed_at_scale for the layout notes
-    (bucketed source+sink = zero-exchange steady state)."""
+    """Op J3 with a fact-sized sink: the same semantics and oracle as
+    `incremental_unprocessed`, but the sink keyset is never broadcast.
+    The SHUFFLE_HASH hint makes a shuffled hash anti-join: both sides
+    partition on the key and each task hashes only its sink slice, no
+    sort. The hint is binding, so every sink partition must fit in task
+    memory; `unprocessed` lets AQE choose from the measured sizes
+    instead. tests/test_plan_quality.py pins the plan."""
     from pyspark.sql import functions as F
-
-    from ..operators.incremental import unprocessed_at_scale
 
     orders = _t(spark, sf_dir, "orders")
     sink = orders.filter(F.col("o_orderkey") % 10 >= 8).select(
         F.col("o_orderkey").alias("order_id")
     )
     src = orders.withColumn("order_id", F.col("o_orderkey"))
-    # bloom="on" pins the full 100 TB plan form at fixture scale (the
-    # same convention as the forced shuffle-hash): Bloom-bypass routing
-    # in front of the anti-join — rows failing the membership test
-    # skip the exchange entirely (operators/bloom.py, r16 wiring; A/B
-    # in BLOOM_WIRED_AB_r16.json). At fixture scale "auto" would
-    # correctly decline (sink ~30k keys < BLOOM_MIN_SINK_KEYS).
-    return unprocessed_at_scale(src, sink, key="order_id", bloom="on").select(
+    return src.join(sink.hint("shuffle_hash"), "order_id", "left_anti").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )

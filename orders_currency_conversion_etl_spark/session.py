@@ -6,8 +6,11 @@ Determinism and scale defaults applied once, here, so every entry point
 - ``spark.sql.session.timeZone=UTC``: the reference stores naive
   TIMESTAMPs (reference: init/postgres-1/init.sql:4,7,8); pinning the
   session zone makes timestamp literals reproducible across hosts.
-- AQE on: runtime coalescing of shuffle partitions + skew-join splitting
-  is the 100 TB safety net for skewed keys.
+- AQE on: runtime coalescing of shuffle partitions and skew-join
+  splitting. AQE splits a join partition only when it is above both
+  ``skewedPartitionThresholdInBytes`` (256 MB, left at Spark's default)
+  and 5x the median partition, so a hot key under 256 MB per partition
+  keeps its straggler (operators/skew.py has the measurement).
 - AQE picks the shuffled join from measured sizes:
   ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64MB``.
   Once a join's shuffles have run, AQE replaces a planned sort-merge

@@ -1,23 +1,20 @@
-"""Skew-mitigation bench: measured evidence, not plan assertions.
+"""Skew bench: the lineitem-orders join under a hot key.
 
 Runs the orders-by-lineitem fact-to-fact join + aggregation four ways
-and prints one JSON line (recorded in SCALE.md §Skew):
+and prints one JSON line of best-of-3 seconds (SCALE.md §Skew):
 
-  uniform        — unskewed sf1 lineitem, plain shuffle join (the
-                   reference time everything is judged against)
-  skew_plain     — skewed lineitem (30% of rows on one l_orderkey),
-                   AQE skew-join OFF, no salting: the straggler
-  skew_aqe       — same data, AQE skew-join ON (Spark's runtime fix)
-  skew_salted    — same data, AQE OFF, explicit two-sided salted join
-                   (operators/skew.py:salted_fact_join)
-
-Pass criterion (VERDICT r3 ask #5): skew_salted <= ~1.2x uniform while
-skew_plain demonstrably degrades.
+  uniform           — unskewed sf1 lineitem, plain shuffle join (the
+                      reference time everything is judged against)
+  skew_plain        — skewed lineitem (30% of rows on one l_orderkey),
+                      AQE skew join OFF: the straggler
+  skew_aqe          — same data, AQE skew join ON with an 8 MB
+                      skewedPartitionThresholdInBytes
+  skew_aqe_default  — same data, AQE skew join ON with the default
+                      256 MB threshold, which the session keeps
 
 Sort-merge joins are forced (autoBroadcastJoinThreshold=-1): orders at
 sf1 is ~20 MB and would otherwise broadcast, which dodges the skewed
-shuffle this bench exists to measure — at 100 TB neither side
-broadcasts.
+shuffle this bench exists to measure.
 
 Usage: python scripts/make_sf1.py && python scripts/make_skew.py &&
        python scripts/bench_skew.py
@@ -35,19 +32,23 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from orders_currency_conversion_etl_spark.operators.skew import (  # noqa: E402
-    detect_hot_keys,
-    salted_fact_join,
-)
 from orders_currency_conversion_etl_spark.session import get_spark  # noqa: E402
+from orders_currency_conversion_etl_spark.sources import catalog  # noqa: E402
 
 SF1 = os.path.join(REPO, ".localdata", "sf1")
 SKEW = os.path.join(REPO, ".localdata", "skew")
 RUNS = 3
+THRESHOLD = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
 
 
-def _agg(joined):
-    return joined.groupBy("o_orderpriority").agg(
+def plain(spark, data_dir):
+    li = catalog.read_parquet(spark, os.path.join(data_dir, "lineitem.parquet")).select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    orders = catalog.read_parquet(spark, os.path.join(data_dir, "orders.parquet")).select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+    )
+    return li.join(orders, on="l_orderkey").groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(
             F.col("l_extendedprice").cast("decimal(18,2)")
@@ -58,48 +59,20 @@ def _agg(joined):
     )
 
 
-def _tables(spark, data_dir):
-    li = spark.read.parquet(os.path.join(data_dir, "lineitem.parquet")).select(
-        "l_orderkey", "l_extendedprice", "l_discount", "l_linenumber"
-    )
-    orders = (
-        spark.read.parquet(os.path.join(data_dir, "orders.parquet"))
-        .select("o_orderkey", "o_orderpriority")
-        .withColumnRenamed("o_orderkey", "l_orderkey")
-    )
-    return li, orders
-
-
-def plain(spark, data_dir):
-    li, orders = _tables(spark, data_dir)
-    return _agg(li.join(orders, on="l_orderkey"))
-
-
-def salted(spark, data_dir, hot):
-    # hot keys are an INPUT here: at 100 TB they come from table
-    # statistics or a once-per-pipeline pre-pass, amortized across
-    # every query over the table — detect_hot_keys' one agg job is
-    # timed separately (detect_sec), not inside every join.
-    li, orders = _tables(spark, data_dir)
-    return _agg(
-        salted_fact_join(
-            li,
-            orders,
-            "l_orderkey",
-            hot,
-            salt_source=["l_linenumber", "l_extendedprice", "l_discount"],
-        )
-    )
-
-
-def timed(spark, build, aqe_skew: bool) -> float:
+def timed(spark, data_dir: str, aqe_skew: bool, threshold: str | None = "8m") -> float:
+    """Best of RUNS after one warm-up; ``threshold=None`` keeps Spark's
+    default skew threshold."""
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(aqe_skew).lower())
-    build().write.mode("overwrite").format("noop").save()  # warmup
+    if threshold is None:
+        spark.conf.unset(THRESHOLD)
+    else:
+        spark.conf.set(THRESHOLD, threshold)
+    plain(spark, data_dir).write.mode("overwrite").format("noop").save()  # warmup
     best = float("inf")
     for _ in range(RUNS):
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        build().write.mode("overwrite").format("noop").save()
+        plain(spark, data_dir).write.mode("overwrite").format("noop").save()
         best = min(best, time.perf_counter() - t0)
     return round(best, 3)
 
@@ -111,34 +84,19 @@ def main() -> None:
     spark = get_spark("bench-skew")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # AQE's skew split never fires with cluster-scale defaults on a
-    # laptop-scale fixture: the hot partition is ~50 MB, far below the
-    # 256 MB skewedPartitionThresholdInBytes. Scale the thresholds to
-    # the rig the same way a 100 TB deployment scales them to its
-    # shuffle sizes (factor 5 stays default; median partition ~4 MB).
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
+    # The hot partition here is ~50 MB, under the default 256 MB skew
+    # threshold, so skew_aqe lowers the threshold to 8 MB and the
+    # advisory split size to 4 MB (the skew factor stays at 5).
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
 
-    t0 = time.perf_counter()
-    hot = detect_hot_keys(_tables(spark, SKEW)[0], "l_orderkey")
-    detect_sec = round(time.perf_counter() - t0, 3)
-
     result = {
-        "uniform": timed(spark, lambda: plain(spark, SF1), aqe_skew=False),
-        "skew_plain": timed(spark, lambda: plain(spark, SKEW), aqe_skew=False),
-        "skew_aqe": timed(spark, lambda: plain(spark, SKEW), aqe_skew=True),
-        "skew_salted": timed(spark, lambda: salted(spark, SKEW, hot), aqe_skew=False),
-        "detect_sec": detect_sec,
-        "hot_keys": hot,
+        "uniform": timed(spark, SF1, aqe_skew=False),
+        "skew_plain": timed(spark, SKEW, aqe_skew=False),
+        "skew_aqe": timed(spark, SKEW, aqe_skew=True),
+        "skew_aqe_default": timed(spark, SKEW, aqe_skew=True, threshold=None),
     }
-    result["salted_vs_uniform"] = round(result["skew_salted"] / result["uniform"], 2)
+    result["aqe_vs_uniform"] = round(result["skew_aqe"] / result["uniform"], 2)
     result["plain_degradation"] = round(result["skew_plain"] / result["uniform"], 2)
-    # sanity: all four variants must agree on the aggregate (the skewed
-    # pair differs from uniform DATA, but plain/aqe/salted on the SAME
-    # skewed data must be identical)
-    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    assert rows(plain(spark, SKEW)) == rows(salted(spark, SKEW, hot)), "salting changed semantics"
     print(json.dumps(result))
     spark.stop()
 

@@ -68,7 +68,7 @@ def main() -> None:
         li.repartition(N_FILES).write.mode("overwrite").parquet(paths["roundrobin"])
 
         for lname, path in paths.items():
-            df = spark.read.parquet(path)
+            df = catalog.read_parquet(spark, path)
             out["layouts"][lname] = {
                 pname: layout.files_touched(df.filter(pred))
                 for pname, pred in preds.items()

@@ -1,12 +1,10 @@
 """Generate a skewed twin of the local sf1 lineitem for the skew bench.
 
-VERDICT r3 ask #5: salting and AQE skew-join were plan-asserted only;
-this fixture supplies *data* evidence. It rewrites ~30% of sf1
-lineitem rows (6M rows; scripts/make_sf1.py must have run first) to a
-single hot l_orderkey — the classic one-customer-is-a-third-of-traffic
-shape. An unsalted shuffle join then sends ~1.8M rows to one reducer
-(vs ~190k/task uniform at 32 tasks) while the salted/AQE plans split
-it; scripts/bench_skew.py measures all variants.
+It rewrites ~30% of sf1 lineitem rows (6M rows; scripts/make_sf1.py
+must have run first) to a single hot l_orderkey — the classic
+one-customer-is-a-third-of-traffic shape. A plain shuffle join then
+sends ~1.8M rows to one reducer, which AQE's skew join can split;
+scripts/bench_skew.py measures the variants.
 
 The hot orderkey keeps a matching orders row, so join selectivity is
 preserved; only the key DISTRIBUTION changes. Non-key columns are

@@ -52,7 +52,7 @@ def _one_rep(spark) -> dict:
         orders = catalog.load_table(spark, SF_DIR, "orders")
         for part in range(N_PARTS):
             queue_append(orders.filter(F.col("o_orderkey") % N_PARTS == part), q_dir, part)
-        schema = spark.read.parquet(os.path.join(q_dir, "partition=0")).schema
+        schema = catalog.read_parquet(spark, os.path.join(q_dir, "partition=0")).schema
 
         marks: dict[str, float] = {}
 

@@ -345,38 +345,6 @@ def test_split_is_exhaustive_and_stable(spark):
     assert by["train"] > by.get("val", 0) and by["train"] > by.get("test", 0)
 
 
-def test_salted_fact_join_splits_hot_key_and_preserves_rows(spark):
-    """Two-sided salting invariants on a constructed hot-key input:
-    (a) semantics — salted join row-multiset equals the plain join;
-    (b) the hot key's left rows actually spread across >1 salt bucket
-    (the straggler split that is the operator's whole point); (c)
-    non-hot right rows are NOT replicated (unlike dim-replication)."""
-    from orders_currency_conversion_etl_spark.operators.skew import (
-        N_SALTS,
-        detect_hot_keys,
-        salted_fact_join,
-    )
-
-    left = spark.range(0, 2000).select(
-        F.when(F.col("id") < 1000, F.lit(7)).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    right = left.select("k").distinct().select("k", (F.col("k") * 2).alias("rv"))
-
-    hot = detect_hot_keys(left, "k", frac_threshold=0.05)
-    assert hot == [7]  # 50% of rows on one key
-
-    plain = left.join(right, on="k")
-    salted = salted_fact_join(left, right, "k", hot, salt_source="payload")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    salt_expr = F.pmod(F.xxhash64(F.col("payload")), F.lit(N_SALTS)).cast("int")
-    n_buckets = (
-        left.filter(F.col("k") == 7).select(salt_expr.alias("s")).distinct().count()
-    )
-    assert n_buckets > N_SALTS // 2  # hot rows genuinely spread out
-
-
 def test_corpus_shuffle_shards_balanced_dense_and_decorrelated(spark):
     """Shuffle-shard invariants: (a) every doc appears exactly once;
     (b) positions are dense 1..|shard| within each shard; (c) shard

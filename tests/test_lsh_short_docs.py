@@ -1,8 +1,12 @@
-"""Documents with fewer than 3 tokens have no shingles, so no MinHash
+"""Short and empty documents against the DuckDB oracle.
+
+Documents with fewer than 3 tokens have no shingles, so no MinHash
 signature. Every MinHash-LSH query must leave them out of the band
 table: their empty signatures must not collide with each other (that
 divided 0 by 0 in verification under ANSI mode) and must match the
-DuckDB oracle, where the NULL band joins nothing.
+oracle, where the NULL band joins nothing. The empty document has no
+BPE token either, so its chars-per-token ratio is NULL in both engines
+instead of a division by zero.
 """
 
 from __future__ import annotations
@@ -20,8 +24,8 @@ from tests.oracle_harness import TABLE_NAMES, compare_query
 SF = "/root/testdata/sf0.001"
 
 #: one new-batch doc (doc_id % 10 == 0, see dedup_incremental_lsh) and
-#: two corpus docs, all under 3 tokens
-SHORT_DOCS = [(500, "alpha"), (501, "beta gamma"), (502, "delta")]
+#: three corpus docs, all under 3 tokens, one of them empty
+SHORT_DOCS = [(500, "alpha"), (501, "beta gamma"), (502, "delta"), (503, "")]
 
 
 @pytest.fixture(scope="module")
@@ -49,6 +53,7 @@ def short_doc_sf(tmp_path_factory):
         "dedup_minhash_lsh_hr",
         "dedup_incremental_lsh",
         "curation_pipeline_lsh",
+        "text_bpe_token_count",
     ],
 )
 def test_lsh_queries_skip_shingleless_docs(spark, short_doc_sf, name):
