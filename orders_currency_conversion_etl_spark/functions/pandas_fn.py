@@ -1,7 +1,7 @@
 """Vectorized Pandas-UDF surface (SURVEY F5: the reference's row-wise
 ``df.apply(axis=1)`` generalized the right way).
 
-Two kinds, both Arrow-batched (never row-at-a-time Python):
+Two UDF kinds, both Arrow-batched (never row-at-a-time Python):
 
 - scalar ``@pandas_udf``: Series → Series, runs per Arrow batch inside
   the executor; the hot path stays columnar end-to-end;
@@ -14,9 +14,16 @@ Two kinds, both Arrow-batched (never row-at-a-time Python):
 The flagship conversion deliberately uses NEITHER (pure column
 arithmetic, SURVEY §2 op F5) — these exist for operators that
 genuinely need numpy/pandas semantics.
+
+Row-wise Python that no column expression can state (codec encode/
+decode, container walks) goes through :func:`map_rows`: the engine
+owns the Arrow batching and the output frame, the caller supplies only
+the per-row function and the output schema.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -24,10 +31,36 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructType
 
 from ..plans.registry import query
 from ..sources import catalog
+
+
+def row_batches(
+    fn: Callable[..., Iterable[tuple]], schema: StructType
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` batch function behind :func:`map_rows`: one
+    output frame per input batch, holding every tuple ``fn`` yields for
+    the batch's rows, in order, under ``schema``'s field names."""
+    names = schema.fieldNames()
+
+    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [t for row in pdf.itertuples(index=False, name=None) for t in fn(*row)]
+            yield pd.DataFrame(out, columns=names)
+
+    return _rows
+
+
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: StructType) -> DataFrame:
+    """Run ``fn(*row)`` over every row of ``df`` in Arrow batches, one
+    ``mapInPandas`` stage. Arguments arrive in ``df.columns`` order;
+    ``fn`` yields zero, one or many output tuples per row, each in
+    ``schema`` field order. The plan is one MapInPandas over ``df``,
+    no shuffle; project ``df`` to the columns ``fn`` takes first."""
+    return df.mapInPandas(row_batches(fn, schema), schema=schema)
+
 
 # returnType as a DataType object, NOT a DDL string — string parsing
 # happens at decoration (= import) time and needs a live SparkContext.

@@ -12,6 +12,10 @@ member-heavy zip that is a few KiB of trailing bytes, so at 100 TB the
 enumeration cost is O(members), never O(payload). On an object store
 the EOCD-first layout is exactly why zip listing works with two ranged
 GETs; here payloads are already column values so the walk is in-memory.
+Every stage here — build, roundtrip, index, fetch, decompress — is a
+per-row function run by ``map_rows`` (functions/pandas_fn.py), which
+owns the Arrow batch loop and takes its column names from the stage's
+schema.
 
 The PARSER is an original struct walk (PKWARE APPNOTE layout: EOCD
 ``PK\\x05\\x06``, central file header ``PK\\x01\\x02``); the registered
@@ -26,13 +30,12 @@ Reference parity: none — the reference is tabular-only
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.pandas_fn import map_rows
 from ..plans.registry import query
 from ..sources import catalog
 
@@ -281,31 +284,22 @@ def archive_zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                parts = [("manifest.txt", str(int(doc_id)).encode())] + [
-                    (f"part{i:04d}.txt", raw[i * 64 : (i + 1) * 64])
-                    for i in range((len(raw) + 63) // 64)
-                ]
-                listed = zip_members(build_zip(parts))
-                rows.append(
-                    (
-                        doc_id,
-                        len(listed),
-                        sum(m["uncompressed_size"] for m in listed),
-                        listed[0]["name"],
-                        listed[-1]["name"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "members", "total_bytes", "first_name", "last_name"],
-            )
+    def _roundtrip(doc_id, text):
+        raw = text.encode("utf-8")
+        parts = [("manifest.txt", str(int(doc_id)).encode())] + [
+            (f"part{i:04d}.txt", raw[i * 64 : (i + 1) * 64])
+            for i in range((len(raw) + 63) // 64)
+        ]
+        listed = zip_members(build_zip(parts))
+        yield (
+            doc_id,
+            len(listed),
+            sum(m["uncompressed_size"] for m in listed),
+            listed[0]["name"],
+            listed[-1]["name"],
+        )
 
-    return base.mapInPandas(_roundtrip, schema=ZIP_MEMBERS_SCHEMA)
+    return map_rows(base, _roundtrip, ZIP_MEMBERS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -485,31 +479,22 @@ def archive_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                parts = [("manifest.txt", str(int(doc_id)).encode())] + [
-                    (f"part{i:04d}.txt", raw[i * 64 : (i + 1) * 64])
-                    for i in range((len(raw) + 63) // 64)
-                ]
-                listed = tar_members(build_tar(parts))
-                rows.append(
-                    (
-                        doc_id,
-                        len(listed),
-                        sum(m["size"] for m in listed),
-                        listed[0]["name"],
-                        listed[-1]["name"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "members", "total_bytes", "first_name", "last_name"],
-            )
+    def _roundtrip(doc_id, text):
+        raw = text.encode("utf-8")
+        parts = [("manifest.txt", str(int(doc_id)).encode())] + [
+            (f"part{i:04d}.txt", raw[i * 64 : (i + 1) * 64])
+            for i in range((len(raw) + 63) // 64)
+        ]
+        listed = tar_members(build_tar(parts))
+        yield (
+            doc_id,
+            len(listed),
+            sum(m["size"] for m in listed),
+            listed[0]["name"],
+            listed[-1]["name"],
+        )
 
-    return base.mapInPandas(_roundtrip, schema=TAR_MEMBERS_SCHEMA)
+    return map_rows(base, _roundtrip, TAR_MEMBERS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -693,46 +678,30 @@ def archive_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                recs: list[tuple[str, "str | None", bytes]] = [
-                    ("warcinfo", None, str(int(doc_id)).encode())
-                ] + [
-                    (
-                        "response",
-                        f"https://corpus.local/{int(doc_id)}/{i}",
-                        raw[i * 64 : (i + 1) * 64],
-                    )
-                    for i in range((len(raw) + 63) // 64)
-                ]
-                listed = warc_records(build_warc(recs))
-                resp = [r for r in listed if r["warc_type"] == "response"]
-                rows.append(
-                    (
-                        doc_id,
-                        len(listed),
-                        len(resp),
-                        sum(r["content_length"] for r in listed),
-                        resp[0]["target_uri"] if resp else None,
-                        resp[-1]["target_uri"] if resp else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "records",
-                    "responses",
-                    "total_block_bytes",
-                    "first_uri",
-                    "last_uri",
-                ],
+    def _roundtrip(doc_id, text):
+        raw = text.encode("utf-8")
+        recs: list[tuple[str, "str | None", bytes]] = [
+            ("warcinfo", None, str(int(doc_id)).encode())
+        ] + [
+            (
+                "response",
+                f"https://corpus.local/{int(doc_id)}/{i}",
+                raw[i * 64 : (i + 1) * 64],
             )
+            for i in range((len(raw) + 63) // 64)
+        ]
+        listed = warc_records(build_warc(recs))
+        resp = [r for r in listed if r["warc_type"] == "response"]
+        yield (
+            doc_id,
+            len(listed),
+            len(resp),
+            sum(r["content_length"] for r in listed),
+            resp[0]["target_uri"] if resp else None,
+            resp[-1]["target_uri"] if resp else None,
+        )
 
-    return base.mapInPandas(_roundtrip, schema=WARC_RECORDS_SCHEMA)
+    return map_rows(base, _roundtrip, WARC_RECORDS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -880,30 +849,22 @@ def archive_gzip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                blocks = [("manifest.txt", str(int(doc_id)).encode())] + [
-                    (None, raw[i * 64 : (i + 1) * 64])
-                    for i in range((len(raw) + 63) // 64)
-                ]
-                listed = gzip_members(build_gzip_members(blocks))
-                rows.append(
-                    (
-                        doc_id,
-                        len(listed),
-                        sum(m["uncompressed_size"] for m in listed),
-                        sum(1 for m in listed if m["name"] is not None),
-                        listed[0]["name"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GZIP_MEMBERS_SCHEMA.fields]
-            )
+    def _roundtrip(doc_id, text):
+        raw = text.encode("utf-8")
+        blocks = [("manifest.txt", str(int(doc_id)).encode())] + [
+            (None, raw[i * 64 : (i + 1) * 64])
+            for i in range((len(raw) + 63) // 64)
+        ]
+        listed = gzip_members(build_gzip_members(blocks))
+        yield (
+            doc_id,
+            len(listed),
+            sum(m["uncompressed_size"] for m in listed),
+            sum(1 for m in listed if m["name"] is not None),
+            listed[0]["name"],
+        )
 
-    return base.mapInPandas(_roundtrip, schema=GZIP_MEMBERS_SCHEMA)
+    return map_rows(base, _roundtrip, GZIP_MEMBERS_SCHEMA)
 
 
 def warc_gz_records(payload: bytes) -> list[dict]:
@@ -1024,30 +985,21 @@ def build_warc_gz_index_df(df: DataFrame, id_col: str, payload_col: str) -> Data
     becomes ONE ranged read + :func:`fetch_warc_gz_record` — the
     O(payload) gzip walk paid exactly once per segment."""
     base = df.select(F.col(id_col).alias("segment_id"), F.col(payload_col))
-    pname = payload_col
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for seg_id, payload in zip(pdf["segment_id"], pdf[pname]):
-                for e in warc_gz_index(bytes(payload)):
-                    rows.append(
-                        (
-                            seg_id,
-                            e["seq"],
-                            e["member"],
-                            e["offset"],
-                            e["compressed_size"],
-                            e["warc_type"],
-                            e["target_uri"],
-                            e["content_length"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_GZ_INDEX_SCHEMA.fields]
+    def _index(seg_id, payload):
+        for e in warc_gz_index(bytes(payload)):
+            yield (
+                seg_id,
+                e["seq"],
+                e["member"],
+                e["offset"],
+                e["compressed_size"],
+                e["warc_type"],
+                e["target_uri"],
+                e["content_length"],
             )
 
-    return base.mapInPandas(_index, schema=WARC_GZ_INDEX_SCHEMA)
+    return map_rows(base, _index, WARC_GZ_INDEX_SCHEMA)
 
 
 def _guarded_slice(offset_expr: str, length_expr: str, payload_expr: str = "payload"):
@@ -1117,25 +1069,11 @@ def fetch_warc_gz_records_df(segments: DataFrame, index: DataFrame) -> DataFrame
         _guarded_slice("offset", "compressed_size").alias("member_bytes"),
     )
 
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, seq, wtype, uri, member in zip(
-                pdf["segment_id"],
-                pdf["seq"],
-                pdf["warc_type"],
-                pdf["target_uri"],
-                pdf["member_bytes"],
-            ):
-                rec = fetch_warc_gz_record(
-                    bytes(member), wtype, None if uri is None else str(uri)
-                )
-                rows.append((sid, seq, wtype, uri, rec["block"]))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_GZ_FETCH_SCHEMA.fields]
-            )
+    def _fetch(sid, seq, wtype, uri, member):
+        rec = fetch_warc_gz_record(bytes(member), wtype, None if uri is None else str(uri))
+        yield sid, seq, wtype, uri, rec["block"]
 
-    return sliced.mapInPandas(_fetch, schema=WARC_GZ_FETCH_SCHEMA)
+    return map_rows(sliced, _fetch, WARC_GZ_FETCH_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1203,27 +1141,19 @@ def archive_warc_gz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                idx = warc_gz_index(_doc_warc_gz_segment(int(doc_id), text))
-                resp = [e for e in idx if e["warc_type"] == "response"]
-                rows.append(
-                    (
-                        doc_id,
-                        len(idx),
-                        1 + max(e["member"] for e in idx),
-                        len(resp),
-                        sum(e["content_length"] for e in idx),
-                        resp[-1]["target_uri"] if resp else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_GZ_IDX_SCHEMA.fields]
-            )
+    def _index(doc_id, text):
+        idx = warc_gz_index(_doc_warc_gz_segment(int(doc_id), text))
+        resp = [e for e in idx if e["warc_type"] == "response"]
+        yield (
+            doc_id,
+            len(idx),
+            1 + max(e["member"] for e in idx),
+            len(resp),
+            sum(e["content_length"] for e in idx),
+            resp[-1]["target_uri"] if resp else None,
+        )
 
-    return base.mapInPandas(_index, schema=WARC_GZ_IDX_SCHEMA)
+    return map_rows(base, _index, WARC_GZ_IDX_SCHEMA)
 
 
 # Member 0 = warcinfo (seq 0), member i+1 = response over text block i
@@ -1251,6 +1181,11 @@ WHERE n >= 3
 """
 
 
+_SEGMENT_SCHEMA = T.StructType(
+    [T.StructField("segment_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+)
+
+
 @query("archive_warc_gz_fetch", _WARC_FETCH_ORACLE)
 def archive_warc_gz_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random access through the side-car AS A PLAN: build the index
@@ -1260,17 +1195,10 @@ def archive_warc_gz_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     or truncated blocks mismatches ``bytes_fetched``."""
     docs = catalog.load_table(spark, sf_dir, "documents")
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (doc_id, _doc_warc_gz_segment(int(doc_id), text))
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["segment_id", "payload"])
+    def _build(doc_id, text):
+        yield doc_id, _doc_warc_gz_segment(int(doc_id), text)
 
-    segs = docs.select("doc_id", "text").mapInPandas(
-        _build, schema="segment_id long, payload binary"
-    )
+    segs = map_rows(docs.select("doc_id", "text"), _build, _SEGMENT_SCHEMA)
     index = build_warc_gz_index_df(segs, "segment_id", "payload")
     wanted = index.where(
         (F.col("warc_type") == "response") & (F.col("seq") % 3 == 0)
@@ -1364,36 +1292,24 @@ def build_zip_index_df(df: DataFrame, id_col: str, payload_col: str) -> DataFram
         F.col(id_col).alias("archive_id"), F.col(payload_col).alias("payload")
     )
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["archive_id"], pdf["payload"]):
-                payload = bytes(payload)
-                members = zip_members(payload)
-                bounds = sorted(m["offset"] for m in members) + [
-                    zip_cd_start(payload)
-                ]
-                ends = {
-                    off: bounds[i + 1] for i, off in enumerate(bounds[:-1])
-                }
-                for i, m in enumerate(members):
-                    rows.append(
-                        (
-                            aid,
-                            i,
-                            m["name"],
-                            m["method"],
-                            m["offset"],
-                            m["compressed_size"],
-                            m["uncompressed_size"],
-                            ends[m["offset"]],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ZIP_INDEX_SCHEMA.fields]
+    def _index(aid, payload):
+        payload = bytes(payload)
+        members = zip_members(payload)
+        bounds = sorted(m["offset"] for m in members) + [zip_cd_start(payload)]
+        ends = {off: bounds[i + 1] for i, off in enumerate(bounds[:-1])}
+        for i, m in enumerate(members):
+            yield (
+                aid,
+                i,
+                m["name"],
+                m["method"],
+                m["offset"],
+                m["compressed_size"],
+                m["uncompressed_size"],
+                ends[m["offset"]],
             )
 
-    return base.mapInPandas(_index, schema=ZIP_INDEX_SCHEMA)
+    return map_rows(base, _index, ZIP_INDEX_SCHEMA)
 
 
 ZIP_FETCH_SCHEMA = T.StructType(
@@ -1428,24 +1344,10 @@ def fetch_zip_members_df(archives: DataFrame, index: DataFrame) -> DataFrame:
         _guarded_slice("offset", "slice_end - offset").alias("member_bytes"),
     )
 
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, idx, name, usize, member in zip(
-                pdf["archive_id"],
-                pdf["idx"],
-                pdf["name"],
-                pdf["uncompressed_size"],
-                pdf["member_bytes"],
-            ):
-                rows.append(
-                    (aid, idx, name, fetch_zip_member(bytes(member), int(usize)))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ZIP_FETCH_SCHEMA.fields]
-            )
+    def _fetch(aid, idx, name, usize, member):
+        yield aid, idx, name, fetch_zip_member(bytes(member), int(usize))
 
-    return sliced.mapInPandas(_fetch, schema=ZIP_FETCH_SCHEMA)
+    return map_rows(sliced, _fetch, ZIP_FETCH_SCHEMA)
 
 
 TAR_INDEX_SCHEMA = T.StructType(
@@ -1472,19 +1374,11 @@ def build_tar_index_df(df: DataFrame, id_col: str, payload_col: str) -> DataFram
         F.col(id_col).alias("archive_id"), F.col(payload_col).alias("payload")
     )
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["archive_id"], pdf["payload"]):
-                for i, m in enumerate(tar_members(bytes(payload))):
-                    rows.append(
-                        (aid, i, m["name"], m["typeflag"], m["offset"], m["size"])
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TAR_INDEX_SCHEMA.fields]
-            )
+    def _index(aid, payload):
+        for i, m in enumerate(tar_members(bytes(payload))):
+            yield aid, i, m["name"], m["typeflag"], m["offset"], m["size"]
 
-    return base.mapInPandas(_index, schema=TAR_INDEX_SCHEMA)
+    return map_rows(base, _index, TAR_INDEX_SCHEMA)
 
 
 def fetch_tar_members_df(archives: DataFrame, index: DataFrame) -> DataFrame:
@@ -1601,16 +1495,8 @@ def decompress_payloads_df(df: DataFrame, id_col: str, payload_col: str) -> Data
         F.col(id_col).alias("payload_id"), F.col(payload_col).alias("payload")
     )
 
-    def _decompress(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pid, payload in zip(pdf["payload_id"], pdf["payload"]):
-                raw = bytes(payload)
-                rows.append(
-                    (pid, compression_codec(raw), decompress_payload(raw))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECOMPRESS_SCHEMA.fields]
-            )
+    def _decompress(pid, payload):
+        raw = bytes(payload)
+        yield pid, compression_codec(raw), decompress_payload(raw)
 
-    return base.mapInPandas(_decompress, schema=DECOMPRESS_SCHEMA)
+    return map_rows(base, _decompress, DECOMPRESS_SCHEMA)

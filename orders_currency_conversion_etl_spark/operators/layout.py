@@ -45,6 +45,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pandas_fn import map_rows
 from ..plans.registry import query
 from ..sources import catalog
 
@@ -486,9 +487,6 @@ def layout_hilbert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-ROWGROUP_FIXED_FIELDS = ["file", "row_group", "n_rows", "total_bytes"]
-
-
 def _rowgroup_schema(cols: "list[str]"):
     from pyspark.sql import types as T
 
@@ -540,44 +538,30 @@ def rowgroup_manifest(spark: SparkSession, path: str, cols: "list[str]") -> Data
         [(p,) for p in paths], "path string"
     ).repartition(min(len(paths), 64))
 
-    def _walk(batches):
-        import pandas as pd
+    def _walk(p):
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                md = pq.ParquetFile(p).metadata
-                idx = {
-                    md.schema.column(i).path: i for i in range(md.num_columns)
-                }
-                missing = [c for c in cols if c not in idx]
-                if missing:
-                    raise ValueError(
-                        f"columns {missing} not in parquet schema of {p}"
-                    )
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    rec = [
-                        os.path.basename(p),
-                        g,
-                        rg.num_rows,
-                        rg.total_byte_size,
+        md = pq.ParquetFile(p).metadata
+        idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        missing = [c for c in cols if c not in idx]
+        if missing:
+            raise ValueError(f"columns {missing} not in parquet schema of {p}")
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            rec = [os.path.basename(p), g, rg.num_rows, rg.total_byte_size]
+            for c in cols:
+                st = rg.column(idx[c]).statistics
+                if st is None:
+                    rec += [None, None, None]
+                else:
+                    rec += [
+                        str(st.min) if st.has_min_max else None,
+                        str(st.max) if st.has_min_max else None,
+                        int(st.null_count) if st.has_null_count else None,
                     ]
-                    for c in cols:
-                        st = rg.column(idx[c]).statistics
-                        if st is None:
-                            rec += [None, None, None]
-                        else:
-                            rec += [
-                                str(st.min) if st.has_min_max else None,
-                                str(st.max) if st.has_min_max else None,
-                                int(st.null_count) if st.has_null_count else None,
-                            ]
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            yield rec
 
-    return files_df.mapInPandas(_walk, schema=schema)
+    return map_rows(files_df, _walk, schema)
 
 
 _LAKE_ROWGROUP_ORACLE = """

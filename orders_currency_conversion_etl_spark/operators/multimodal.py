@@ -3,6 +3,10 @@
 Pattern: media lives in an opaque ``binary`` column next to typed
 metadata; decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so bytes never round-trip through Python row objects.
+Every row-wise stage is a per-row function handed to
+:func:`map_rows` (``functions/pandas_fn.py``), which owns the batch loop and
+names the output columns from the stage's schema; only the vectorized
+:func:`_feature_batches` writes its own batch function.
 At 100 TB the binary column rides the same parquet scan as everything
 else — column pruning means queries that don't touch payloads never
 read them, and ``maxPartitionBytes`` keeps per-task memory bounded.
@@ -52,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.pandas_fn import map_rows, row_batches
 from ..plans.registry import query
 from ..sources import catalog
 
@@ -193,7 +198,7 @@ FROM documents
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4 resize on a REAL pixel path, unconditionally on this rig
     (r9, VERDICT r8 ask #6 — the pre-r9 query was a byte-budget
-    truncation, kept as :func:`resize_payloads`): synthesizes a PPM
+    truncation): synthesizes a PPM
     (P6) image per document JVM-side (solid color keyed off md5(text),
     dims keyed off doc_id), then mapInPandas DECODES the actual bytes
     with the pure-Python codec, resamples nearest-neighbor in numpy,
@@ -304,21 +309,14 @@ def resize_images_nearest(
     ``target_w*target_h*3 + header`` bytes, keeping downstream shuffle
     and write volume predictable at 100 TB)."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, rgb = decode_ppm(bytes(payload))
-                out = resize_rgb_nearest(rgb, w, h, target_w, target_h)
-                rows.append(
-                    (doc_id, w, h, target_w, target_h, encode_ppm(target_w, target_h, out))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "new_width", "new_height", "payload"],
-            )
+    def _resize(doc_id, payload):
+        w, h, rgb = decode_ppm(bytes(payload))
+        out = resize_rgb_nearest(rgb, w, h, target_w, target_h)
+        yield doc_id, w, h, target_w, target_h, encode_ppm(target_w, target_h, out)
 
-    return docs_with_payload.mapInPandas(_batches, schema=RESIZED_IMAGE_SCHEMA)
+    return map_rows(
+        docs_with_payload.select("doc_id", "payload"), _resize, RESIZED_IMAGE_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -662,6 +660,25 @@ def decode_png(payload: bytes) -> tuple[int, int, str, bytes]:
     return w, h, base, grid.astype(np.uint8).tobytes()
 
 
+#: ``(doc_id, payload)``: what the executor-side PNG, JPEG and WAV encoders emit.
+_PAYLOAD_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+)
+
+
+def _solid_color_spec(docs: DataFrame) -> DataFrame:
+    """``(doc_id, w, h, rgb3)``: the solid-color image each codec
+    builder encodes — dims from doc_id (w in 4..16, h in 3..13), every
+    pixel the first 3 ascii-hex chars of md5(text), the
+    :func:`with_ppm_payload` convention the oracles reconstruct."""
+    return docs.select(
+        "doc_id",
+        (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
+        (F.lit(3) + F.col("doc_id") % 11).cast("int").alias("h"),
+        F.substring(F.md5(F.col("text")), 1, 3).alias("rgb3"),
+    )
+
+
 def with_png_payload(docs: DataFrame) -> DataFrame:
     """Attach a REAL compressed PNG per document: same solid-color /
     md5-keyed pixel convention as :func:`with_ppm_payload` (so the
@@ -670,27 +687,11 @@ def with_png_payload(docs: DataFrame) -> DataFrame:
     a mapInPandas stage because zlib can't be expressed JVM-side; at
     100 TB this is exactly where encode belongs anyway — with the data,
     Arrow-batched, never on the driver."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    base = docs.select(
-        "doc_id",
-        (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
-        (F.lit(3) + F.col("doc_id") % 11).cast("int").alias("h"),
-        F.substring(F.md5(F.col("text")), 1, 3).alias("rgb3"),
-    )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (doc_id, encode_png(w, h, rgb3.encode("ascii") * (w * h)))
-                for doc_id, w, h, rgb3 in zip(
-                    pdf["doc_id"], pdf["w"], pdf["h"], pdf["rgb3"]
-                )
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def _encode(doc_id, w, h, rgb3):
+        yield doc_id, encode_png(w, h, rgb3.encode("ascii") * (w * h))
 
-    return base.mapInPandas(_encode, schema=schema)
+    return map_rows(_solid_color_spec(docs), _encode, _PAYLOAD_SCHEMA)
 
 
 PNG_DECODE_SCHEMA = T.StructType(
@@ -733,21 +734,15 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     handling around its pandas intermediate
     (order_currency_conversion_dag.py:95-103); the decode tier itself
     is north-star EXT surface."""
+    import hashlib
+
     docs = catalog.load_table(spark, sf_dir, "documents")
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                import hashlib
+    def _decode(doc_id, payload):
+        w, h, mode, pixels = decode_png(bytes(payload))
+        yield doc_id, w, h, mode, hashlib.md5(pixels).hexdigest()
 
-                w, h, mode, pixels = decode_png(bytes(payload))
-                rows.append((doc_id, w, h, mode, hashlib.md5(pixels).hexdigest()))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "mode", "pixels_md5"]
-            )
-
-    return with_png_payload(docs).mapInPandas(_decode, schema=PNG_DECODE_SCHEMA)
+    return map_rows(with_png_payload(docs), _decode, PNG_DECODE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -768,25 +763,11 @@ def with_jpeg_payload(docs: DataFrame) -> DataFrame:
     """Attach a REAL baseline JPEG per document — same solid-color /
     md5-keyed convention as the PPM/PNG builders, but through an
     actual DCT + Huffman encode executor-side."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    base = docs.select(
-        "doc_id",
-        (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
-        (F.lit(3) + F.col("doc_id") % 11).cast("int").alias("h"),
-        F.substring(F.md5(F.col("text")), 1, 3).alias("rgb3"),
-    )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (doc_id, encode_jpeg(w, h, rgb3.encode("ascii") * (w * h)))
-                for doc_id, w, h, rgb3 in zip(pdf["doc_id"], pdf["w"], pdf["h"], pdf["rgb3"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def _encode(doc_id, w, h, rgb3):
+        yield doc_id, encode_jpeg(w, h, rgb3.encode("ascii") * (w * h))
 
-    return base.mapInPandas(_encode, schema=schema)
+    return map_rows(_solid_color_spec(docs), _encode, _PAYLOAD_SCHEMA)
 
 
 JPEG_DECODE_SCHEMA = T.StructType(
@@ -833,31 +814,16 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One narrow projection feeds one mapInPandas stage — the expected
     # color rides the same row as the pixels, so no join ever reunites
     # them (a doc_id shuffle that would be pure waste at 100 TB).
-    base = docs.select(
-        "doc_id",
-        (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
-        (F.lit(3) + F.col("doc_id") % 11).cast("int").alias("h"),
-        F.substring(F.md5(F.col("text")), 1, 3).alias("rgb3"),
-    )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, w0, h0, rgb3 in zip(pdf["doc_id"], pdf["w"], pdf["h"], pdf["rgb3"]):
-                color_bytes = rgb3.encode("ascii")
-                payload = encode_jpeg(w0, h0, color_bytes * (w0 * h0))
-                w, h, mode, pixels = decode_jpeg(payload)
-                a = np.frombuffer(pixels, dtype=np.uint8).astype(np.int32)
-                color = np.tile(
-                    np.frombuffer(color_bytes, dtype=np.uint8), w * h
-                ).astype(np.int32)
-                ok = bool(np.abs(a - color).max() <= _JPEG_TOL)
-                rows.append((doc_id, w, h, mode, ok))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "mode", "within_tol"]
-            )
+    def _roundtrip(doc_id, w0, h0, rgb3):
+        color_bytes = rgb3.encode("ascii")
+        payload = encode_jpeg(w0, h0, color_bytes * (w0 * h0))
+        w, h, mode, pixels = decode_jpeg(payload)
+        a = np.frombuffer(pixels, dtype=np.uint8).astype(np.int32)
+        color = np.tile(np.frombuffer(color_bytes, dtype=np.uint8), w * h).astype(np.int32)
+        yield doc_id, w, h, mode, bool(np.abs(a - color).max() <= _JPEG_TOL)
 
-    return base.mapInPandas(_roundtrip, schema=JPEG_DECODE_SCHEMA)
+    return map_rows(_solid_color_spec(docs), _roundtrip, JPEG_DECODE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1361,11 +1327,11 @@ def decode_image_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     NotImplementedError otherwise. The Spark plumbing (binary in,
     typed struct out, Arrow batching) is identical to
     :func:`_feature_batches`."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rows.append((doc_id, *image_dims(bytes(payload))))
-        yield pd.DataFrame(rows, columns=["doc_id", "width", "height", "mode"])
+    return row_batches(_image_dims_row, IMAGE_SCHEMA)(batches)
+
+
+def _image_dims_row(doc_id, payload):
+    yield doc_id, *image_dims(bytes(payload))
 
 
 def image_dims(payload: bytes) -> tuple[int, int, str]:
@@ -1433,45 +1399,15 @@ def image_dims(payload: bytes) -> tuple[int, int, str]:
 
 def decode_images(docs_with_payload: DataFrame) -> DataFrame:
     """mapInPandas wiring for dims extraction (header-only parse)."""
-    return docs_with_payload.mapInPandas(decode_image_batch, schema=IMAGE_SCHEMA)
+    return map_rows(
+        docs_with_payload.select("doc_id", "payload"), _image_dims_row, IMAGE_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
 # Resize / frame-sample: deterministic byte-level stand-ins with the
 # production batch shape (binary in -> binary/array out)
 # --------------------------------------------------------------------------
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("orig_len", T.IntegerType()),
-        T.StructField("new_len", T.IntegerType()),
-    ]
-)
-
-
-def resize_payloads(docs_with_payload: DataFrame, target_len: int = 64) -> DataFrame:
-    """'Resize' = truncate/keep bytes to a fixed budget — the stand-in
-    for image down-scaling. The contract production cares about:
-    binary column in, binary column out, bounded per-row output size
-    (what keeps shuffle/write volume predictable downstream)."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            resized = payloads.map(lambda b: bytes(b[:target_len]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": resized,
-                    "orig_len": payloads.map(len).astype("int32"),
-                    "new_len": resized.map(len).astype("int32"),
-                }
-            )
-
-    return docs_with_payload.mapInPandas(_batches, schema=RESIZED_SCHEMA)
-
 
 FRAMES_SCHEMA = T.StructType(
     [
@@ -1488,17 +1424,11 @@ def sample_frames(docs_with_payload: DataFrame, frame_len: int = 16, stride: int
     Row expansion happens executor-side inside the Arrow batch, never
     on the driver."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for i, off in enumerate(range(0, len(payload), stride)):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(bytes(payload[off : off + frame_len]))
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
+    def _frames(doc_id, payload):
+        for i, off in enumerate(range(0, len(payload), stride)):
+            yield doc_id, i, bytes(payload[off : off + frame_len])
 
-    return docs_with_payload.mapInPandas(_batches, schema=FRAMES_SCHEMA)
+    return map_rows(docs_with_payload.select("doc_id", "payload"), _frames, FRAMES_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1701,29 +1631,15 @@ def audio_features(docs_with_payload: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, nch, n_frames, pcm = decode_wav(bytes(payload))
-                a = np.frombuffer(pcm, dtype="<i2")
-                peak = int(np.abs(a.astype(np.int32)).max()) if a.size else 0
-                rows.append(
-                    (
-                        doc_id,
-                        rate,
-                        n_frames,
-                        n_frames * 1000 // rate,
-                        peak,
-                        hashlib.md5(pcm).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_rate", "n_frames", "duration_ms", "peak", "pcm_md5"],
-            )
+    def _features(doc_id, payload):
+        rate, nch, n_frames, pcm = decode_wav(bytes(payload))
+        a = np.frombuffer(pcm, dtype="<i2")
+        peak = int(np.abs(a.astype(np.int32)).max()) if a.size else 0
+        yield doc_id, rate, n_frames, n_frames * 1000 // rate, peak, hashlib.md5(pcm).hexdigest()
 
-    return docs_with_payload.mapInPandas(_batches, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(
+        docs_with_payload.select("doc_id", "payload"), _features, AUDIO_FEATURES_SCHEMA
+    )
 
 
 def with_wav_payload(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
@@ -1731,21 +1647,13 @@ def with_wav_payload(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     utf-8 text repeated/truncated to an even length — SQL-recomputable
     like every other payload builder here, and genuinely parsed back
     through the RIFF chunk walk."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    base = docs.select("doc_id", F.col("text"))
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                raw = raw[: len(raw) - (len(raw) % 2)] or b"\x00\x00"
-                rows.append((doc_id, encode_wav(sample_rate, raw)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def _encode(doc_id, text):
+        raw = text.encode("utf-8")
+        raw = raw[: len(raw) - (len(raw) % 2)] or b"\x00\x00"
+        yield doc_id, encode_wav(sample_rate, raw)
 
-    return base.mapInPandas(_encode, schema=schema)
+    return map_rows(docs.select("doc_id", F.col("text")), _encode, _PAYLOAD_SCHEMA)
 
 
 AUDIO_DECODE_SCHEMA = T.StructType(
@@ -1805,37 +1713,30 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", (F.col("doc_id") % 3).cast("int").alias("enc_id"), "text")
     table = _mulaw_table()
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, enc_id, text in zip(pdf["doc_id"], pdf["enc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                if enc_id == 2:
-                    # 0x7f and 0xff both decode to 0 but re-encode to
-                    # 0xff (the G.711 zero-collision) — remap 0x7f in
-                    # the synthesized code stream so the exact-involution
-                    # check never depends on the fixture's byte content
-                    # (r12 ADVICE fix; previously held only because
-                    # documents.text is printable ASCII).
-                    codes = (raw or b"\xff").replace(b"\x7f", b"\xff")
-                    source = table[np.frombuffer(codes, dtype=np.uint8)].astype("<i2").tobytes()
-                    fmt = "mulaw"
-                else:
-                    source = raw[: len(raw) - (len(raw) % 2)] or b"\x00\x00"
-                    fmt = "pcm16" if enc_id == 0 else "float32"
-                payload = encode_wav(8000, source, fmt=fmt)
-                enc, rate, _nch, n_frames, pcm = decode_wav_ex(payload)
-                if enc_id == 2:
-                    back = mulaw_encode_array(np.frombuffer(pcm, dtype="<i2")).tobytes()
-                    ok = back == codes
-                else:
-                    ok = pcm == source
-                rows.append((doc_id, enc, rate, n_frames, bool(ok)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "encoding", "sample_rate", "n_frames", "roundtrip_ok"]
-            )
+    def _roundtrip(doc_id, enc_id, text):
+        raw = text.encode("utf-8")
+        if enc_id == 2:
+            # 0x7f and 0xff both decode to 0 but re-encode to 0xff (the
+            # G.711 zero-collision) — remap 0x7f in the synthesized code
+            # stream so the exact-involution check never depends on the
+            # fixture's byte content (r12 ADVICE fix; previously held
+            # only because documents.text is printable ASCII).
+            codes = (raw or b"\xff").replace(b"\x7f", b"\xff")
+            source = table[np.frombuffer(codes, dtype=np.uint8)].astype("<i2").tobytes()
+            fmt = "mulaw"
+        else:
+            source = raw[: len(raw) - (len(raw) % 2)] or b"\x00\x00"
+            fmt = "pcm16" if enc_id == 0 else "float32"
+        payload = encode_wav(8000, source, fmt=fmt)
+        enc, rate, _nch, n_frames, pcm = decode_wav_ex(payload)
+        if enc_id == 2:
+            back = mulaw_encode_array(np.frombuffer(pcm, dtype="<i2")).tobytes()
+            ok = back == codes
+        else:
+            ok = pcm == source
+        yield doc_id, enc, rate, n_frames, bool(ok)
 
-    return base.mapInPandas(_roundtrip, schema=AUDIO_DECODE_SCHEMA)
+    return map_rows(base, _roundtrip, AUDIO_DECODE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1912,22 +1813,17 @@ def multimodal_webp_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = {0: "VP8", 1: "VP8L", 2: "VP8X"}
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text.encode("utf-8"))
-                w, h = 1 + n % 640, 1 + (n // 7) % 480
-                form = int(doc_id) % 3
-                alpha = int(doc_id) % 9 < 3
-                got_w, got_h, mode = image_dims(encode_webp_header(form, w, h, alpha))
-                rows.append((doc_id, names[form], got_w, got_h, mode))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "container", "width", "height", "mode"]
-            )
+    names = {0: "VP8", 1: "VP8L", 2: "VP8X"}
 
-    return base.mapInPandas(_roundtrip, schema=WEBP_DIMS_SCHEMA)
+    def _roundtrip(doc_id, text):
+        n = len(text.encode("utf-8"))
+        w, h = 1 + n % 640, 1 + (n // 7) % 480
+        form = int(doc_id) % 3
+        alpha = int(doc_id) % 9 < 3
+        got_w, got_h, mode = image_dims(encode_webp_header(form, w, h, alpha))
+        yield doc_id, names[form], got_w, got_h, mode
+
+    return map_rows(base, _roundtrip, WEBP_DIMS_SCHEMA)
 
 
 OGG_INFO_SCHEMA = T.StructType(
@@ -1978,17 +1874,12 @@ def multimodal_ogg_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                codec = "vorbis" if int(doc_id) % 2 == 0 else "opus"
-                page = encode_ogg_id_page(codec, 1 + int(doc_id) % 8, 8000 * (1 + int(doc_id) % 6))
-                got_codec, ch, rate = ogg_audio_info(page)
-                rows.append((doc_id, got_codec, ch, rate))
-            yield pd.DataFrame(rows, columns=["doc_id", "codec", "channels", "sample_rate"])
+    def _roundtrip(doc_id):
+        codec = "vorbis" if int(doc_id) % 2 == 0 else "opus"
+        page = encode_ogg_id_page(codec, 1 + int(doc_id) % 8, 8000 * (1 + int(doc_id) % 6))
+        yield doc_id, *ogg_audio_info(page)
 
-    return base.mapInPandas(_roundtrip, schema=OGG_INFO_SCHEMA)
+    return map_rows(base, _roundtrip, OGG_INFO_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2486,27 +2377,21 @@ def multimodal_mp4_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        brands = {0: "isom", 1: "mp42", 2: "avc1"}
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(text.encode("utf-8"))
-                w, h = 1 + n % 640, 1 + (n // 7) % 480
-                ts = 500 * (1 + d % 4)
-                payload = encode_mp4_header(
-                    brands[d % 3], w, h,
-                    duration=(1 + n % 120) * ts, timescale=ts,
-                    version=d % 2, large_moov=(d % 3 == 2),
-                )
-                brand, got_w, got_h, dur_ms = video_dims(payload)
-                rows.append((doc_id, brand, got_w, got_h, dur_ms))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "brand", "width", "height", "duration_ms"]
-            )
+    brands = {0: "isom", 1: "mp42", 2: "avc1"}
 
-    return base.mapInPandas(_roundtrip, schema=MP4_DIMS_SCHEMA)
+    def _roundtrip(doc_id, text):
+        d = int(doc_id)
+        n = len(text.encode("utf-8"))
+        w, h = 1 + n % 640, 1 + (n // 7) % 480
+        ts = 500 * (1 + d % 4)
+        payload = encode_mp4_header(
+            brands[d % 3], w, h,
+            duration=(1 + n % 120) * ts, timescale=ts,
+            version=d % 2, large_moov=(d % 3 == 2),
+        )
+        yield doc_id, *video_dims(payload)
+
+    return map_rows(base, _roundtrip, MP4_DIMS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2674,26 +2559,20 @@ def multimodal_tiff_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        photo_samples = {0: (1, 1), 1: (2, 3), 2: (3, 1), 3: (2, 4)}
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(text.encode("utf-8"))
-                w, h = 1 + n % 640, 1 + (n // 7) % 480
-                photo, samples = photo_samples[d % 4]
-                payload = encode_tiff_header(
-                    w, h, photo, samples,
-                    big_endian=(d % 2 == 1), use_long=(d % 3 == 0),
-                )
-                got_w, got_h, mode = image_dims(payload)
-                rows.append((doc_id, "MM" if d % 2 else "II", got_w, got_h, mode))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "byte_order", "width", "height", "mode"]
-            )
+    photo_samples = {0: (1, 1), 1: (2, 3), 2: (3, 1), 3: (2, 4)}
 
-    return base.mapInPandas(_roundtrip, schema=TIFF_DIMS_SCHEMA)
+    def _roundtrip(doc_id, text):
+        d = int(doc_id)
+        n = len(text.encode("utf-8"))
+        w, h = 1 + n % 640, 1 + (n // 7) % 480
+        photo, samples = photo_samples[d % 4]
+        payload = encode_tiff_header(
+            w, h, photo, samples,
+            big_endian=(d % 2 == 1), use_long=(d % 3 == 0),
+        )
+        yield doc_id, "MM" if d % 2 else "II", *image_dims(payload)
+
+    return map_rows(base, _roundtrip, TIFF_DIMS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2744,25 +2623,13 @@ def _palette_pixels_md5(spark: SparkSession, sf_dir: str, roundtrip) -> DataFram
         F.substring(F.md5(F.col("text")), 1, 12).alias("pal12"),
     )
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, w, h, pal12 in zip(
-                pdf["doc_id"], pdf["w"], pdf["h"], pdf["pal12"]
-            ):
-                w, h = int(w), int(h)
-                idx = bytes(p % 4 for p in range(w * h))
-                gw, gh, mode, rgb = roundtrip(
-                    doc_id, w, h, idx, pal12.encode("ascii")
-                )
-                rows.append(
-                    (doc_id, gw, gh, mode, hashlib.md5(rgb).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PIXELS_MD5_SCHEMA.fields]
-            )
+    def _pixels_md5(doc_id, w, h, pal12):
+        w, h = int(w), int(h)
+        idx = bytes(p % 4 for p in range(w * h))
+        gw, gh, mode, rgb = roundtrip(doc_id, w, h, idx, pal12.encode("ascii"))
+        yield doc_id, gw, gh, mode, hashlib.md5(rgb).hexdigest()
 
-    return base.mapInPandas(_batches, schema=PIXELS_MD5_SCHEMA)
+    return map_rows(base, _pixels_md5, PIXELS_MD5_SCHEMA)
 
 
 @query("multimodal_gif_decode", _PALETTE_PIXELS_ORACLE)
@@ -2856,34 +2723,27 @@ def multimodal_video_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                n = len(text)
-                w, h, k = 1 + n % 640, 1 + (n // 7) % 480, 1 + n % 120
-                if doc_id % 3 == 0:
-                    ts = 90_000 if n % 2 else 48_000
-                    payload = encode_mp4_header(
-                        "isom", w, h, k * ts, ts,
-                        version=n % 2, large_moov=(n % 5 == 0),
-                    )
-                elif doc_id % 3 == 1:
-                    payload = encode_avi_header(w, h, 50 * k, 20_000)
-                else:
-                    payload = encode_mkv_header(
-                        "webm" if n % 2 == 0 else "matroska",
-                        w, h, 1000.0 * k,
-                        unknown_size_segment=(n % 3 == 0),
-                    )
-                container, gw, gh, dur = video_dims(payload)
-                rows.append((doc_id, container, gw, gh, dur))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_DIMS_SCHEMA.fields]
+    def _dims(doc_id, text):
+        doc_id = int(doc_id)
+        n = len(text)
+        w, h, k = 1 + n % 640, 1 + (n // 7) % 480, 1 + n % 120
+        if doc_id % 3 == 0:
+            ts = 90_000 if n % 2 else 48_000
+            payload = encode_mp4_header(
+                "isom", w, h, k * ts, ts,
+                version=n % 2, large_moov=(n % 5 == 0),
             )
+        elif doc_id % 3 == 1:
+            payload = encode_avi_header(w, h, 50 * k, 20_000)
+        else:
+            payload = encode_mkv_header(
+                "webm" if n % 2 == 0 else "matroska",
+                w, h, 1000.0 * k,
+                unknown_size_segment=(n % 3 == 0),
+            )
+        yield doc_id, *video_dims(payload)
 
-    return base.mapInPandas(_dims, schema=VIDEO_DIMS_SCHEMA)
+    return map_rows(base, _dims, VIDEO_DIMS_SCHEMA)
 
 
 AUDIO_INFO_SCHEMA = T.StructType(
@@ -2926,32 +2786,23 @@ def multimodal_audio_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _info(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                n = len(text)
-                ch = 1 + n % 2
-                rate = (44100, 48000, 32000)[n % 3]
-                if doc_id % 4 == 0:
-                    fmt = ("pcm16", "float32", "mulaw")[n % 3]
-                    payload = encode_wav(rate, [0, 1] * ch, ch, fmt)
-                elif doc_id % 4 == 1:
-                    payload = encode_ogg_id_page(
-                        "vorbis" if n % 2 == 0 else "opus", ch, rate
-                    )
-                elif doc_id % 4 == 2:
-                    payload = encode_flac_header(ch, rate)
-                else:
-                    payload = encode_mp3_header(ch, rate, id3_size=(n % 7) * 3)
-                codec, gch, grate = audio_info(payload)
-                rows.append((doc_id, codec, gch, grate))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_INFO_SCHEMA.fields]
-            )
+    def _info(doc_id, text):
+        doc_id = int(doc_id)
+        n = len(text)
+        ch = 1 + n % 2
+        rate = (44100, 48000, 32000)[n % 3]
+        if doc_id % 4 == 0:
+            fmt = ("pcm16", "float32", "mulaw")[n % 3]
+            payload = encode_wav(rate, [0, 1] * ch, ch, fmt)
+        elif doc_id % 4 == 1:
+            payload = encode_ogg_id_page("vorbis" if n % 2 == 0 else "opus", ch, rate)
+        elif doc_id % 4 == 2:
+            payload = encode_flac_header(ch, rate)
+        else:
+            payload = encode_mp3_header(ch, rate, id3_size=(n % 7) * 3)
+        yield doc_id, *audio_info(payload)
 
-    return base.mapInPandas(_info, schema=AUDIO_INFO_SCHEMA)
+    return map_rows(base, _info, AUDIO_INFO_SCHEMA)
 
 
 IMAGE_DIMS_SCHEMA = T.StructType(
@@ -3034,35 +2885,25 @@ def multimodal_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
 
-    def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                n = len(text)
-                if doc_id % 4 == 1:
-                    if n % 9 == 0:
-                        w = h = 256
-                    else:
-                        w, h = 1 + n % 255, 1 + (n // 3) % 255
-                    payload = _ico_bytes(w, h)
-                else:
-                    w, h = 1 + n % 300, 1 + (n // 7) % 200
-                    if doc_id % 4 == 0:
-                        payload = _pnm_bytes((4, 5, 6)[n % 3], w, h)
-                    elif doc_id % 4 == 2:
-                        payload = _bmp_bytes(
-                            w, h, (24, 32, 8)[n % 3], topdown=(n % 2 == 1)
-                        )
-                    else:
-                        payload = encode_heif_header(
-                            "heic" if n % 2 == 0 else "avif",
-                            [(1, 1), (w, h)],
-                        )
-                gw, gh, mode = image_dims(payload)
-                rows.append((doc_id, gw, gh, mode))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_DIMS_SCHEMA.fields]
-            )
+    def _dims(doc_id, text):
+        doc_id = int(doc_id)
+        n = len(text)
+        if doc_id % 4 == 1:
+            if n % 9 == 0:
+                w = h = 256
+            else:
+                w, h = 1 + n % 255, 1 + (n // 3) % 255
+            payload = _ico_bytes(w, h)
+        else:
+            w, h = 1 + n % 300, 1 + (n // 7) % 200
+            if doc_id % 4 == 0:
+                payload = _pnm_bytes((4, 5, 6)[n % 3], w, h)
+            elif doc_id % 4 == 2:
+                payload = _bmp_bytes(w, h, (24, 32, 8)[n % 3], topdown=(n % 2 == 1))
+            else:
+                payload = encode_heif_header(
+                    "heic" if n % 2 == 0 else "avif", [(1, 1), (w, h)]
+                )
+        yield doc_id, *image_dims(payload)
 
-    return base.mapInPandas(_dims, schema=IMAGE_DIMS_SCHEMA)
+    return map_rows(base, _dims, IMAGE_DIMS_SCHEMA)

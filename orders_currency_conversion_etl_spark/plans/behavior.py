@@ -73,7 +73,9 @@ def cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides (SURVEY §4.3 family of traps). Both aggs shuffle on
     user_id once; the final rollup is over O(weeks²) groups.
     """
-    ev = _t(spark, sf_dir, "events")
+    # a NULL user_id is no user: the oracle's equi-join drops those
+    # rows, while the window below would count them as one more user
+    ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     act = (
         ev.select(
             "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("wk")

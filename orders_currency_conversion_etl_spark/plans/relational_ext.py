@@ -514,7 +514,7 @@ def higher_order_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MAP_ORACLE = """
 SELECT event_id,
        CAST(json_extract(props, '$.k') AS INT) AS k_from_map,
-       'k' AS first_key
+       json_keys(props)[1] AS first_key
 FROM events
 """
 

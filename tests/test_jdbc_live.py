@@ -239,7 +239,7 @@ def test_reference_ddl_types_roundtrip_exact(spark, tmp_path):
     DECIMAL(16,6), TIMESTAMP, UUID-as-VARCHAR(36) — and assert that
     every value, every Decimal scale, and the µs timestamp wall clock
     survive bit-for-bit. The dialect deltas this pins are documented
-    at sources/jdbc.py::POSTGRES_DIALECT_NOTES."""
+    in the sources/jdbc.py module docstring."""
     import uuid
 
     url = f"jdbc:derby:{tmp_path}/ddldb;create=true"

@@ -354,3 +354,83 @@ def test_schemaless_read_detector_fires():
         "    con.execute(f\"SELECT * FROM read_parquet('{p}')\")\n"
     )
     assert hits == [(2, "f"), (3, "f"), (5, "f")]
+
+
+#: The ``mapInPandas`` calls that are not row-wise, keyed by (file,
+#: enclosing function), each with why it writes its own batch function.
+#: Every row-wise stage goes through ``functions.pandas_fn.map_rows``.
+MAP_IN_PANDAS_ALLOWED = {
+    ("functions/pandas_fn.py", "map_rows"): "the row-mapping helper itself",
+    ("operators/multimodal.py", "multimodal_features"): (
+        "_feature_batches is vectorized over whole Series; a headline "
+        "query whose plan is pinned"
+    ),
+    ("operators/layout.py", "read_pruned_rowgroups"): (
+        "_read yields one whole pyarrow table per file, not rows"
+    ),
+    ("operators/layout.py", "lake_rowgroup_stats"): (
+        "_write gathers the partition's sorted stream into one parquet file"
+    ),
+    ("operators/sketches.py", "_mg_partition_summaries"): (
+        "mg carries Misra-Gries state across the partition's batches"
+    ),
+}
+
+
+def _map_in_pandas_calls(source: str) -> list[tuple[int, str]]:
+    """(line, innermost enclosing function) of each
+    ``<x>.mapInPandas(...)`` call."""
+    import ast
+
+    found = []
+
+    def visit(node, func: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mapInPandas"
+        ):
+            found.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(source), "<module>")
+    return found
+
+
+def test_row_wise_python_goes_through_map_rows():
+    """A hand-written ``for pdf in batches`` / ``rows.append`` /
+    ``pd.DataFrame(rows, columns=[...])`` loop repeats what
+    ``map_rows`` owns, and its column list can drift from the schema.
+    Only the allow-listed stages, which are not row-wise, call
+    ``mapInPandas`` themselves."""
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "orders_currency_conversion_etl_spark")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for n in sorted(files):
+            if not n.endswith(".py"):
+                continue
+            path = os.path.join(root, n)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path) as f:
+                offenders += [
+                    f"{rel}:{line} in {func}"
+                    for line, func in _map_in_pandas_calls(f.read())
+                    if (rel, func) not in MAP_IN_PANDAS_ALLOWED
+                ]
+    assert not offenders, f"row-wise mapInPandas outside map_rows: {offenders}"
+
+
+def test_map_in_pandas_detector_fires():
+    hits = _map_in_pandas_calls(
+        "def f(df, s):\n"
+        "    def g(batches):\n"
+        "        yield from batches\n"
+        "    df.select('a').mapInPandas(g, schema=s)\n"
+        "    return df.mapInArrow(g, s)\n"
+    )
+    assert hits == [(4, "f")]
