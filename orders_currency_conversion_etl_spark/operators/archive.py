@@ -253,12 +253,44 @@ ZIP_MEMBERS_SCHEMA = T.StructType(
     ]
 )
 
-# One manifest member (the doc_id rendered as text) plus one member per
-# 64-byte chunk of the utf-8 text — every reported number recomputes
-# from the text length in SQL.
-_ZIP_MEMBERS_ORACLE = """
+def _doc_members(doc_id, text: str) -> "list[tuple[int | None, bytes]]":
+    """The members every archive fixture packs a document into:
+    (None, the doc_id rendered as text) for the manifest, then (i, the
+    i-th 64-byte chunk of the utf-8 text)."""
+    raw = text.encode("utf-8")
+    return [(None, str(int(doc_id)).encode())] + [
+        (i, raw[i * 64 : (i + 1) * 64]) for i in range((len(raw) + 63) // 64)
+    ]
+
+
+def _named_members(doc_id, text: str) -> "list[tuple[str, bytes]]":
+    """ZIP/TAR members: manifest.txt, then part0000.txt, part0001.txt, ..."""
+    return [
+        ("manifest.txt" if i is None else f"part{i:04d}.txt", b)
+        for i, b in _doc_members(doc_id, text)
+    ]
+
+
+def _doc_warc_records(doc_id, text: str) -> "list[tuple[str, str | None, bytes]]":
+    """WARC records: a warcinfo record over the manifest, then one
+    response record per chunk with a deterministic target URI."""
+    return [
+        ("warcinfo", None, b)
+        if i is None
+        else ("response", f"https://corpus.local/{int(doc_id)}/{i}", b)
+        for i, b in _doc_members(doc_id, text)
+    ]
+
+
+#: The oracles' chunk count for a document (members = 1 + chunks).
+_N_CHUNKS_SQL = "(strlen(text) + 63) // 64"
+
+# One manifest member plus one member per 64-byte chunk of the utf-8
+# text — every reported number recomputes from the text length in SQL.
+# The TAR walk is checked against the same oracle.
+_ZIP_MEMBERS_ORACLE = f"""
 SELECT doc_id,
-       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS members,
+       CAST(1 + {_N_CHUNKS_SQL} AS INT) AS members,
        CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
            AS total_bytes,
        'manifest.txt' AS first_name,
@@ -285,12 +317,7 @@ def archive_zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", "text")
 
     def _roundtrip(doc_id, text):
-        raw = text.encode("utf-8")
-        parts = [("manifest.txt", str(int(doc_id)).encode())] + [
-            (f"part{i:04d}.txt", raw[i * 64 : (i + 1) * 64])
-            for i in range((len(raw) + 63) // 64)
-        ]
-        listed = zip_members(build_zip(parts))
+        listed = zip_members(build_zip(_named_members(doc_id, text)))
         yield (
             doc_id,
             len(listed),
@@ -449,23 +476,7 @@ TAR_MEMBERS_SCHEMA = T.StructType(
     ]
 )
 
-# Same member arithmetic as the ZIP twin — so the two walks are
-# cross-checked against one oracle shape.
-_TAR_MEMBERS_ORACLE = """
-SELECT doc_id,
-       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS members,
-       CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
-           AS total_bytes,
-       'manifest.txt' AS first_name,
-       CASE WHEN strlen(text) = 0 THEN 'manifest.txt'
-            ELSE 'part' || lpad(CAST((strlen(text) - 1) // 64 AS VARCHAR), 4, '0')
-                 || '.txt'
-       END AS last_name
-FROM documents
-"""
-
-
-@query("archive_tar_members", _TAR_MEMBERS_ORACLE)
+@query("archive_tar_members", _ZIP_MEMBERS_ORACLE)
 def archive_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TAR enumeration, driver-oracled (r13): the ZIP query's exact
     twin over the USTAR walk — per document, pack the text into a
@@ -480,12 +491,7 @@ def archive_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", "text")
 
     def _roundtrip(doc_id, text):
-        raw = text.encode("utf-8")
-        parts = [("manifest.txt", str(int(doc_id)).encode())] + [
-            (f"part{i:04d}.txt", raw[i * 64 : (i + 1) * 64])
-            for i in range((len(raw) + 63) // 64)
-        ]
-        listed = tar_members(build_tar(parts))
+        listed = tar_members(build_tar(_named_members(doc_id, text)))
         yield (
             doc_id,
             len(listed),
@@ -645,10 +651,10 @@ WARC_RECORDS_SCHEMA = T.StructType(
 # deterministic target URI — every reported value recomputes from the
 # text length in SQL (the ZIP/TAR oracle shape, extended with the URI
 # columns so the header FIELD reads are under the hash too).
-_WARC_RECORDS_ORACLE = """
+_WARC_RECORDS_ORACLE = f"""
 SELECT doc_id,
-       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS records,
-       CAST((strlen(text) + 63) // 64 AS INT) AS responses,
+       CAST(1 + {_N_CHUNKS_SQL} AS INT) AS records,
+       CAST({_N_CHUNKS_SQL} AS INT) AS responses,
        CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
            AS total_block_bytes,
        CASE WHEN strlen(text) = 0 THEN NULL
@@ -679,18 +685,7 @@ def archive_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", "text")
 
     def _roundtrip(doc_id, text):
-        raw = text.encode("utf-8")
-        recs: list[tuple[str, "str | None", bytes]] = [
-            ("warcinfo", None, str(int(doc_id)).encode())
-        ] + [
-            (
-                "response",
-                f"https://corpus.local/{int(doc_id)}/{i}",
-                raw[i * 64 : (i + 1) * 64],
-            )
-            for i in range((len(raw) + 63) // 64)
-        ]
-        listed = warc_records(build_warc(recs))
+        listed = warc_records(build_warc(_doc_warc_records(doc_id, text)))
         resp = [r for r in listed if r["warc_type"] == "response"]
         yield (
             doc_id,
@@ -826,9 +821,9 @@ GZIP_MEMBERS_SCHEMA = T.StructType(
 # One FNAME'd manifest member + one anonymous member per 64-byte chunk;
 # uncompressed totals recompute from strlen (compressed sizes are
 # deliberately NOT reported — deflate output is not SQL-derivable).
-_GZIP_MEMBERS_ORACLE = """
+_GZIP_MEMBERS_ORACLE = f"""
 SELECT doc_id,
-       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS members,
+       CAST(1 + {_N_CHUNKS_SQL} AS INT) AS members,
        CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
            AS total_bytes,
        CAST(1 AS INT) AS named_members,
@@ -850,10 +845,8 @@ def archive_gzip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", "text")
 
     def _roundtrip(doc_id, text):
-        raw = text.encode("utf-8")
-        blocks = [("manifest.txt", str(int(doc_id)).encode())] + [
-            (None, raw[i * 64 : (i + 1) * 64])
-            for i in range((len(raw) + 63) // 64)
+        blocks = [
+            ("manifest.txt" if i is None else None, b) for i, b in _doc_members(doc_id, text)
         ]
         listed = gzip_members(build_gzip_members(blocks))
         yield (
@@ -1085,23 +1078,9 @@ def fetch_warc_gz_records_df(segments: DataFrame, index: DataFrame) -> DataFrame
 
 
 def _doc_warc_gz_segment(doc_id: int, text: str) -> bytes:
-    raw = text.encode("utf-8")
-    blocks = [(None, build_warc([("warcinfo", None, str(doc_id).encode())]))] + [
-        (
-            None,
-            build_warc(
-                [
-                    (
-                        "response",
-                        f"https://corpus.local/{doc_id}/{i}",
-                        raw[i * 64 : (i + 1) * 64],
-                    )
-                ]
-            ),
-        )
-        for i in range((len(raw) + 63) // 64)
-    ]
-    return build_gzip_members(blocks)
+    return build_gzip_members(
+        [(None, build_warc([rec])) for rec in _doc_warc_records(doc_id, text)]
+    )
 
 
 WARC_GZ_IDX_SCHEMA = T.StructType(
@@ -1115,11 +1094,11 @@ WARC_GZ_IDX_SCHEMA = T.StructType(
     ]
 )
 
-_WARC_GZ_IDX_ORACLE = """
+_WARC_GZ_IDX_ORACLE = f"""
 SELECT doc_id,
-       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS records,
-       CAST(1 + (strlen(text) + 63) // 64 AS INT) AS members,
-       CAST((strlen(text) + 63) // 64 AS INT) AS responses,
+       CAST(1 + {_N_CHUNKS_SQL} AS INT) AS records,
+       CAST(1 + {_N_CHUNKS_SQL} AS INT) AS members,
+       CAST({_N_CHUNKS_SQL} AS INT) AS responses,
        CAST(strlen(text) + strlen(CAST(doc_id AS VARCHAR)) AS BIGINT)
            AS total_block_bytes,
        CASE WHEN strlen(text) = 0 THEN NULL
@@ -1162,11 +1141,11 @@ def archive_warc_gz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n = ceil(len/64) blocks, that is n // 3 fetches, all 64 bytes except
 # the final block (size ((len-1) % 64) + 1) when n % 3 == 0. Docs with
 # fewer than 3 blocks fetch nothing and drop out.
-_WARC_FETCH_ORACLE = """
+_WARC_FETCH_ORACLE = f"""
 WITH d AS (
     SELECT doc_id,
            strlen(text) AS len,
-           (strlen(text) + 63) // 64 AS n
+           {_N_CHUNKS_SQL} AS n
     FROM documents
 )
 SELECT doc_id AS segment_id,

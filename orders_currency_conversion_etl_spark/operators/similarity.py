@@ -1,20 +1,36 @@
 """Similarity search over the ``embeddings`` table (SURVEY L2).
 
-Two strategies:
+Every ANN query is built from one set of parameterized kernels:
 
-- brute-force top-k cosine: the exact baseline. Queries broadcast; the
-  corpus never moves; per-partition top-k via window rank. Linear in
-  corpus size — the right choice when Q (query count) is small.
-- hyperplane-LSH buckets: the scale path. Every vector gets a bucket
-  id from the sign pattern of dot products with B fixed random
-  hyperplanes; search only touches the query's bucket. Expected bucket
-  population n/2^B turns a 100 TB scan into a partition-pruned probe
-  when the corpus is written bucket-partitioned.
+- candidates: :func:`brute_candidates` (every other vector),
+  :func:`lsh_candidates` (the query's hyperplane bucket, plus every
+  bucket within ``probe_radius`` bit flips), :func:`ivf_candidates`
+  (the cells a probe frame names: the query's own cell, or its
+  ``nprobe`` nearest), :func:`pq_candidates` and
+  :func:`ivf_pq_candidates` (asymmetric PQ distance over all codes,
+  or over the probed cells' codes);
+- the building blocks under them: :func:`lsh_planes` /
+  :func:`with_bucket`, :func:`ivf_centroids`, :func:`ivf_assign`
+  (every vector's centroids ranked, so ``nprobe`` is a filter),
+  :func:`own_cell` and :func:`pq_encode`;
+- :func:`top_k`, the per-query ranking window every query ends in.
+
+The registered ``knn_*`` queries call these kernels at the shipped
+constants (``LSH_PLANES``, ``IVF_NPROBE``, ``PQ_M``, ``PQ_CODEWORDS``)
+and add only their final projection. The planted-recall gate
+(``tests/test_ann_recall.py``) and ``scripts/eval_ann_planted.py``
+call the same kernels at swept parameters, so the recall they measure
+is the recall of the code the registered queries run. In every kernel
+the query side is a broadcast and the corpus is never shuffled for the
+probe: at scale the corpus is written partitioned by bucket or cell
+and a query reads only the partitions it probes.
 
 The hyperplanes are generated once from a fixed seed and inlined as
 literals on BOTH the Spark and the oracle side, so there is no
 cross-engine randomness and the oracle check is exact (recall loss vs
-brute force is a property of the *operator*, faithfully mirrored).
+brute force is a property of the *operator*, faithfully mirrored). The
+DuckDB oracles are independent SQL, built from one function or CTE per
+block (top-k, bucket probes, centroid assignment, PQ encoding).
 
 All dot products are sequential left folds in DOUBLE — verified
 bit-identical between Spark's ``aggregate`` and DuckDB's
@@ -39,21 +55,302 @@ LSH_PLANES = 6  # 2^6 = 64 buckets; ~8 vectors/bucket at 500 rows
 EMB_DIM = 64
 _RNG_SEED = 42
 
+#: Minimum centroid stride AND target cell count. The stride ADAPTS to
+#: corpus size — GREATEST(64, max_id DIV 64 + 1) — so the centroid set
+#: is capped at ~64 cells no matter how big the corpus gets. r5's sf3
+#: decade caught the fixed-stride version: n/64 centroids made the
+#: assignment cross-join QUADRATIC in corpus size (60k vectors × 937
+#: centroids = 56M cosine folds, 200 s at sf3; the adaptive stride is
+#: 60k × 64 = linear, and at every driver/test scale max_id DIV 64 + 1
+#: < 64, so small-scale results are bit-identical to before). Both
+#: engines compute the stride with the same integer arithmetic.
+IVF_CENTROID_STRIDE = 64
 
-def lsh_planes() -> list[list[float]]:
-    """B fixed random hyperplanes (seeded, generated once, inlined as
-    literals on both engines)."""
-    rng = np.random.default_rng(_RNG_SEED)
-    return rng.standard_normal((LSH_PLANES, EMB_DIM)).tolist()
+#: Cells the query probes in knn_ivf_nprobe. Tuned on the planted-
+#: neighbor benchmark (ANN_EVAL.json v2, sf0.1): nprobe=1 (knn_ivf's
+#: implicit setting) measures recall@10 = 0.72; nprobe=2 = 0.855 at
+#: 5.0% of the corpus scanned — past the stated >=0.8 @ <=15% target;
+#: nprobe=4 = 0.959 at 9.9% for callers who want more.
+IVF_NPROBE = 2
+
+PQ_M = 4                      # subspaces
+PQ_CODEWORDS = 16             # codewords per subspace => codes fit in 4 bits
+
+
+# --------------------------------------------------------------------------
+# Search kernels
+# --------------------------------------------------------------------------
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return catalog.load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
 
-def _with_norm(e: DataFrame) -> DataFrame:
+def with_norm(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding) -> (vec_id, embedding, nrm): the corpus
+    shape every cosine kernel takes."""
     return e.withColumn("nrm", F.sqrt(dot_cols(F.col("embedding"), F.col("embedding"))))
 
+
+def _queries(d: DataFrame, query_ids, key: str | None = None) -> DataFrame:
+    """The query rows of ``d``, renamed for the probe side of a join:
+    (query_id, q_emb, q_nrm[, q_<key>])."""
+    cols = [
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    ]
+    if key:
+        cols.append(F.col(key).alias(f"q_{key}"))
+    return d.filter(F.col("vec_id").isin(*query_ids)).select(*cols)
+
+
+def _cos_candidates(
+    corpus: DataFrame, probes: DataFrame, key: str | None = None, probe_key: str | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine) for every corpus row a probe row
+    reaches: the broadcast probes join the corpus on ``key`` (any row
+    when no key), never pairing a query with itself."""
+    cond = F.col("vec_id") != F.col("query_id")
+    if key:
+        cond = (F.col(key) == F.col(probe_key)) & cond
+    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
+    return corpus.join(F.broadcast(probes), cond).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
+    )
+
+
+def top_k(cand: DataFrame, score_col: str, ascending: bool) -> DataFrame:
+    """The TOP_K best candidates per query, ranked 1..TOP_K with a
+    deterministic neighbor_id tiebreak:
+    (query_id, neighbor_id, rank, score_col)."""
+    order = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "rank", score_col)
+    )
+
+
+def brute_candidates(d: DataFrame, query_ids=QUERY_IDS) -> DataFrame:
+    """Exact search: every other vector is a candidate."""
+    return _cos_candidates(d, _queries(d, query_ids))
+
+
+def lsh_planes(n_planes: int = LSH_PLANES) -> list[list[float]]:
+    """``n_planes`` seeded random hyperplanes (generated once, inlined
+    as literals on both engines)."""
+    rng = np.random.default_rng(_RNG_SEED)
+    return rng.standard_normal((n_planes, EMB_DIM)).tolist()
+
+
+def with_bucket(d: DataFrame, n_planes: int = LSH_PLANES) -> DataFrame:
+    """``d`` plus its LSH ``bucket``: bit i is the sign of the dot
+    product with hyperplane i."""
+    b = None
+    for i, plane in enumerate(lsh_planes(n_planes)):
+        dot = dot_cols(F.col("embedding"), F.array(*[F.lit(v) for v in plane]))
+        term = F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        b = term if b is None else b + term
+    return d.withColumn("bucket", b)
+
+
+def _hamming_masks(n_planes: int, radius: int) -> list[int]:
+    """XOR masks for every bucket within Hamming distance ``radius``
+    (radius 0 -> [0]; 1 adds single-bit flips; 2 adds bit pairs)."""
+    masks = [0]
+    if radius >= 1:
+        masks += [1 << i for i in range(n_planes)]
+    if radius >= 2:
+        masks += [
+            (1 << i) | (1 << j)
+            for i in range(n_planes)
+            for j in range(i + 1, n_planes)
+        ]
+    if radius >= 3:
+        raise ValueError("probe radius > 2 scans most of the corpus; use more planes")
+    return masks
+
+
+def lsh_candidates(
+    d: DataFrame, n_planes: int = LSH_PLANES, probe_radius: int = 0, query_ids=QUERY_IDS
+) -> DataFrame:
+    """Hyperplane-LSH candidates: ``d`` bucketed over ``n_planes``
+    planes, then the vectors in the query's bucket and, for
+    ``probe_radius`` > 0, in every bucket within that many bit flips."""
+    return _lsh_probe(with_bucket(d, n_planes), n_planes, probe_radius, query_ids)
+
+
+def _lsh_probe(b: DataFrame, n_planes: int, probe_radius: int, query_ids) -> DataFrame:
+    """The probe join over a corpus already bucketed at ``n_planes``
+    planes. Only the tiny query side explodes into probes; the corpus
+    keeps its one bucket, so at scale a query reads its probed
+    partitions, never the corpus."""
+    q = _queries(b, query_ids, "bucket")
+    if probe_radius == 0:
+        return _cos_candidates(b, q, "bucket", "q_bucket")
+    # Spark ^ is bitwise xor; the oracle's xor() computes the same integer
+    flips = [F.col("q_bucket")] + [
+        F.expr(f"q_bucket ^ {m}") for m in _hamming_masks(n_planes, probe_radius)[1:]
+    ]
+    probes = q.select(
+        "query_id", "q_emb", "q_nrm", F.explode(F.array(*flips)).alias("p_bucket")
+    )
+    return _cos_candidates(b, probes, "bucket", "p_bucket")
+
+
+def ivf_centroids(d: DataFrame) -> DataFrame:
+    """Adaptive-stride deterministic centroids (cid, cemb, cnrm): one
+    1-row aggregate broadcast, then a filter."""
+    # coalesce: empty corpus → MAX is NULL → degrade to the constant
+    # stride identically on both engines (ADVICE r5).
+    stride = IVF_CENTROID_STRIDE
+    st = d.agg(
+        F.coalesce(
+            F.greatest(F.lit(stride), F.expr(f"(MAX(vec_id) DIV {stride}) + 1")),
+            F.lit(stride),
+        ).alias("_stride")
+    )
+    return (
+        d.crossJoin(F.broadcast(st))
+        .filter(F.col("vec_id") % F.col("_stride") == 0)
+        .select(
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("cemb"),
+            F.col("nrm").alias("cnrm"),
+        )
+    )
+
+
+def ivf_assign(d: DataFrame) -> DataFrame:
+    """Every vector against every broadcast centroid, ranked by cosine
+    (ties on cid): ``rn`` = 1 is the vector's cell and ``rn`` <= nprobe
+    its nprobe nearest cells, so ``ranked.filter(rn <= nprobe)`` is
+    the probe source :func:`ivf_candidates` takes. The expensive IVF
+    step."""
+    cent = ivf_centroids(d)
+    cos_c = dot_cols(F.col("embedding"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm"))
+    w_assign = Window.partitionBy("vec_id").orderBy(F.col("cent_cos").desc(), F.col("cid"))
+    return (
+        d.crossJoin(F.broadcast(cent))
+        .withColumn("cent_cos", cos_c)
+        .withColumn("rn", F.row_number().over(w_assign))
+    )
+
+
+def own_cell(ranked: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm, cid): each vector in its nearest cell —
+    the frame build_ivf_index writes."""
+    return ranked.filter(F.col("rn") == 1).select("vec_id", "embedding", "nrm", "cid")
+
+
+def ivf_candidates(cells: DataFrame, probed: DataFrame, query_ids=QUERY_IDS) -> DataFrame:
+    """IVF candidates: the vectors of ``cells`` (each vector in its own
+    cell — :func:`own_cell` output, or the index build_ivf_index wrote)
+    whose cell a query row of ``probed`` names. For ``nprobe`` = 1 the
+    probe source is ``cells`` itself; for more, ``ivf_assign``'s ranked
+    rows with ``rn`` <= nprobe. Each vector lives in one cell and a
+    query's probed cells are distinct, so no (query, neighbor) pair
+    appears twice."""
+    return _cos_candidates(cells, _queries(probed, query_ids, "cid"), "cid", "q_cid")
+
+
+def l2sq_cols(x: F.Column, y: F.Column) -> F.Column:
+    """Sequential left-fold squared-L2 distance in DOUBLE — same fold
+    shape as :func:`~..operators.dedup.dot_cols` (0.0 + x1 is exactly
+    x1, so the init-carrying Spark fold matches DuckDB's init-free
+    list_reduce bit-for-bit)."""
+    return F.aggregate(
+        F.zip_with(
+            x, y, lambda p, q: (p.cast("double") - q.cast("double"))
+            * (p.cast("double") - q.cast("double"))
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def pq_encode(
+    e: DataFrame, m: int = PQ_M, codewords: int = PQ_CODEWORDS, query_ids=QUERY_IDS
+) -> tuple[DataFrame, DataFrame]:
+    """Product quantization over ``m`` subspaces: (codes, dtab).
+
+    codes  — every vector's per-subspace nearest-codeword id
+             (vec_id, m, code): the m-int compressed corpus.
+    dtab   — the query-side asymmetric distance table
+             (query_id, m, code, dqfx): fixed-point squared-L2 from
+             each query subvector to every codeword, Q x m x codewords
+             rows, broadcastable.
+
+    Codebooks are the deterministic corpus prefix (vec_id <
+    ``codewords``), so results reproduce without training.
+    """
+    if EMB_DIM % m:
+        raise ValueError(f"m={m} must divide EMB_DIM={EMB_DIM}")
+    sub = EMB_DIM // m
+    m_subs = F.array(*[F.slice("embedding", i * sub + 1, sub) for i in range(m)])
+    subs = e.select("vec_id", F.posexplode(m_subs).alias("m", "sub"))
+    cw = subs.filter(F.col("vec_id") < codewords).select(
+        "m", F.col("vec_id").alias("code"), F.col("sub").alias("cwsub")
+    )
+    dfx = F.floor(l2sq_cols(F.col("sub"), F.col("cwsub")) * F.lit(1e12)).cast("bigint")
+    enc0 = subs.join(F.broadcast(cw), "m").select("vec_id", "m", "code", dfx.alias("dfx"))
+    w_enc = Window.partitionBy("vec_id", "m").orderBy(F.col("dfx").asc(), F.col("code").asc())
+    codes = (
+        enc0.withColumn("rn", F.row_number().over(w_enc))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "m", "code")
+    )
+    dtab = enc0.filter(F.col("vec_id").isin(*query_ids)).select(
+        F.col("vec_id").alias("query_id"), "m", "code", F.col("dfx").alias("dqfx")
+    )
+    return codes, dtab
+
+
+def _adc(scored: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, adcfx): the sum of a candidate's
+    per-subspace table lookups."""
+    return scored.groupBy("query_id", F.col("vec_id").alias("neighbor_id")).agg(
+        F.sum("dqfx").alias("adcfx")
+    )
+
+
+def pq_candidates(
+    e: DataFrame, m: int = PQ_M, codewords: int = PQ_CODEWORDS, query_ids=QUERY_IDS
+) -> DataFrame:
+    """PQ-ADC candidates: every code row, scored by broadcasting the
+    distance table onto the codes. Every vector is a candidate — PQ
+    saves bytes (m ints vs EMB_DIM floats per scanned row), not rows."""
+    codes, dtab = pq_encode(e, m, codewords, query_ids)
+    return _adc(
+        codes.join(F.broadcast(dtab), ["m", "code"]).filter(
+            F.col("vec_id") != F.col("query_id")
+        )
+    )
+
+
+def ivf_pq_candidates(
+    d: DataFrame, cells: DataFrame, probed: DataFrame, m: int = PQ_M, query_ids=QUERY_IDS
+) -> DataFrame:
+    """IVF routing + PQ-ADC scoring: ADC-score only the code rows of
+    ``d`` in the cells the query rows of ``probed`` name (``cells`` and
+    ``probed`` as for :func:`ivf_candidates`)."""
+    probes = _queries(probed, query_ids, "cid")
+    codes, dtab = pq_encode(d, m, PQ_CODEWORDS, query_ids)
+    return _adc(
+        codes.join(cells.select("vec_id", "cid"), "vec_id")
+        .join(
+            F.broadcast(probes.select("query_id", "q_cid")),
+            (F.col("cid") == F.col("q_cid")) & (F.col("vec_id") != F.col("query_id")),
+        )
+        .join(F.broadcast(dtab), ["query_id", "m", "code"])
+    )
+
+
+# --------------------------------------------------------------------------
+# DuckDB oracles: one builder per block
+# --------------------------------------------------------------------------
 
 _DUCK_EMB_CTE = """
 WITH e AS (
@@ -65,26 +362,167 @@ WITH e AS (
     FROM e
 )"""
 
-_DUCK_COS = (
-    "list_reduce(list_transform(list_zip(q.emb, c.emb), p -> p[1]*p[2]), (acc,x) -> acc+x)"
-    " / (q.nrm * c.nrm)"
+
+def _duck_dot(a: str, b: str) -> str:
+    return f"list_reduce(list_transform(list_zip({a}, {b}), p -> p[1]*p[2]), (acc,x) -> acc+x)"
+
+
+_DUCK_COS = f"{_duck_dot('q.emb', 'c.emb')} / (q.nrm * c.nrm)"
+
+
+def _duck_top_k(cands: str, order: str, out: str) -> str:
+    """Top-TOP_K rows per query_id of the candidate SELECT ``cands``,
+    ordered by ``order`` then neighbor_id; returns (query_id,
+    neighbor_id, rank, ``out``)."""
+    return f"""SELECT query_id, neighbor_id, rank, {out} FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY {order}, neighbor_id) AS rank
+    FROM ({cands})
+)
+WHERE rank <= {TOP_K}"""
+
+
+def _duck_cos_top_k(q: str, c: str, on: str = "") -> str:
+    """Cosine top-k of the query rows of ``q`` against the rows of
+    ``c`` (both vec_id, emb, nrm) that pass the join condition ``on``."""
+    return _duck_top_k(
+        f"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_DUCK_COS} AS cosine "
+        f"FROM {q} q JOIN {c} c ON {on}c.vec_id <> q.vec_id "
+        f"WHERE q.vec_id IN {QUERY_IDS!r}",
+        "cosine DESC",
+        "cosine",
+    )
+
+
+def _plane_sql(plane: list[float]) -> str:
+    return "[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in plane) + "]"
+
+
+def _bucket_sql(emb: str) -> str:
+    """Bucket id: sum of sign bits across planes (DuckDB syntax)."""
+    bits = [
+        f"(CASE WHEN {_duck_dot(emb, _plane_sql(plane))} > 0 THEN {1 << i} ELSE 0 END)"
+        for i, plane in enumerate(lsh_planes())
+    ]
+    return "(" + " + ".join(bits) + ")"
+
+
+def _duck_lsh_cte(radius: int) -> str:
+    """CTEs b (every vector with its bucket) and probes (one row per
+    query and probed bucket)."""
+    pbs = ", ".join(f"xor(bucket, {m})" for m in _hamming_masks(LSH_PLANES, radius))
+    return f"""b AS (
+    SELECT vec_id, emb, nrm, {_bucket_sql("emb")} AS bucket FROM d
+), probes AS (
+    SELECT vec_id, emb, nrm, u.pb AS p_bucket
+    FROM b, unnest([{pbs}]) AS u(pb)
+    WHERE vec_id IN {QUERY_IDS!r}
+)"""
+
+
+_DUCK_LSH_TOP_K = _duck_cos_top_k("probes", "b", "c.bucket = q.p_bucket AND ")
+
+
+def _lsh_oracle(radius: int) -> str:
+    return f"{_DUCK_EMB_CTE}, {_duck_lsh_cte(radius)}\n{_DUCK_LSH_TOP_K}\n"
+
+
+#: The adaptive-stride centroids and every vector's ranked centroids:
+#: rn = 1 in ``cell``, rn <= nprobe for a query's probes.
+_DUCK_ASSIGN_CTE = f"""st AS (
+    SELECT COALESCE(GREATEST({IVF_CENTROID_STRIDE}, (MAX(vec_id) // {IVF_CENTROID_STRIDE}) + 1), {IVF_CENTROID_STRIDE}) AS stride FROM d
+), cent AS (
+    SELECT vec_id AS cid, emb AS cemb, nrm AS cnrm FROM d, st
+    WHERE vec_id % stride = 0
+), assign AS (
+    SELECT d.vec_id, d.emb, d.nrm, c.cid,
+           ROW_NUMBER() OVER (
+               PARTITION BY d.vec_id
+               ORDER BY {_duck_dot('d.emb', 'c.cemb')} / (d.nrm * c.cnrm) DESC, c.cid) AS rn
+    FROM d, cent c
+), cell AS (
+    SELECT vec_id, emb, nrm, cid FROM assign WHERE rn = 1
+)"""
+
+
+def _ivf_oracle(nprobe: int) -> str:
+    probes = f"(SELECT * FROM assign WHERE rn <= {nprobe})"
+    return (
+        f"{_DUCK_EMB_CTE}, {_DUCK_ASSIGN_CTE}\n"
+        f"{_duck_cos_top_k(probes, 'cell', 'c.cid = q.cid AND ')}\n"
+    )
+
+
+_DUCK_L2 = (
+    "list_reduce(list_transform(list_zip(s.sub, c.cwsub),"
+    " p -> (p[1]-p[2])*(p[1]-p[2])), (acc,x) -> acc+x)"
 )
 
-_BRUTE_ORACLE = f"""
-{_DUCK_EMB_CTE}
-SELECT query_id, neighbor_id, rank, cosine FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_DUCK_COS} AS cosine,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-    FROM d q JOIN d c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id IN {QUERY_IDS!r}
-)
-WHERE rank <= {TOP_K}
+#: PQ encoding: subvectors, the corpus-prefix codebooks, fixed-point
+#: distances to every codeword, nearest codes and the query tables.
+_DUCK_PQ_CTE = f"""subs AS (
+    SELECT e.vec_id, t.m, list_slice(e.emb, t.m*{EMB_DIM // PQ_M}+1, t.m*{EMB_DIM // PQ_M}+{EMB_DIM // PQ_M}) AS sub
+    FROM e, range({PQ_M}) t(m)
+), cw AS (
+    SELECT m, vec_id AS code, sub AS cwsub FROM subs WHERE vec_id < {PQ_CODEWORDS}
+), enc0 AS (
+    SELECT s.vec_id, s.m, c.code,
+           CAST(floor({_DUCK_L2} * 1e12) AS BIGINT) AS dfx
+    FROM subs s JOIN cw c ON c.m = s.m
+), codes AS (
+    SELECT vec_id, m, code FROM (
+        SELECT vec_id, m, code,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dfx, code) AS rn
+        FROM enc0
+    ) WHERE rn = 1
+), dtab AS (
+    SELECT vec_id AS query_id, m, code, dfx AS dqfx FROM enc0
+    WHERE vec_id IN {QUERY_IDS!r}
+)"""
+
+
+def _duck_adc_top_k(cands: str) -> str:
+    return _duck_top_k(cands, "adcfx", "CAST(adcfx AS DOUBLE) / 1e12 AS adc_dist")
+
+
+def _pq_oracle() -> str:
+    return f"""{_DUCK_EMB_CTE}, {_DUCK_PQ_CTE}
+{_duck_adc_top_k('''
+    SELECT t.query_id, codes.vec_id AS neighbor_id, SUM(t.dqfx) AS adcfx
+    FROM codes JOIN dtab t ON t.m = codes.m AND t.code = codes.code
+    WHERE codes.vec_id <> t.query_id
+    GROUP BY 1, 2''')}
 """
 
 
-@query("knn_brute_force", _BRUTE_ORACLE)
+def _ivf_pq_oracle() -> str:
+    return f"""{_DUCK_EMB_CTE}, {_DUCK_ASSIGN_CTE}, {_DUCK_PQ_CTE}
+{_duck_adc_top_k(f'''
+    SELECT q.vec_id AS query_id, codes.vec_id AS neighbor_id, SUM(t.dqfx) AS adcfx
+    FROM codes
+    JOIN cell ON cell.vec_id = codes.vec_id
+    JOIN cell q ON q.vec_id IN {QUERY_IDS!r} AND q.cid = cell.cid
+                AND codes.vec_id <> q.vec_id
+    JOIN dtab t ON t.query_id = q.vec_id AND t.m = codes.m AND t.code = codes.code
+    GROUP BY 1, 2''')}
+"""
+
+
+# --------------------------------------------------------------------------
+# Registered ANN queries: a kernel at the shipped constants plus the
+# final projection
+# --------------------------------------------------------------------------
+
+
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return with_norm(_emb(spark, sf_dir))
+
+
+def _cosine_top_k(cand: DataFrame) -> DataFrame:
+    return top_k(cand, "cosine", ascending=False)
+
+
+@query("knn_brute_force", f"{_DUCK_EMB_CTE}\n{_duck_cos_top_k('d', 'd')}\n")
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast the (tiny) query set against the
     corpus; rank per query with a deterministic vec_id tiebreak.
@@ -99,170 +537,10 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
         "knn_brute_force",
         "knn_lsh_bucketed/knn_ivf",
     )
-    d = _with_norm(_emb(spark, sf_dir))
-    q = d.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        d.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _cosine_top_k(brute_candidates(_corpus(spark, sf_dir)))
 
 
-def _plane_sql(plane: list[float]) -> str:
-    return "[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in plane) + "]"
-
-
-def _bucket_sql(emb: str) -> str:
-    """Bucket id: sum of sign bits across planes (DuckDB syntax)."""
-    bits = []
-    for i, plane in enumerate(lsh_planes()):
-        dot = (
-            f"list_reduce(list_transform(list_zip({emb}, {_plane_sql(plane)}), "
-            "p -> p[1]*p[2]), (acc,x) -> acc+x)"
-        )
-        bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << i} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
-
-
-def _lsh_oracle() -> str:
-    return f"""
-{_DUCK_EMB_CTE}, b AS (
-    SELECT vec_id, emb, nrm, {_bucket_sql("emb")} AS bucket FROM d
-)
-SELECT query_id, neighbor_id, rank, cosine FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_DUCK_COS} AS cosine,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-    FROM b q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    WHERE q.vec_id IN {QUERY_IDS!r}
-)
-WHERE rank <= {TOP_K}
-"""
-
-
-def bucket_col(emb_col: F.Column) -> F.Column:
-    """Spark-side LSH bucket id for an array<float> embedding column."""
-    b = None
-    for i, plane in enumerate(lsh_planes()):
-        dot = dot_cols(emb_col, F.array(*[F.lit(v) for v in plane]))
-        term = F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        b = term if b is None else b + term
-    return b
-
-
-#: Minimum centroid stride AND target cell count. The stride ADAPTS to
-#: corpus size — GREATEST(64, max_id DIV 64 + 1) — so the centroid set
-#: is capped at ~64 cells no matter how big the corpus gets. r5's sf3
-#: decade caught the fixed-stride version: n/64 centroids made the
-#: assignment cross-join QUADRATIC in corpus size (60k vectors × 937
-#: centroids = 56M cosine folds, 200 s at sf3; the adaptive stride is
-#: 60k × 64 = linear, and at every driver/test scale max_id DIV 64 + 1
-#: < 64, so small-scale results are bit-identical to before). Both
-#: engines compute the stride with the same integer arithmetic.
-IVF_CENTROID_STRIDE = 64
-
-#: Shared oracle fragment: the adaptive-stride centroid CTE chain.
-_DUCK_CENT_CTE = f"""st AS (
-    SELECT COALESCE(GREATEST({IVF_CENTROID_STRIDE}, (MAX(vec_id) // {IVF_CENTROID_STRIDE}) + 1), {IVF_CENTROID_STRIDE}) AS stride FROM d
-), cent AS (
-    SELECT vec_id AS cid, emb AS cemb, nrm AS cnrm FROM d, st
-    WHERE vec_id % stride = 0
-)"""
-
-
-def _ivf_centroids(d):
-    """Adaptive-stride deterministic centroids (the Spark twin of
-    _DUCK_CENT_CTE — one 1-row aggregate broadcast, then a filter)."""
-    # coalesce: empty corpus → MAX is NULL → degrade to the constant
-    # stride identically on both engines (ADVICE r5).
-    st = d.agg(
-        F.coalesce(
-            F.greatest(
-                F.lit(IVF_CENTROID_STRIDE),
-                F.expr(f"(MAX(vec_id) DIV {IVF_CENTROID_STRIDE}) + 1"),
-            ),
-            F.lit(IVF_CENTROID_STRIDE),
-        ).alias("_stride")
-    )
-    return (
-        d.crossJoin(F.broadcast(st))
-        .filter(F.col("vec_id") % F.col("_stride") == 0)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cemb"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
-
-
-def _ivf_oracle() -> str:
-    return f"""
-{_DUCK_EMB_CTE}, {_DUCK_CENT_CTE}, scored AS (
-    SELECT d.vec_id, d.emb, d.nrm, c.cid,
-           ROW_NUMBER() OVER (
-               PARTITION BY d.vec_id
-               ORDER BY list_reduce(list_transform(list_zip(d.emb, c.cemb), p -> p[1]*p[2]), (acc,x) -> acc+x)
-                        / (d.nrm * c.cnrm) DESC, c.cid) AS rn
-    FROM d, cent c
-), cell AS (
-    SELECT vec_id, emb, nrm, cid FROM scored WHERE rn = 1
-)
-SELECT query_id, neighbor_id, rank, cosine FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_DUCK_COS} AS cosine,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-    FROM cell q JOIN cell c ON c.cid = q.cid AND c.vec_id <> q.vec_id
-    WHERE q.vec_id IN {QUERY_IDS!r}
-)
-WHERE rank <= {TOP_K}
-"""
-
-
-#: Cells the query probes in knn_ivf_nprobe. Tuned on the planted-
-#: neighbor benchmark (ANN_EVAL.json v2, sf0.1): nprobe=1 (knn_ivf's
-#: implicit setting) measures recall@10 = 0.72; nprobe=2 = 0.855 at
-#: 5.0% of the corpus scanned — past the stated >=0.8 @ <=15% target;
-#: nprobe=4 = 0.959 at 9.9% for callers who want more.
-IVF_NPROBE = 2
-
-
-def _ivf_nprobe_oracle() -> str:
-    return f"""
-{_DUCK_EMB_CTE}, {_DUCK_CENT_CTE}, scored AS (
-    SELECT d.vec_id, d.emb, d.nrm, c.cid,
-           ROW_NUMBER() OVER (
-               PARTITION BY d.vec_id
-               ORDER BY list_reduce(list_transform(list_zip(d.emb, c.cemb), p -> p[1]*p[2]), (acc,x) -> acc+x)
-                        / (d.nrm * c.cnrm) DESC, c.cid) AS rn
-    FROM d, cent c
-), cell AS (
-    SELECT vec_id, emb, nrm, cid FROM scored WHERE rn = 1
-), qprobe AS (
-    SELECT vec_id, emb, nrm, cid FROM scored
-    WHERE rn <= {IVF_NPROBE} AND vec_id IN {QUERY_IDS!r}
-)
-SELECT query_id, neighbor_id, rank, cosine FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_DUCK_COS} AS cosine,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-    FROM qprobe q JOIN cell c ON c.cid = q.cid AND c.vec_id <> q.vec_id
-)
-WHERE rank <= {TOP_K}
-"""
-
-
-@query("knn_ivf_nprobe", _ivf_nprobe_oracle())
+@query("knn_ivf_nprobe", _ivf_oracle(IVF_NPROBE))
 def knn_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with multi-cell probing — the TUNED IVF configuration from
     the planted-neighbor benchmark (ANN_EVAL.json v2): the corpus keeps
@@ -273,44 +551,15 @@ def knn_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape is unchanged from knn_ivf: probing costs the query
     nprobe partition-pruned cell reads — the corpus is never
-    re-shuffled and the query side stays a broadcast. Each corpus
-    vector lives in exactly one cell and probe cells are distinct, so
-    no (query, neighbor) pair can appear twice — no dedup step.
+    re-shuffled and the query side stays a broadcast.
     CI gate: tests/test_ann_recall.py pins recall >= 0.8 at <= 15%
     scanned on a planted corpus."""
-    d = _with_norm(_emb(spark, sf_dir))
-    cent = _ivf_centroids(d)
-    cos_c = dot_cols(F.col("embedding"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm"))
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("cent_cos").desc(), F.col("cid"))
-    ranked = (
-        d.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cos_c)
-        .withColumn("rn", F.row_number().over(w_assign))
-    )
-    cell = ranked.filter(F.col("rn") == 1).select("vec_id", "embedding", "nrm", "cid")
-    qprobe = ranked.filter(
-        F.col("vec_id").isin(*QUERY_IDS) & (F.col("rn") <= IVF_NPROBE)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("cid").alias("q_cid"),
-    )
-    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cell.join(
-            F.broadcast(qprobe),
-            (F.col("cid") == F.col("q_cid")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    ranked = ivf_assign(_corpus(spark, sf_dir))
+    probed = ranked.filter(F.col("rn") <= IVF_NPROBE)
+    return _cosine_top_k(ivf_candidates(own_cell(ranked), probed))
 
 
-@query("knn_ivf", _ivf_oracle())
+@query("knn_ivf", _ivf_oracle(1))
 def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via IVF (inverted-file) cells: every vector is assigned to
     its nearest centroid; a query searches only its own cell.
@@ -321,47 +570,8 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches FAISS IVF: centroids broadcast (tiny), assignment is one
     map-side pass, and the corpus written partitioned-by-cell makes a
     query touch 1/n_cells of the data via partition pruning."""
-    d = _with_norm(_emb(spark, sf_dir))
-    cell = _ivf_cells(d)
-    return _ivf_search(cell)
-
-
-def _ivf_cells(d: DataFrame) -> DataFrame:
-    """Nearest-centroid cell assignment: (vec_id, embedding, nrm, cid).
-    The expensive IVF step — the piece build_ivf_index persists."""
-    cent = _ivf_centroids(d)
-    cos_c = dot_cols(F.col("embedding"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm"))
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("cent_cos").desc(), F.col("cid"))
-    return (
-        d.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cos_c)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "nrm", "cid")
-    )
-
-
-def _ivf_search(cell: DataFrame) -> DataFrame:
-    """In-cell exact-cosine top-k over an assigned corpus (shared by the
-    derive and materialized IVF queries)."""
-    q = cell.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("cid").alias("q_cid"),
-    )
-    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cell.join(
-            F.broadcast(q),
-            (F.col("cid") == F.col("q_cid")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    cells = own_cell(ivf_assign(_corpus(spark, sf_dir)))
+    return _cosine_top_k(ivf_candidates(cells, cells))
 
 
 def ann_index_path(sf_dir: str) -> str:
@@ -392,7 +602,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, path: str | None = None) -
     path = path or ann_index_path(sf_dir)
     if state_cache.is_materialized(path):
         return path
-    cell = _ivf_cells(_with_norm(_emb(spark, sf_dir)))
+    cell = own_cell(ivf_assign(_corpus(spark, sf_dir)))
 
     def write_parts(tmp: str) -> None:
         cell.write.mode("overwrite").partitionBy("cid").parquet(os.path.join(tmp, "cells"))
@@ -400,7 +610,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, path: str | None = None) -
     return state_cache.materialize(path, write_parts)
 
 
-@query("knn_ivf_materialized", _ivf_oracle())
+@query("knn_ivf_materialized", _ivf_oracle(1))
 def knn_ivf_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search over the MATERIALIZED index: identical results to
     knn_ivf (same oracle), but the centroid cross-join assignment is
@@ -412,37 +622,19 @@ def knn_ivf_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = build_ivf_index(spark, sf_dir)
-    cell = catalog.read_parquet(spark, os.path.join(path, "cells")).select(
+    cells = catalog.read_parquet(spark, os.path.join(path, "cells")).select(
         "vec_id", "embedding", "nrm", "cid"
     )
-    return _ivf_search(cell)
+    return _cosine_top_k(ivf_candidates(cells, cells))
 
 
-@query("knn_lsh_bucketed", _lsh_oracle())
+@query("knn_lsh_bucketed", _lsh_oracle(0))
 def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via hyperplane-LSH bucketing: candidates share the query's
     bucket; exact cosine ranks within. At scale, write the corpus
     partitioned by bucket once, and each query reads 1/2^B of the data
     (partition pruning) instead of scanning everything."""
-    d = _with_norm(_emb(spark, sf_dir)).withColumn("bucket", bucket_col(F.col("embedding")))
-    q = d.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        d.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _cosine_top_k(lsh_candidates(_corpus(spark, sf_dir)))
 
 
 def lsh_index_path(sf_dir: str) -> str:
@@ -470,7 +662,7 @@ def build_lsh_index(spark: SparkSession, sf_dir: str, path: str | None = None) -
     path = path or lsh_index_path(sf_dir)
     if state_cache.is_materialized(path):
         return path
-    d = _with_norm(_emb(spark, sf_dir)).withColumn("bucket", bucket_col(F.col("embedding")))
+    d = with_bucket(_corpus(spark, sf_dir))
 
     def write_parts(tmp: str) -> None:
         d.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(tmp, "buckets"))
@@ -478,28 +670,7 @@ def build_lsh_index(spark: SparkSession, sf_dir: str, path: str | None = None) -
     return state_cache.materialize(path, write_parts)
 
 
-def _multiprobe_oracle() -> str:
-    flips = ", ".join(f"xor(bucket, {1 << i})" for i in range(LSH_PLANES))
-    return f"""
-{_DUCK_EMB_CTE}, b AS (
-    SELECT vec_id, emb, nrm, {_bucket_sql("emb")} AS bucket FROM d
-), probes AS (
-    SELECT vec_id, emb, nrm, u.pb AS p_bucket
-    FROM b, unnest([bucket, {flips}]) AS u(pb)
-    WHERE vec_id IN {QUERY_IDS!r}
-)
-SELECT query_id, neighbor_id, rank, cosine FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_DUCK_COS} AS cosine,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-    FROM probes q JOIN b c ON c.bucket = q.p_bucket AND c.vec_id <> q.vec_id
-)
-WHERE rank <= {TOP_K}
-"""
-
-
-@query("knn_lsh_materialized", _multiprobe_oracle())
+@query("knn_lsh_materialized", _lsh_oracle(1))
 def knn_lsh_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH over the MATERIALIZED bucket-partitioned index:
     identical results to knn_lsh_multiprobe (same oracle — the tuned
@@ -513,46 +684,19 @@ def knn_lsh_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = build_lsh_index(spark, sf_dir)
-    d = catalog.read_parquet(spark, os.path.join(path, "buckets")).select(
+    b = catalog.read_parquet(spark, os.path.join(path, "buckets")).select(
         "vec_id", "embedding", "nrm", "bucket"
     )
-    q = d.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    probes = q.select(
-        "query_id",
-        "q_emb",
-        "q_nrm",
-        F.explode(
-            F.array(
-                F.col("q_bucket"),
-                *[F.expr(f"q_bucket ^ {1 << i}") for i in range(LSH_PLANES)],
-            )
-        ).alias("p_bucket"),
-    )
-    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        d.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("p_bucket")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    # the index is bucketed at LSH_PLANES (its derivation token)
+    return _cosine_top_k(_lsh_probe(b, LSH_PLANES, 1, QUERY_IDS))
 
 
-@query("knn_lsh_multiprobe", _multiprobe_oracle())
+@query("knn_lsh_multiprobe", _lsh_oracle(1))
 def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH: probe the query's bucket PLUS every bucket at
     Hamming distance 1 (one hyperplane flipped) — the standard answer
     when single-bucket recall is too low (ANN_EVAL.json measures
-    single-bucket recall@10 at 0.07 on this corpus; near-boundary
+    single-bucket recall@10 at 0.49 on the planted corpus; near-boundary
     neighbors land one sign flip away, and probing them recovers most
     of the loss for (B+1)/2^B of the corpus scanned instead of 1/2^B).
 
@@ -561,38 +705,7 @@ def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     B+1 ways before the broadcast join, so at 100 TB a query reads
     (B+1) partitions via pruning — probes cost partitions, never a
     full scan."""
-    d = _with_norm(_emb(spark, sf_dir)).withColumn("bucket", bucket_col(F.col("embedding")))
-    q = d.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    # q_bucket plus its B single-bit flips (Spark ^ = bitwise xor; the
-    # oracle's xor() computes the same integer)
-    probes = q.select(
-        "query_id",
-        "q_emb",
-        "q_nrm",
-        F.explode(
-            F.array(
-                F.col("q_bucket"),
-                *[F.expr(f"q_bucket ^ {1 << i}") for i in range(LSH_PLANES)],
-            )
-        ).alias("p_bucket"),
-    )
-    cos = dot_cols(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        d.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("p_bucket")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _cosine_top_k(lsh_candidates(_corpus(spark, sf_dir), probe_radius=1))
 
 
 # --------------------------------------------------------------------------
@@ -650,24 +763,10 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _recall_oracle() -> str:
     return f"""
-{_DUCK_EMB_CTE}, b AS (
-    SELECT vec_id, emb, nrm, {_bucket_sql("emb")} AS bucket FROM d
-), brute AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-        FROM d q JOIN d c ON c.vec_id <> q.vec_id
-        WHERE q.vec_id IN {QUERY_IDS!r}
-    ) WHERE rank <= {TOP_K}
+{_DUCK_EMB_CTE}, {_duck_lsh_cte(0)}, brute AS (
+{_duck_cos_top_k("d", "d")}
 ), approx AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {_DUCK_COS} DESC, c.vec_id) AS rank
-        FROM b q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-        WHERE q.vec_id IN {QUERY_IDS!r}
-    ) WHERE rank <= {TOP_K}
+{_DUCK_LSH_TOP_K}
 )
 SELECT brute.query_id,
        COUNT(*) AS n_exact,
@@ -955,106 +1054,14 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # residual-free variant)
 # --------------------------------------------------------------------------
 
-PQ_M = 4                      # subspaces
-PQ_SUB = EMB_DIM // PQ_M      # dims per subspace (16)
-PQ_CODEWORDS = 16             # codewords per subspace => codes fit in 4 bits
 
-
-def l2sq_cols(x: F.Column, y: F.Column) -> F.Column:
-    """Sequential left-fold squared-L2 distance in DOUBLE — same fold
-    shape as :func:`~..operators.dedup.dot_cols` (0.0 + x1 is exactly
-    x1, so the init-carrying Spark fold matches DuckDB's init-free
-    list_reduce bit-for-bit)."""
-    return F.aggregate(
-        F.zip_with(
-            x, y, lambda p, q: (p.cast("double") - q.cast("double"))
-            * (p.cast("double") - q.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _adc_top_k(cand: DataFrame) -> DataFrame:
+    return top_k(cand, "adcfx", ascending=True).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        (F.col("adcfx").cast("double") / F.lit(1e12)).alias("adc_dist"),
     )
-
-
-def _pq_oracle() -> str:
-    sub = PQ_SUB
-    l2 = (
-        "list_reduce(list_transform(list_zip({a}, {b}),"
-        " p -> (p[1]-p[2])*(p[1]-p[2])), (acc,x) -> acc+x)"
-    )
-    return f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-    FROM embeddings
-), subs AS (
-    SELECT e.vec_id, t.m, list_slice(e.emb, t.m*{sub}+1, t.m*{sub}+{sub}) AS sub
-    FROM e, range({PQ_M}) t(m)
-), cw AS (
-    SELECT m, vec_id AS code, sub AS cwsub FROM subs WHERE vec_id < {PQ_CODEWORDS}
-), enc0 AS (
-    SELECT s.vec_id, s.m, c.code,
-           CAST(floor({l2.format(a='s.sub', b='c.cwsub')} * 1e12) AS BIGINT) AS dfx
-    FROM subs s JOIN cw c ON c.m = s.m
-), codes AS (
-    SELECT vec_id, m, code FROM (
-        SELECT vec_id, m, code,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dfx, code) AS rn
-        FROM enc0
-    ) WHERE rn = 1
-), dtab AS (
-    SELECT vec_id AS query_id, m, code, dfx AS dqfx FROM enc0
-    WHERE vec_id IN {QUERY_IDS!r}
-), adc AS (
-    SELECT d.query_id, codes.vec_id AS neighbor_id, SUM(d.dqfx) AS adcfx
-    FROM codes JOIN dtab d ON d.m = codes.m AND d.code = codes.code
-    WHERE codes.vec_id <> d.query_id
-    GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, rank, CAST(adcfx AS DOUBLE) / 1e12 AS adc_dist FROM (
-    SELECT query_id, neighbor_id, adcfx,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY adcfx, neighbor_id) AS rank
-    FROM adc
-)
-WHERE rank <= {TOP_K}
-"""
-
-
-
-
-def _pq_parts(e: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared PQ machinery: (codes, dtab).
-
-    codes  — every vector's per-subspace nearest-codeword id
-             (vec_id, m, code): the M-int compressed corpus.
-    dtab   — the query-side asymmetric distance table
-             (query_id, m, code, dqfx): fixed-point squared-L2 from
-             each query subvector to every codeword, Q x M x K rows,
-             broadcastable.
-    """
-    m_subs = F.array(
-        *[F.slice("embedding", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)]
-    )
-    subs = e.select("vec_id", F.posexplode(m_subs).alias("m", "sub"))
-    cw = (
-        subs.filter(F.col("vec_id") < PQ_CODEWORDS)
-        .select("m", F.col("vec_id").alias("code"), F.col("sub").alias("cwsub"))
-    )
-    dfx = F.floor(l2sq_cols(F.col("sub"), F.col("cwsub")) * F.lit(1e12)).cast("bigint")
-    enc0 = subs.join(F.broadcast(cw), "m").select(
-        "vec_id", "m", "code", dfx.alias("dfx")
-    )
-    w_enc = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("dfx").asc(), F.col("code").asc()
-    )
-    codes = (
-        enc0.withColumn("rn", F.row_number().over(w_enc))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", "code")
-    )
-    dtab = enc0.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), "m", "code", F.col("dfx").alias("dqfx")
-    )
-    return codes, dtab
 
 
 @query("knn_pq_adc", _pq_oracle())
@@ -1088,78 +1095,7 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     never does); ADC sums BIGINTs exactly; ties break on (code) for
     encoding and (neighbor_id) for ranking.
     """
-    codes, dtab = _pq_parts(_emb(spark, sf_dir))
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("adcfx").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        codes.join(F.broadcast(dtab), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dqfx").alias("adcfx"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            (F.col("adcfx").cast("double") / F.lit(1e12)).alias("adc_dist"),
-        )
-    )
-
-
-def _ivf_pq_oracle() -> str:
-    sub = PQ_SUB
-    l2 = (
-        "list_reduce(list_transform(list_zip({a}, {b}),"
-        " p -> (p[1]-p[2])*(p[1]-p[2])), (acc,x) -> acc+x)"
-    )
-    return f"""
-{_DUCK_EMB_CTE}, {_DUCK_CENT_CTE}, assign AS (
-    SELECT d.vec_id, c.cid,
-           ROW_NUMBER() OVER (
-               PARTITION BY d.vec_id
-               ORDER BY list_reduce(list_transform(list_zip(d.emb, c.cemb), p -> p[1]*p[2]), (acc,x) -> acc+x)
-                        / (d.nrm * c.cnrm) DESC, c.cid) AS rn
-    FROM d, cent c
-), cell AS (
-    SELECT vec_id, cid FROM assign WHERE rn = 1
-), subs AS (
-    SELECT e.vec_id, t.m, list_slice(e.emb, t.m*{sub}+1, t.m*{sub}+{sub}) AS sub
-    FROM e, range({PQ_M}) t(m)
-), cw AS (
-    SELECT m, vec_id AS code, sub AS cwsub FROM subs WHERE vec_id < {PQ_CODEWORDS}
-), enc0 AS (
-    SELECT s.vec_id, s.m, c.code,
-           CAST(floor({l2.format(a='s.sub', b='c.cwsub')} * 1e12) AS BIGINT) AS dfx
-    FROM subs s JOIN cw c ON c.m = s.m
-), codes AS (
-    SELECT vec_id, m, code FROM (
-        SELECT vec_id, m, code,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dfx, code) AS rn
-        FROM enc0
-    ) WHERE rn = 1
-), dtab AS (
-    SELECT vec_id AS query_id, m, code, dfx AS dqfx FROM enc0
-    WHERE vec_id IN {QUERY_IDS!r}
-), qcell AS (
-    SELECT vec_id AS query_id, cid FROM cell WHERE vec_id IN {QUERY_IDS!r}
-), adc AS (
-    SELECT q.query_id, codes.vec_id AS neighbor_id, SUM(t.dqfx) AS adcfx
-    FROM codes
-    JOIN cell ON cell.vec_id = codes.vec_id
-    JOIN qcell q ON q.cid = cell.cid AND codes.vec_id <> q.query_id
-    JOIN dtab t ON t.query_id = q.query_id AND t.m = codes.m AND t.code = codes.code
-    GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, rank, CAST(adcfx AS DOUBLE) / 1e12 AS adc_dist FROM (
-    SELECT query_id, neighbor_id, adcfx,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY adcfx, neighbor_id) AS rank
-    FROM adc
-)
-WHERE rank <= {TOP_K}
-"""
+    return _adc_top_k(pq_candidates(_emb(spark, sf_dir)))
 
 
 @query("knn_ivf_pq", _ivf_pq_oracle())
@@ -1179,39 +1115,6 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding a map-side partial SUM. Encoding and cell assignment are
     one-off broadcast-join passes, exactly the knn_ivf / knn_pq_adc
     plans they reuse."""
-    d = _with_norm(_emb(spark, sf_dir))
-    cent = _ivf_centroids(d)
-    cos_c = dot_cols(F.col("embedding"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm"))
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("cent_cos").desc(), F.col("cid"))
-    cell = (
-        d.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cos_c)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    codes, dtab = _pq_parts(_emb(spark, sf_dir))
-    qcell = cell.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("cid").alias("q_cid")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("adcfx").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        codes.join(cell, "vec_id")
-        .join(
-            F.broadcast(qcell),
-            (F.col("cid") == F.col("q_cid")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .join(F.broadcast(dtab), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dqfx").alias("adcfx"))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            (F.col("adcfx").cast("double") / F.lit(1e12)).alias("adc_dist"),
-        )
-    )
+    d = _corpus(spark, sf_dir)
+    cells = own_cell(ivf_assign(d))
+    return _adc_top_k(ivf_pq_candidates(d, cells, cells))

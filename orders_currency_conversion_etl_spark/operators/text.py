@@ -667,9 +667,16 @@ def tfidf_top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # more than the 5k-doc rescan) — at 100 TB, where the rescan is
     # corpus-scale, persist/write-then-read tf is the right call.
     idf = tf.groupBy("term").agg(F.count("source").alias("df"))
-    n_sources = _docs(spark, sf_dir).select("source").dropna().distinct().count()
-    scored = tf.join(idf, "term").withColumn(
-        "tfidf", F.col("tf") * F.log(F.try_divide(F.lit(float(n_sources)), F.col("df")))
+    # The source count stays in the plan: a one-row aggregate
+    # (countDistinct ignores NULL, as the oracle does) broadcast into
+    # every row, instead of a driver-side count() at build time.
+    ns = _docs(spark, sf_dir).agg(
+        F.countDistinct("source").cast("double").alias("n_sources")
+    )
+    scored = (
+        tf.join(idf, "term")
+        .crossJoin(F.broadcast(ns))
+        .withColumn("tfidf", F.col("tf") * F.log(F.try_divide(F.col("n_sources"), F.col("df"))))
     )
     from pyspark.sql import Window
 

@@ -342,8 +342,8 @@ def union_by_name_missing_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NTILE_ORACLE = """
 SELECT o_orderkey, o_orderstatus,
        CAST(o_totalprice AS DECIMAL(18,2)) AS totalprice,
-       NTILE(4) OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey) AS quartile,
-       CAST(PERCENT_RANK() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey) AS DECIMAL(18,8)) AS pct_rank
+       NTILE(4) OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice NULLS LAST, o_orderkey) AS quartile,
+       CAST(PERCENT_RANK() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice NULLS LAST, o_orderkey) AS DECIMAL(18,8)) AS pct_rank
 FROM orders
 """
 
@@ -351,8 +351,12 @@ FROM orders
 @query("window_ntile_percent_rank", _NTILE_ORACLE)
 def window_ntile_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 extension: quartile assignment + relative rank; ORDER BY
-    carries the unique orderkey tiebreak so output is deterministic."""
-    w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
+    carries the unique orderkey tiebreak so output is deterministic.
+    NULL prices sort last on both engines: Spark's ASC default is
+    NULLS FIRST and DuckDB's is NULLS LAST, so the order is named."""
+    w = Window.partitionBy("o_orderstatus").orderBy(
+        F.col("o_totalprice").asc_nulls_last(), "o_orderkey"
+    )
     o = _t(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -713,13 +717,17 @@ SELECT o_orderkey, o_orderstatus,
        NTH_VALUE(o_orderkey, 3) OVER (
            w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS third_key
 FROM orders
-WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
+WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice NULLS LAST, o_orderkey)
 """
 
 
 @query("window_cume_nth", _CUME_ORACLE)
 def window_cume_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
+    """cume_dist and nth_value over the price order, NULL prices last
+    on both engines (see window_ntile_percent_rank)."""
+    w = Window.partitionBy("o_orderstatus").orderBy(
+        F.col("o_totalprice").asc_nulls_last(), "o_orderkey"
+    )
     wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     o = _t(spark, sf_dir, "orders")
     return o.select(

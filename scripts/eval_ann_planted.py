@@ -9,7 +9,9 @@ radius, IVF nprobe, PQ subspaces x codewords, IVF-PQ combinations —
 recording measured recall@10 against the planted ground truth AND the
 measured fraction of the corpus scored per query (candidate counts
 from the actual joins, not estimates). Ground truth is verified by
-brute force before anything else is trusted.
+brute force before anything else is trusted. Every variant runs
+operators/similarity.py's search kernels, the same functions the
+registered knn_* queries call at their shipped constants.
 
 Target (stated up front, judged in tests/test_ann_recall.py):
 recall@10 >= 0.8 at <= 15% of the corpus scanned per query.
@@ -27,7 +29,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from orders_currency_conversion_etl_spark.operators import ann_bench as ab  # noqa: E402
+from orders_currency_conversion_etl_spark.operators import similarity as sim  # noqa: E402
 from orders_currency_conversion_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_EVAL_DIR", "/root/testdata/sf0.1")
@@ -54,10 +59,11 @@ def main() -> int:
 
     def run(label, variant, params, fn):
         t0 = time.perf_counter()
-        topk, cands = fn()
-        rec = ab.recall_at_k(topk, truth)
+        cand = fn()
+        score = "adcfx" if "m" in params else "cosine"
+        rec = ab.recall_at_k(sim.top_k(cand, score, ascending=score == "adcfx"), truth)
         sec = round(time.perf_counter() - t0, 3)
-        scan = round(ab.mean_scan_fraction(cands, n), 4)
+        scan = round(ab.mean_scan_fraction(cand, n), 4)
         row = {
             "variant": variant,
             "params": params,
@@ -78,7 +84,7 @@ def main() -> int:
     frontier = []
 
     # ground truth sanity: brute-force top-10 must equal the planted set
-    bt, bc = ab.brute_search(d, qids)
+    bt = sim.top_k(sim.brute_candidates(d, qids), "cosine", ascending=False)
     brute_rec = ab.recall_at_k(bt, truth)
     print(f"brute-force recall vs planted truth: {brute_rec:.4f} (must be 1.0)")
     assert brute_rec == 1.0, "planted ground truth disagrees with brute force"
@@ -100,19 +106,25 @@ def main() -> int:
                     f"lsh B={n_planes} r={radius}",
                     "lsh",
                     {"n_planes": n_planes, "probe_radius": radius},
-                    lambda n_planes=n_planes, radius=radius: ab.lsh_search(
-                        d, qids, n_planes=n_planes, probe_radius=radius
+                    lambda n_planes=n_planes, radius=radius: sim.lsh_candidates(
+                        d, n_planes, radius, qids
                     ),
                 )
             )
+
+    ranked = sim.ivf_assign(d)
+    cells = sim.own_cell(ranked)
+
+    def probed(nprobe):
+        return ranked.filter(F.col("rn") <= nprobe)
 
     for nprobe in (1, 2, 4, 8):
         frontier.append(
             run(
                 f"ivf nprobe={nprobe}",
                 "ivf",
-                {"nprobe": nprobe, "stride": 64},
-                lambda nprobe=nprobe: ab.ivf_search(d, qids, nprobe=nprobe),
+                {"nprobe": nprobe, "stride": sim.IVF_CENTROID_STRIDE},
+                lambda nprobe=nprobe: sim.ivf_candidates(cells, probed(nprobe), qids),
             )
         )
 
@@ -123,7 +135,7 @@ def main() -> int:
                     f"pq m={m} cw={cw}",
                     "pq_adc",
                     {"m": m, "codewords": cw},
-                    lambda m=m, cw=cw: ab.pq_search(e, qids, m=m, codewords=cw),
+                    lambda m=m, cw=cw: sim.pq_candidates(e, m, cw, qids),
                 )
             )
 
@@ -133,9 +145,14 @@ def main() -> int:
                 run(
                     f"ivf_pq nprobe={nprobe} m={m}",
                     "ivf_pq",
-                    {"nprobe": nprobe, "m": m, "codewords": 16, "stride": 64},
-                    lambda nprobe=nprobe, m=m: ab.ivf_pq_search(
-                        d, qids, nprobe=nprobe, m=m
+                    {
+                        "nprobe": nprobe,
+                        "m": m,
+                        "codewords": sim.PQ_CODEWORDS,
+                        "stride": sim.IVF_CENTROID_STRIDE,
+                    },
+                    lambda nprobe=nprobe, m=m: sim.ivf_pq_candidates(
+                        d, cells, probed(nprobe), m, query_ids=qids
                     ),
                 )
             )

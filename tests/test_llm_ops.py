@@ -341,10 +341,10 @@ def test_ivf_centroid_count_is_capped_at_scale(spark):
         )
 
     # stride = max(64, 65535 DIV 64 + 1) = 1024 -> only ids % 1024 == 0
-    assert sim._ivf_centroids(emb_df(65_536, 257)).count() <= 65
+    assert sim.ivf_centroids(emb_df(65_536, 257)).count() <= 65
     # below the knee the legacy stride applies unchanged (bit-compat):
     # ids 0, 64, ..., 448
-    assert sim._ivf_centroids(emb_df(500, 1)).count() == 8
+    assert sim.ivf_centroids(emb_df(500, 1)).count() == 8
 
 
 def test_semdedup_k_scales_with_corpus(tmp_path, spark):

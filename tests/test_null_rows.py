@@ -1,4 +1,4 @@
-"""NULL join keys and NULL JSON against the DuckDB oracle.
+"""NULL join keys, NULL JSON and NULL sort keys against the DuckDB oracle.
 
 The fixture scales carry no NULL, so these rows are added to an sf0.001
 copy of ``events``:
@@ -9,6 +9,12 @@ copy of ``events``:
 - a NULL ``props`` next to a ``props`` whose only key is ``k``, so an
   oracle that hard-codes the first map key disagrees with Spark, which
   returns NULL for a NULL map.
+
+and to a copy of ``orders``:
+
+- two orders with a NULL ``o_totalprice`` in one ``o_orderstatus``, so
+  a window that orders by the price without naming a NULL order ranks
+  them first on Spark and last on DuckDB.
 """
 
 from __future__ import annotations
@@ -35,12 +41,15 @@ NULL_EVENTS = [
     (900003, _T0, 1, None),
 ]
 
+#: o_orderkeys of the NULL-price orders (past the fixture's 0..1499)
+NULL_PRICE_ORDERS = (900001, 900002)
+
 
 @pytest.fixture(scope="module")
 def null_rows_sf(tmp_path_factory):
     d = tmp_path_factory.mktemp("null_rows")
     for name in TABLE_NAMES:
-        if name != "events":
+        if name not in ("events", "orders"):
             os.symlink(os.path.join(SF, f"{name}.parquet"), d / f"{name}.parquet")
     events = pq.read_table(os.path.join(SF, "events.parquet"))
     extra = pa.Table.from_pylist(
@@ -58,10 +67,28 @@ def null_rows_sf(tmp_path_factory):
         schema=events.schema,
     )
     pq.write_table(pa.concat_tables([events, extra]), d / "events.parquet")
+    orders = pq.read_table(os.path.join(SF, "orders.parquet"))
+    template = orders.slice(0, 1).to_pylist()[0]
+    no_price = pa.Table.from_pylist(
+        [
+            {**template, "o_orderkey": k, "o_orderstatus": "F", "o_totalprice": None}
+            for k in NULL_PRICE_ORDERS
+        ],
+        schema=orders.schema,
+    )
+    pq.write_table(pa.concat_tables([orders, no_price]), d / "orders.parquet")
     return str(d)
 
 
-@pytest.mark.parametrize("name", ["cohort_retention_weekly", "map_column_access"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cohort_retention_weekly",
+        "map_column_access",
+        "window_ntile_percent_rank",
+        "window_cume_nth",
+    ],
+)
 def test_null_keys_and_props_match_oracle(spark, null_rows_sf, name):
     compare_query(
         spark, null_rows_sf, registry.QUERIES[name], registry.finalized_oracles()[name]

@@ -52,7 +52,7 @@ EXPECTED: dict[str, tuple[int, int, int]] = {
     "curation_pipeline_lsh": (13, 15, 15),
     "sessionize_gap_summary": (0, 3, 3),
     "cohort_retention_weekly": (0, 4, 4),
-    "tfidf_top_terms_per_source": (3, 9, 9),
+    "tfidf_top_terms_per_source": (0, 9, 9),
     "pagerank_parts": (14, 15, 15),
 }
 
